@@ -1,34 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times the headline queries on
   * SPARK_GRAFT_SF_DIR (default sf0.1) and prints ONE JSON line.
   * Non-headline queries (including the deliberately O(n²) brute-force
   * baselines) are excluded — they exist for oracle verification, not
   * throughput. Each query runs one cold pass (JIT + parquet footer cache
-  * cold) then `WarmRuns` warm passes; the reported warm time is the
-  * MEDIAN of the warm passes — single-sample warm times on a shared box
-  * swung 9.97–48.85 s across identical trees. A failing query is never
+  * cold) then `SPARK_GRAFT_WARM_RUNS` (default 5) warm passes; the
+  * reported warm time is the MEDIAN of the warm passes — single-sample
+  * warm times on a shared box swung 9.97–48.85 s across identical trees. A failing query is never
   * summed (a -1 sentinel would make the bench *faster* the more queries
   * break): it is reported by name under "failed" and excluded from every
   * total. */
 object Bench {
-  /** 5 warm passes (was 3 through round 7): same-binary runs on a shared
-    * box differed by ±20% in total, swamping the regression signal. With 5
-    * samples we report the median plus a per-query coefficient of variation
-    * so a delta can be adjudicated as real only when it exceeds the
-    * measured run-to-run noise. */
-  val WarmRuns: Int = {
-    // Dev-only override for expensive scale probes (e.g. the sf10 graph
-    // point, where one warm pass runs minutes); the driver never sets it,
-    // so round benches always use the full 5-sample protocol. The JSON's
-    // `warm_runs` field records what a given artifact actually used.
-    val n = sys.env.get("SPARK_GRAFT_WARM_RUNS").map(_.toInt).getOrElse(5)
-    require(n >= 1, s"SPARK_GRAFT_WARM_RUNS must be >= 1, got $n")
-    n
-  }
-
   /** Expensive iterative/ML families promoted into the benched set in
     * round 7 so a perf regression there is visible: graph traversal
     * (cheapest path, temporal BFS, k-core), the BPE training loop,
@@ -43,134 +26,36 @@ object Bench {
     "q158_auc", "q183_quantile_norm", "q281_repetition_filters")
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // per-pass System.gc() below already keeps the cleaner fed; a 2min
+    val conf = GraftConf.current
+    val sfDir = conf.sfDir
+    // 5 warm passes by default (3 through round 7): same-binary totals on
+    // a shared box differed by ±20%, so the bench reports the median plus
+    // a per-query cv, and a delta counts only when it exceeds that noise.
+    // The JSON's `warm_runs` records what an artifact actually used.
+    val warmRuns = conf.warmRuns
+    val headline = conf.benchOnlyQueries
+      .getOrElse(Queries.all.filter(q => q.headline || Promoted(q.name)))
+    // per-pass System.gc() already keeps the cleaner fed; a 2min
     // periodic GC would land mid-pass and stall the measurement
-    val spark = GraftSession.local(
-      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), app = "graft-bench",
-      periodicGC = "10h")
-    // dev-only subset filter (comma-separated names, ANY registry query
-    // — not just the benched set); the driver never sets it, so round
-    // benches always cover the full benched set
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").toSet)
-    // a typo'd name must fail loudly — a silently-empty bench run would
-    // write a green-looking BENCH.json that masks the regression it was
-    // meant to measure
-    only.foreach { names =>
-      val unknown = names -- Queries.all.map(_.name).toSet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY has unknown query name(s): ${unknown.mkString(",")}")
-    }
-    val headline = only match {
-      case Some(names) => Queries.all.filter(q => names.contains(q.name))
-      case None => Queries.all.filter(q => q.headline || Promoted(q.name))
-    }
-    // SPARK_GRAFT_PRETOUCH=table1,table2 | all — stream-read the named
-    // tables' parquet files byte-by-byte (untimed) BEFORE the cold pass,
-    // so pass 1 of a cold-layout run measures the ENGINE cold path, not
-    // the OS page cache filling at disk speed. The steady-state rule for
-    // iterative sf10 queries (q227/q214): pre-touch the edge tables,
-    // then quote median-of-warm with cv — without this the isolated
-    // q227 sf10 set carried a 2–3× pass spread (108–330 s) whose first
-    // passes were page-cache warmup, not plan behavior (SCALE.md r10).
-    sys.env.get("SPARK_GRAFT_PRETOUCH").foreach { spec =>
-      val tables =
-        // File.list() returns null for a missing/non-directory path — a
-        // typo'd SPARK_GRAFT_SF_DIR must not NPE before the bench's JSON
-        // line (the read below would fail loudly anyway; warn and skip)
-        if (spec == "all") {
-          val ls = Option(new java.io.File(sfDir).list()).getOrElse {
-            System.err.println(s"[bench] pretouch: $sfDir is not a readable directory — skipping")
-            Array.empty[String]
-          }
-          ls.toSeq.filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet"))
-        } else spec.split(",").toSeq
-      val buf = new Array[Byte](1 << 20)
-      var bytes = 0L
-      for (t <- tables) {
-        val root = java.nio.file.Paths.get(sfDir, s"$t.parquet")
-        if (java.nio.file.Files.exists(root)) {
-          val it = java.nio.file.Files.walk(root).iterator()
-          while (it.hasNext) {
-            val p = it.next()
-            if (java.nio.file.Files.isRegularFile(p)) {
-              val in = java.nio.file.Files.newInputStream(p)
-              try { var n = 0
-                while ({ n = in.read(buf); n >= 0 }) bytes += n
-              } finally in.close()
-            }
-          }
-        }
-      }
-      System.err.println(s"[bench] pretouched ${bytes / (1 << 20)} MiB ($spec)")
-    }
-    def time(q: Q): Option[Double] = {
-      val t0 = System.nanoTime()
-      val r = try { q.run(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
-              catch { case e: Throwable =>
-                System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}"); None }
-      graft.operators.Ckpt.release(spark) // checkpoint blocks must not leak across passes
-      // Outside the timed region: let ContextCleaner reclaim this pass's
-      // shuffle/broadcast state NOW instead of when the big driver heap
-      // finally GCs. Without it, later passes time the accumulated debris
-      // of earlier ones (measured at sf10: pass 6 of identical q22 ran
-      // 4× pass 1; with per-pass GC all passes are flat) — exactly the
-      // cross-pass contamination a median-of-warm protocol must not have.
-      System.gc()
-      // per-pass visibility for adjudicating a high-CV query (dev knob);
-      // printed AFTER release+GC so heapUsedMiB/cachedBlocks show the
-      // steady-state floor — the flat-memory evidence for the blocking
-      // Ckpt.release contract (a leak shows as a monotone heap ramp here)
-      if (sys.env.contains("SPARK_GRAFT_BENCH_VERBOSE")) {
-        val rt = Runtime.getRuntime
-        val used = (rt.totalMemory - rt.freeMemory) >> 20
-        // BlockManagerMaster-side truth (ADVICE r11): getRDDStorageInfo
-        // enumerates persistentRdds, which unpersist clears synchronously
-        // even when block removal is still in flight — it reads 0 in the
-        // exact async-lag failure mode this line exists to evidence.
-        val sc = spark.sparkContext
-        val blocks = org.apache.spark.graftbridge.BlockBridge.rddBlocks(sc).size
-        val storMiB = org.apache.spark.graftbridge.BlockBridge.storageMemoryUsed(sc) >> 20
-        System.err.println(f"[bench] pass ${q.name} ${r.getOrElse(-1.0)}%.2f s " +
-          s"heapUsedMiB=$used cachedBlocks=$blocks storageUsedMiB=$storMiB")
-      }
-      r
-    }
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    }
+    val spark = GraftSession.local(app = "graft-bench", periodicGC = "10h")
+    def time(q: Q): Option[Double] =
+      Harness.timed(spark, "bench", q.name)(q.run(spark, sfDir).count())
     val results = headline.map { q =>
       val cold = time(q)
-      val warms = if (cold.isEmpty) Nil else (1 to WarmRuns).flatMap(_ => time(q))
+      val warms = if (cold.isEmpty) Nil else (1 to warmRuns).flatMap(_ => time(q))
       (q.name, cold, warms)
     }
-    val failed = results.collect { case (n, c, w) if c.isEmpty || w.size < WarmRuns => n }
-    val warm = results.collect { case (n, _, w) if w.size == WarmRuns => n -> median(w) }
-    val cold = results.collect { case (n, Some(c), w) if w.size == WarmRuns => n -> c }
-    // coefficient of variation (stddev/mean) of the warm passes — the
-    // run-to-run noise floor a round-over-round delta must clear to be real
-    def cvOf(xs: Seq[Double]): Double = {
-      val m = xs.sum / xs.size
-      if (m == 0.0) 0.0
-      else math.sqrt(xs.map(x => (x - m) * (x - m)).sum / xs.size) / m
-    }
-    val cv = results.collect { case (n, _, w) if w.size == WarmRuns => n -> cvOf(w) }
-    def toJson(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val total = warm.map(_._2).sum
-    val coldTotal = cold.map(_._2).sum
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${toJson(warm)},"cv":${toJson(cv)},"cold_total":$coldTotal,"cold_queries":${toJson(cold)},"failed":$failedJson,"warm_runs":$WarmRuns,"sf":"$sfDir"}"""
-    // The driver parses stdout, but sbt interleaves [info]/log noise — also
-    // write the line to a file so the result is machine-readable either way.
-    val outPath = args.headOption.orElse(sys.env.get("SPARK_GRAFT_BENCH_OUT"))
-      .getOrElse("BENCH.json")
-    java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    println(json)
+    val failed = results.collect { case (n, c, w) if c.isEmpty || w.size < warmRuns => n }
+    val ok = results.collect { case (n, Some(c), w) if w.size == warmRuns => (n, c, w) }
+    val warm = ok.map { case (n, _, w) => n -> Harness.median(w) }
+    val cold = ok.map { case (n, c, _) => n -> c }
+    val cv = ok.map { case (n, _, w) => n -> Harness.cv(w) }
+    import Harness.Obj
+    Harness.emit(args.headOption.orElse(conf.benchOut).getOrElse("BENCH.json"), Obj(
+      "metric" -> "total", "value" -> warm.map(_._2).sum, "unit" -> "sec",
+      "queries" -> Obj(warm: _*), "cv" -> Obj(cv: _*),
+      "cold_total" -> cold.map(_._2).sum, "cold_queries" -> Obj(cold: _*),
+      "failed" -> failed, "warm_runs" -> warmRuns, "sf" -> sfDir))
     spark.stop()
   }
 }

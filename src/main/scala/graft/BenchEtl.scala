@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions._
   * report wall seconds against the reference's 136.1 s. */
 object BenchEtl {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(
-      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), app = "graft-bench-etl")
+    val spark = GraftSession.local(app = "graft-bench-etl")
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_etl_bench").toString
 
@@ -65,7 +64,9 @@ object BenchEtl {
     val report = Pipeline.run(spark, new ParquetSource(s"$dir/in"), s"$dir/out")
     val secs = (System.nanoTime() - t0) / 1e9
     val rows = report.counts.values.map(_._2).sum
-    println(f"""{"metric":"etl_e2e","value":$secs%.3f,"unit":"sec","rows":$rows,"baseline_sec":136.1,"speedup":${136.1 / secs}%.1f}""")
+    println(Harness.json(Harness.Obj("metric" -> "etl_e2e", "value" -> math.rint(secs * 1e3) / 1e3,
+      "unit" -> "sec", "rows" -> rows, "baseline_sec" -> 136.1,
+      "speedup" -> math.rint(1361.0 / secs) / 10)))
     spark.stop()
   }
 }

@@ -53,38 +53,21 @@ object BenchWide {
     "q22_minhash_lsh")
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = GraftConf.current.sfDir
     val outFile = if (args.nonEmpty) args(0) else "BENCHWIDE.json"
     val (shardIdx, numShards) =
       if (args.length >= 3) (args(1).toInt, args(2).toInt) else (0, 1)
     require(numShards >= 1 && shardIdx >= 0 && shardIdx < numShards,
       s"shard $shardIdx of $numShards is not a valid slice")
-    // per-query System.gc() below already keeps the cleaner fed; a 2min
+    // per-query System.gc() already keeps the cleaner fed; a 2min
     // periodic GC would land mid-query and stall the measurement
-    val spark = GraftSession.local(
-      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), app = "graft-benchwide",
-      periodicGC = "10h")
+    val spark = GraftSession.local(app = "graft-benchwide", periodicGC = "10h")
 
-    def timed(q: Q): Option[Double] = {
-      val t0 = System.nanoTime()
-      val r = try { q.run(spark, sfDir).count()
-                    Some(math.rint((System.nanoTime() - t0) / 1e6) / 1e3) }
-              catch { case e: Throwable =>
-                System.err.println(s"[benchwide] ${q.name} failed: ${e.getMessage}")
-                None }
-      // free localCheckpoint blocks between queries — 280+ plans in one
-      // session would otherwise accumulate storage until eviction noise
-      // pollutes the timings — and GC so ContextCleaner reclaims each
-      // query's shuffle/broadcast state before the next one is timed
-      // (see Bench: un-collected driver heap degrades later passes 4×)
-      graft.operators.Ckpt.release(spark)
-      System.gc()
-      r
-    }
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    }
+    // 280+ plans share one session: the per-query release + GC keeps each
+    // query's checkpoint blocks and shuffle state out of the next timing
+    def timed(q: Q): Option[Double] =
+      Harness.timed(spark, "benchwide", q.name)(q.run(spark, sfDir).count())
+        .map(s => math.rint(s * 1e3) / 1e3)
     // The probe list is load-bearing for round-over-round drift
     // comparability: a renamed/removed query silently shrinking the
     // estimator would bias every future diff (ADVICE r12) — fail loudly
@@ -100,7 +83,7 @@ object BenchWide {
         Queries.all.find(_.name == n).flatMap { q =>
           timed(q)
           val warms = (1 to 3).flatMap(_ => timed(q))
-          if (warms.size == 3) Some(q.name -> median(warms)) else None
+          if (warms.size == 3) Some(q.name -> Harness.median(warms)) else None
         }
       }
 
@@ -114,27 +97,18 @@ object BenchWide {
     val slice = sorted.slice(lo.toInt, hi.toInt)
 
     val probeBefore = probe()
-    val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-    for (q <- slice)
-      timed(q) match {
-        case Some(s) => results(q.name) = s
-        case None => failed += q.name
-      }
+    val timings = slice.map(q => q.name -> timed(q))
+    val results = timings.collect { case (n, Some(s)) => n -> s }
     val probeAfter = probe()
 
-    val total = math.rint(results.values.sum * 1000) / 1000
-    def obj(rs: Seq[(String, Double)]): String =
-      rs.map { case (n, s) => s""""$n":$s""" }.mkString("{", ",", "}")
-    val json = new StringBuilder
-    json ++= s"""{"metric":"wide_cold_total_sec","value":$total,"unit":"sec","sf":"$sfDir","n_queries":${results.size}"""
-    json ++= s""","shard":$shardIdx,"n_shards":$numShards"""
-    json ++= s""","failed":[${failed.map("\"" + _ + "\"").mkString(",")}]"""
-    json ++= s""","probe_before":${obj(probeBefore)},"probe_after":${obj(probeAfter)}"""
-    json ++= s""","queries":${obj(results.toSeq)}}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-      json.toString.getBytes("UTF-8"))
-    println(json.toString)
+    import Harness.Obj
+    Harness.emit(outFile, Obj(
+      "metric" -> "wide_cold_total_sec", "value" -> math.rint(results.map(_._2).sum * 1000) / 1000,
+      "unit" -> "sec", "sf" -> sfDir, "n_queries" -> results.size,
+      "shard" -> shardIdx, "n_shards" -> numShards,
+      "failed" -> timings.collect { case (n, None) => n },
+      "probe_before" -> Obj(probeBefore: _*), "probe_after" -> Obj(probeAfter: _*),
+      "queries" -> Obj(results: _*)))
     spark.stop()
   }
 }

@@ -1,14 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
-/** Dev tool: print formatted physical plans for named queries. */
+/** Dev tool: print formatted physical plans for named queries, on the
+  * dataset in `SPARK_GRAFT_SF_DIR` and through the same session factory
+  * (extensions, rules, config) that Bench and Verify use. */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions","8").config("spark.ui.enabled","false").getOrCreate()
+    val spark = GraftSession.local(app = "graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     for (name <- args) {
       println(s"===== $name =====")
-      Queries.byName(name).run(spark, "/root/testdata/sf0.01").explain("formatted")
+      Queries.byName(name).run(spark, GraftConf.current.sfDir).explain("formatted")
     }
     spark.stop()
   }

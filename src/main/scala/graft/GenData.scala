@@ -300,8 +300,7 @@ object GenData {
   def main(args: Array[String]): Unit = {
     val out = args(0)
     val sf = args(1).toDouble
-    val spark = GraftSession.local(
-      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), app = "graft-gen")
+    val spark = GraftSession.local(app = "graft-gen")
     import spark.implicits._
 
     // `zipf-docs [vocab]` mode: write ONLY documents.parquet, with the

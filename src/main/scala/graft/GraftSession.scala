@@ -5,29 +5,24 @@ import org.apache.spark.sql.SparkSession
 /** Session factory with the engine's tuned defaults: AQE (runtime
   * re-planning, skew-join splitting, partition coalescing), shuffle
   * partitions sized to cores (not 200), UTC, UI off, and the native
-  * function extensions registered. All driver-contract mains build
-  * through here. */
+  * function extensions registered. Every local session in the engine
+  * builds through here. */
 object GraftSession {
+  /** The session's shuffle-partition default: `= cores`, overridable by
+    * `SPARK_GRAFT_SHUFFLE_PARTITIONS` (see the comment in [[local]] for
+    * why). Extracted so a spec pins the rule: an accidental default flip
+    * must fail CI, not surface as a 3× funnel regression at scale. */
+  private[graft] def shufflePartitions(cores: String): String =
+    GraftConf.current.shufflePartitions.fold(cores)(_.toString)
+
   /** `periodicGC`: ContextCleaner driver-GC cadence. The 2min default
     * keeps shuffle/broadcast state draining on long-running drivers
-    * (see the config comment below). Harness mains that already force a
-    * GC between every timed pass (Bench/BenchWide) pass a long interval
-    * instead: a periodic full GC landing MID-pass on a 24–48 g heap is
-    * a multi-second STW stall that polluted the very measurements the
-    * cleaner hygiene was meant to protect (q214 sf3: median 31.9 s
-    * cv 0.25 with 2min, 16.7 s cv 0.17 with the periodic GC pushed out). */
-  /** The session's shuffle-partition default: `= cores`, env-overridable.
-    * ADJUDICATED, not arbitrary — raising it regresses the
-    * checkpoint-heavy funnel family (re-proven round 13 on the current
-    * binary: q119 sf10 min-of-legs warm 68.0 s at 32 vs 238.1 s at 128,
-    * SCALE_r13 `q119_partitions_ab`), while the graph family wants 128
-    * via the env knob (SCALE_r12 `q227_partitions_ab_48g`). Extracted so
-    * the spec pins the rule — an accidental default flip must fail CI,
-    * not surface as a 3× funnel regression at the next scale run. */
-  private[graft] def shufflePartitions(cores: String): String =
-    sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cores)
-
-  def local(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"),
+    * (see the config comment below). Harness mains, which already force
+    * a GC between timed passes, pass a long interval instead: a
+    * periodic full GC landing MID-pass on a 24–48 g heap is a
+    * multi-second STW stall (q214 sf3: median 31.9 s cv 0.25 with 2min,
+    * 16.7 s cv 0.17 with the periodic GC pushed out). */
+  def local(cores: String = GraftConf.current.cpus.toString,
             app: String = "graft",
             periodicGC: String = "2min"): SparkSession = {
     val spark = SparkSession.builder()
@@ -36,30 +31,22 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", shufflePartitions(cores))
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // Experiment knob only. The partition default stays `= cores`
-      // because raising it regresses the CHECKPOINT-HEAVY funnel family,
-      // re-proven on the current binary (round 13, VERDICT r12 #4,
-      // SCALE_r13 q119_partitions_ab): q119 sf10 at 48 g, 3 interleaved
-      // fresh-JVM legs per config, min-of-legs — 32 partitions warm
-      // 68.0 s vs 110.2 s at 8× INITIAL partitions (the original r8
-      // regression config) vs 238.1 s at 128 SHUFFLE partitions, whose
-      // warm MIN (238.1 s) exceeded even its own cold min (110.0 s) —
-      // the min-of-legs arbiter carries the verdict (warm ≥ cold held
-      // in 2/3 P128 legs, not 3/3 as a previous revision of this
-      // comment overstated). Mechanism unchanged: localCheckpoint
-      // materializes every initial partition as a block, AQE cannot
-      // coalesce across the checkpoint boundary, and the extra task +
-      // block churn compounds across repeated passes. The GRAPH family
-      // is the exception — its 11 GiB-scale edge checkpoints want
+      // The partition default stays `= cores` because raising it
+      // regresses the CHECKPOINT-HEAVY funnel family, re-proven on the
+      // current binary (round 13, SCALE_r13 q119_partitions_ab): q119
+      // sf10 at 48 g, 3 interleaved fresh-JVM legs per config,
+      // min-of-legs — 32 partitions warm 68.0 s vs 110.2 s at 8× initial
+      // partitions vs 238.1 s at 128 shuffle partitions. Mechanism:
+      // localCheckpoint materializes every initial partition as a block,
+      // AQE cannot coalesce across the checkpoint boundary, and the extra
+      // task + block churn compounds across repeated passes. The GRAPH
+      // family is the exception — its 11 GiB-scale edge checkpoints want
       // smaller tasks (SPARK_GRAFT_SHUFFLE_PARTITIONS=128: 24 g fit +
       // −17.8 % warm, SCALE_r12 q227_partitions_ab_48g) — so the 128
       // rule stays scoped to graph-family invocations, never the
-      // session default. Probe via SPARK_GRAFT_INITIAL_PARTITIONS /
-      // SPARK_GRAFT_SHUFFLE_PARTITIONS; tools/ab_partitions.sh is the
-      // interleaved A/B harness.
+      // session default.
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS",
-          shufflePartitions(cores)))
+        shufflePartitions(cores))
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // ContextCleaner only reclaims shuffle files, broadcasts, and
       // accumulator state when the DRIVER GCs their references — and a
@@ -71,8 +58,7 @@ object GraftSession {
       // this — periodic driver GC — but its 30 min default is longer
       // than most of our runs. 2 min keeps the cleaner draining on any
       // long-running driver, cluster or local.
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", periodicGC))
+      .config("spark.cleaner.periodicGC.interval", periodicGC)
       // Reliable-checkpoint mode (SPARK_GRAFT_CKPT_DIR, see Ckpt): let
       // the ContextCleaner delete checkpoint FILES once their RDDs are
       // GC'd, so a long-running driver's durable checkpoint dir drains

@@ -1,5 +1,7 @@
 package graft
 
+import graft.Harness.Obj
+
 /** Dev probe: a repeated-expensive-expression census over EVERY registry
   * query's physical plan. Round 9 found band-key consumers evaluating
   * the MinHash signature 32× per row because higher-order-function
@@ -22,78 +24,64 @@ package graft
   * repeats). A marker count says "this plan evaluates the marked
   * expression N times SOMEWHERE" — across different columns or plan
   * stages that's legitimate, so the output is an adjudication worklist,
-  * not a pass/fail: entries at or above `--flag` (default 8, a quarter
-  * of the 32× defect) deserve a look.
+  * not a pass/fail: entries at or above [[FlagAt]] (8, a quarter of the
+  * 32× defect) deserve a look.
   *
   * Usage: `runMain graft.PlanCensus [sfDir [outFile]]`. Writes one JSON
   * object: per-query nonzero marker counts, the flagged subset, and the
   * per-marker corpus maxima. */
 object PlanCensus {
-  private val Markers: Seq[String] = Seq(
+  private[graft] val Markers: Seq[String] = Seq(
     "graft_minhash", "graft_hash60", "graft_dotq", "graft_jaro_winkler",
     "graft_wordpiece", "graft_dhash", "md5(", "lambdafunction(")
 
-  private def count(hay: String, needle: String): Int = {
+  /** Marker count at which a plan is flagged for a look. */
+  private[graft] val FlagAt = 8
+
+  private[graft] def count(hay: String, needle: String): Int = {
     var n = 0; var i = hay.indexOf(needle)
     while (i >= 0) { n += 1; i = hay.indexOf(needle, i + needle.length) }
     n
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
+    val sfDir = args.headOption.getOrElse(s"${GraftConf.DataRoot}/sf0.001")
     val outFile = if (args.length > 1) args(1) else "PLANCENSUS.json"
-    val flagAt = sys.env.getOrElse("SPARK_GRAFT_CENSUS_FLAG", "8").toInt
-    val spark = GraftSession.local(
-      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
-      app = "graft-plan-census", periodicGC = "10h")
+    val spark = GraftSession.local(app = "graft-plan-census", periodicGC = "10h")
     val rows = scala.collection.mutable.LinkedHashMap.empty[String, Seq[(String, Int)]]
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     // SPARK_GRAFT_CENSUS_DUMP=<dir>: write each flagged query's raw plan
     // text there, for offline duplicate-call adjudication (identical
     // full-call substrings inside one node line = definite recompute;
     // distinct args across calls = legitimate breadth).
-    val dumpDir = sys.env.get("SPARK_GRAFT_CENSUS_DUMP")
+    val dumpDir = GraftConf.current.censusDump
     dumpDir.foreach(d => java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))
     for (q <- Queries.all.sortBy(_.name)) {
-      try {
+      val built = Harness.timed(spark, "census", q.name) {
         val plan = q.run(spark, sfDir).queryExecution.executedPlan.toString()
         val counts = Markers.map(m => m -> count(plan, m)).filter(_._2 > 0)
         if (counts.nonEmpty) rows(q.name) = counts
-        // flagAt <= 0 dumps every plan (for sweeps that look for
-        // marker-less shapes, e.g. isnotnull-of-a-big-derivation)
-        if (flagAt <= 0 || counts.exists(_._2 >= flagAt)) dumpDir.foreach { d =>
+        if (counts.exists(_._2 >= FlagAt)) dumpDir.foreach { d =>
           java.nio.file.Files.write(
             java.nio.file.Paths.get(d, s"${q.name}.plan.txt"),
             plan.getBytes("UTF-8"))
         }
-      } catch { case e: Throwable =>
-        System.err.println(s"[census] ${q.name} failed: ${e.getMessage}")
-        failed += q.name
       }
-      graft.operators.Ckpt.release(spark)
-      System.gc()
+      if (built.isEmpty) failed += q.name
     }
-    val flagged = rows.collect {
-      case (n, cs) if cs.exists(_._2 >= flagAt) => n -> cs.filter(_._2 >= flagAt)
-    }
-    val maxima = Markers.map { m =>
+    val maxima = Markers.flatMap { m =>
       val hits = rows.toSeq.flatMap { case (n, cs) =>
         cs.collectFirst { case (`m`, c) => (n, c) } }
-      m -> hits.sortBy(-_._2).headOption
+      hits.sortBy(-_._2).headOption.map { case (n, c) => m -> Obj("query" -> n, "count" -> c) }
     }
-    def entry(cs: Seq[(String, Int)]): String =
-      cs.map { case (m, c) => s""""$m":$c""" }.mkString("{", ",", "}")
-    val json = new StringBuilder
-    json ++= s"""{"metric":"plan_expr_census","sf":"$sfDir","flag_at":$flagAt"""
-    json ++= s""","n_queries":${Queries.all.size},"n_with_markers":${rows.size}"""
-    json ++= s""","failed":[${failed.map("\"" + _ + "\"").mkString(",")}]"""
-    json ++= s""","flagged":{${flagged.map { case (n, cs) => s""""$n":${entry(cs)}""" }.mkString(",")}}"""
-    json ++= s""","marker_max":{${maxima.collect {
-      case (m, Some((n, c))) => s""""$m":{"query":"$n","count":$c}""" }.mkString(",")}}"""
-    json ++= s""","queries":{${rows.map { case (n, cs) => s""""$n":${entry(cs)}""" }.mkString(",")}}}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-      json.toString.getBytes("UTF-8"))
-    println(json.toString)
+    val flagged = rows.toSeq.collect {
+      case (n, cs) if cs.exists(_._2 >= FlagAt) => n -> Obj(cs.filter(_._2 >= FlagAt): _*)
+    }
+    Harness.emit(outFile, Obj(
+      "metric" -> "plan_expr_census", "sf" -> sfDir, "flag_at" -> FlagAt,
+      "n_queries" -> Queries.all.size, "n_with_markers" -> rows.size, "failed" -> failed,
+      "flagged" -> Obj(flagged: _*), "marker_max" -> Obj(maxima: _*),
+      "queries" -> Obj(rows.toSeq.map { case (n, cs) => n -> Obj(cs: _*) }: _*)))
     spark.stop()
   }
 }

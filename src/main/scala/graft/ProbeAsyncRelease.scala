@@ -24,9 +24,7 @@ import org.apache.spark.graftbridge.BlockBridge
 object ProbeAsyncRelease {
   def main(args: Array[String]): Unit = {
     val cycles = if (args.nonEmpty) args(0).toInt else 200
-    val spark = GraftSession.local(
-      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"),
-      app = "graft-probe-async-release", periodicGC = "10h")
+    val spark = GraftSession.local(app = "graft-probe-async-release", periodicGC = "10h")
     import spark.implicits._
     val sc = spark.sparkContext
     val blocking = operators.Ckpt.isBlockingRelease

@@ -19,10 +19,8 @@ object ProbeJobs {
     require(args.nonEmpty, "usage: ProbeJobs <name1,name2,...> [passes]")
     val names = args(0).split(",").toSeq
     val passes = if (args.length > 1) args(1).toInt else 3
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.local(
-      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
-      app = "graft-probe-jobs", periodicGC = "10h")
+    val sfDir = GraftConf.current.sfDir
+    val spark = GraftSession.local(app = "graft-probe-jobs", periodicGC = "10h")
 
     case class St(var name: String = "", var ms: Long = 0, var tasks: Int = 0,
                   var input: Long = 0, var sr: Long = 0, var sw: Long = 0,
@@ -53,14 +51,11 @@ object ProbeJobs {
     for (name <- names; p <- 1 to passes) {
       val q = Queries.byName(name)
       jobs.synchronized(jobs.clear()); stages.synchronized(stages.clear())
-      val t0 = System.nanoTime()
-      val n = q.run(spark, sfDir).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      graft.operators.Ckpt.release(spark)
-      System.gc()
+      var n = 0L
+      val sec = Harness.timed(spark, "probejobs", name) { n = q.run(spark, sfDir).count() }
       // listener bus is async — drain before reading the maps
       org.apache.spark.graftbridge.BlockBridge.drainListenerBus(spark.sparkContext)
-      println(f"== pass $p: $name total $sec%.3f s (rows=$n) ==")
+      println(f"== pass $p: $name total ${sec.getOrElse(Double.NaN)}%.3f s (rows=$n) ==")
       jobs.synchronized {
         jobs.toSeq.sortBy(_._1).foreach { case (id, j) =>
           val dur = (j.end - j.start) / 1000.0

@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Dev probe (args: embDir [anchorMod] — repeatable dir list like
-  * [[ProbeIvf]]): banded sign-LSH recall vs exact-cosine truth, BINNED
-  * BY COSINE, for the SCALE ladder runs that verify the declared recall
-  * contract ([[operators.Similarity.RecallFloor]] at
+/** Dev probe (args: embDir [anchorMod], repeatable): banded sign-LSH
+  * recall vs exact-cosine truth, BINNED BY COSINE, for the SCALE ladder
+  * runs that verify the declared recall contract
+  * ([[operators.Similarity.RecallFloor]] at
   * [[operators.Similarity.RecallTargetCos]]) holds at every rung of the
   * adaptive key ladder — q298 carries the contract in the oracle gate at
   * small n; this probe carries it to corpus sizes where the full O(n²)
@@ -26,9 +26,7 @@ import org.apache.spark.sql.functions._
   */
 object ProbeRecall {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(
-      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
-      app = "graft-probe-recall", periodicGC = "10h")
+    val spark = GraftSession.local(app = "graft-probe-recall", periodicGC = "10h")
     val threshold = 0.2
     val binEdges = Seq(0.2, 0.3, 0.5, 0.7, 0.8, 0.9)
     // args come as dir [anchorMod] pairs: a bare dir means full truth

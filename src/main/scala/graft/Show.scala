@@ -4,13 +4,11 @@ package graft
 object Show {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val spark = GraftSession.local(cores = "8", app = "graft-show")
+    val spark = GraftSession.local(app = "graft-show")
     for (name <- args.tail) {
       println(s"===== $name @ $sfDir =====")
-      val t0 = System.nanoTime()
-      Queries.byName(name).run(spark, sfDir).show(200, truncate = false)
-      println(f"  [${(System.nanoTime() - t0) / 1e9}%.2f s]")
-      graft.operators.Ckpt.release(spark) // same lifecycle as Verify/Bench
+      Harness.timed(spark, "show", name)(Queries.byName(name).run(spark, sfDir).show(200, truncate = false))
+        .foreach(sec => println(f"  [$sec%.2f s]"))
     }
     spark.stop()
   }

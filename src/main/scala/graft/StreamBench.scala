@@ -35,10 +35,9 @@ import graft.streaming.Streams
   * unaffected). */
 object StreamBench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.local(
-      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
-      app = "graft-streambench")
+    val conf = GraftConf.current
+    val sfDir = conf.sfDir
+    val spark = GraftSession.local(app = "graft-streambench")
     val stage = java.nio.file.Files.createTempDirectory("graft_sb").toString
 
     // Stage the events table as 16 ascending time slices so the file
@@ -53,18 +52,9 @@ object StreamBench {
     def fileStream: DataFrame = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$stage/events")
 
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.isEmpty) 0.0
-      else if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    }
-
     val stagedRows = spark.read.parquet(s"$stage/events").count()
 
-    val only: Set[String] = sys.env.get("SPARK_GRAFT_STREAM_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty)
+    val only = conf.streamOnly
     val knownPipelines = Set("sessionize", "dedup", "maintain_merge",
       "maintain_count_sum", "attribution_join", "heavy_hitters",
       "dd_quantiles", "lsh_tag")
@@ -79,7 +69,7 @@ object StreamBench {
     // from doc_id (one second apart — the same convention as the
     // StreamsSpec batch-twin test), making the watermark advance
     // slice-over-slice like a live ingest feed's.
-    val docsDir = sys.env.getOrElse("SPARK_GRAFT_DOCS_DIR", sfDir)
+    val docsDir = conf.docsDir.getOrElse(sfDir)
     if (enabled("lsh_tag")) Queries.tbl(spark, docsDir, "documents")
       .select(col("doc_id"),
         timestamp_millis(lit(1700000000000L) + col("doc_id") * 1000L).as("ts"),
@@ -135,7 +125,7 @@ object StreamBench {
         .maxOption.getOrElse(0L)
       val rows = feedRows
       (name, rows, if (wallSec > 0) rows / wallSec else 0.0,
-        median(lat), prog.size, maxState)
+        Harness.median(lat), prog.size, maxState)
     }
 
     val session = run("sessionize")(measure("sessionize") { in =>
@@ -216,16 +206,13 @@ object StreamBench {
     })
 
     val all = Seq(session, dedup, merge, ivm, attr, hh, ddq, lsh).flatten
-    val qjson = all.map { case (n, rows, rps, med, b, st) =>
-      s""""$n":{"rows":$rows,"rows_per_sec":${math.round(rps)},"median_batch_ms":$med,"batches":$b,"max_state_rows":$st}"""
-    }.mkString("{", ",", "}")
-    val json =
-      s"""{"metric":"stream_total","unit":"rows_per_sec","queries":$qjson,"slices":16,"sf":"$sfDir","docs":"$docsDir"}"""
-    val outPath = args.headOption.orElse(sys.env.get("SPARK_GRAFT_STREAMBENCH_OUT"))
-      .getOrElse("STREAMBENCH.json")
-    java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    println(json)
+    import Harness.Obj
+    Harness.emit(args.headOption.orElse(conf.streambenchOut).getOrElse("STREAMBENCH.json"), Obj(
+      "metric" -> "stream_total", "unit" -> "rows_per_sec",
+      "queries" -> Obj(all.map { case (n, rows, rps, med, b, st) =>
+        n -> Obj("rows" -> rows, "rows_per_sec" -> math.round(rps), "median_batch_ms" -> med,
+          "batches" -> b, "max_state_rows" -> st) }: _*),
+      "slices" -> 16, "sf" -> sfDir, "docs" -> docsDir))
     spark.stop()
   }
 }

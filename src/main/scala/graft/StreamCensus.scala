@@ -22,21 +22,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * counting the same expensive-expression markers as [[PlanCensus]]
   * (native codegen exprs, md5 base hashes, lambdafunction bodies).
   * Output: STREAMCENSUS.json with per-pipeline marker counts and a
-  * flagged list (count >= flag threshold, default 8 — a quarter of the
+  * flagged list (count >= [[PlanCensus.FlagAt]], a quarter of the
   * round-9 32× defect). Like PlanCensus, a nonzero count is a worklist
   * entry, not a failure: `bands` band keys legitimately reference the
   * aliased signature array `bands` times at the SLOT level but must
   * evaluate graft_minhash ONCE — the marker counts the evaluations. */
 object StreamCensus {
-  private val Markers: Seq[String] = Seq(
-    "graft_minhash", "graft_hash60", "graft_dotq", "graft_jaro_winkler",
-    "graft_wordpiece", "graft_dhash", "md5(", "lambdafunction(")
-
-  private def count(hay: String, needle: String): Int = {
-    var n = 0; var i = hay.indexOf(needle)
-    while (i >= 0) { n += 1; i = hay.indexOf(needle, i + needle.length) }
-    n
-  }
+  import PlanCensus.{Markers, count}
 
   /** One pipeline's census row: marker→count for the stream-side plan,
     * marker→max-single-plan-count over the batch-side (foreachBatch)
@@ -195,23 +187,16 @@ object StreamCensus {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
+    val sfDir = args.headOption.getOrElse(s"${GraftConf.DataRoot}/sf0.001")
     val outFile = if (args.length > 1) args(1) else "STREAMCENSUS.json"
-    val flagAt = sys.env.getOrElse("SPARK_GRAFT_CENSUS_FLAG", "8").toInt
-    val spark = GraftSession.local(
-      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
-      app = "graft-stream-census", periodicGC = "10h")
-    val res = sweep(spark, sfDir, sys.env.get("SPARK_GRAFT_CENSUS_DUMP"))
-    def fmt(cs: Seq[(String, Int)]) =
-      cs.map { case (m, c) => s""""$m":$c""" }.mkString("{", ",", "}")
-    val rows = res.map(r =>
-      s""""${r.name}":{"stream":${fmt(r.stream)},"batch_max":${fmt(r.batchMax)},"n_batch_plans":${r.nBatchPlans}}""")
-    val flagged = res.filter(_.maxCount >= flagAt).map(_.name)
-    val json = "{\"pipelines\":{" + rows.mkString(",") +
-      s"""},"flag_at":$flagAt,"flagged":[${flagged.map("\"" + _ + "\"").mkString(",")}],"sf":"$sfDir"}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    println(json)
+    val spark = GraftSession.local(app = "graft-stream-census", periodicGC = "10h")
+    val res = sweep(spark, sfDir, GraftConf.current.censusDump)
+    import Harness.Obj
+    Harness.emit(outFile, Obj(
+      "pipelines" -> Obj(res.map(r => r.name -> Obj("stream" -> Obj(r.stream: _*),
+        "batch_max" -> Obj(r.batchMax: _*), "n_batch_plans" -> r.nBatchPlans)): _*),
+      "flag_at" -> PlanCensus.FlagAt,
+      "flagged" -> res.filter(_.maxCount >= PlanCensus.FlagAt).map(_.name), "sf" -> sfDir))
     spark.stop()
   }
 }

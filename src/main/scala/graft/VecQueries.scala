@@ -225,15 +225,8 @@ object VecQueries {
     * different widths. Loud on stderr: a stray inherited env var must
     * never silently re-key a production run. */
   private[graft] val ForcedKeyBits: Option[Int] = {
-    // ADVICE r13: parse with toIntOption so a malformed value fails with
-    // the same loud, named-knob message as an out-of-range one — not a
-    // NumberFormatException buried in ExceptionInInitializerError.
-    val v = sys.env.get("SPARK_GRAFT_LSH_KEY_BITS").map(s =>
-      s.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
-        s"SPARK_GRAFT_LSH_KEY_BITS must be an integer in [4, 15], got '$s'")))
+    val v = GraftConf.current.lshKeyBits
     v.foreach { w =>
-      require(w >= 4 && w <= 15,
-        s"SPARK_GRAFT_LSH_KEY_BITS must be in [4, 15], got $w")
       System.err.println(
         s"[graft] LSH band-key width FORCED: keyBits=$w " +
           "(SPARK_GRAFT_LSH_KEY_BITS; harness-only knob — production " +

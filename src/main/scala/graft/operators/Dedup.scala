@@ -51,13 +51,13 @@ object Dedup {
     * init: queries and oracle SQL are built in the same JVM, so the two
     * can never see different values. */
   val DefaultMaxBucket: Int = {
-    val v = sys.env.getOrElse("SPARK_GRAFT_LSH_MAX_BUCKET", "100000").toInt
+    val v = graft.GraftConf.current.lshMaxBucket
     // A stray inherited env var would silently lower the cap for every
     // LSH operator AND every oracle CTE in a run — shed results would
     // look like normal output. Make a non-default cap loud in the run's
     // stderr artifacts (class init is the only safe place: the value is
     // read exactly once, before any query or oracle is built).
-    if (v != 100000)
+    if (v != graft.GraftConf.DefaultLshMaxBucket)
       System.err.println(
         s"[graft] LSH bucket cap OVERRIDDEN: DefaultMaxBucket=$v " +
           "(SPARK_GRAFT_LSH_MAX_BUCKET; harness-only knob — production runs " +

@@ -270,9 +270,10 @@ object Pipeline {
     * [--limite=N] [--config=<file>] [--tables=a,b]`. */
   def main(args: Array[String]): Unit = {
     val cfg = Config.fromArgs(args.toIndexedSeq)
+    val conf = graft.GraftConf.current
     val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+      .master(conf.master.getOrElse(s"local[${conf.cpus}]"))
+      .config("spark.sql.shuffle.partitions", conf.cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

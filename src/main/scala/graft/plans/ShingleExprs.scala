@@ -105,18 +105,21 @@ case class Hash60MapExpr(child: Expression, mod: Long)
   override def prettyName: String = "graft_hash60_map"
 
   override def nullSafeEval(input: Any): Any =
-    Hash60MapExpr.map(input.asInstanceOf[ArrayData], mod)
+    Hash60MapExpr.hashEach(input.asInstanceOf[ArrayData], mod)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.Hash60MapExpr.map($c, ${mod}L)")
+    defineCodeGen(ctx, ev, c => s"graft.plans.Hash60MapExpr.hashEach($c, ${mod}L)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 object Hash60MapExpr {
-  /** See [[Hash60MapExpr]]. Called from codegen. */
-  def map(arr: ArrayData, mod: Long): ArrayData = {
+  /** See [[Hash60MapExpr]]. Called from codegen through the companion's
+    * static forwarder, so the name must not clash with an inherited
+    * `Expression`/`TreeNode` member such as `map`: Scala emits no
+    * forwarder for a clashing name (NativeCodegenSpec catches that). */
+  def hashEach(arr: ArrayData, mod: Long): ArrayData = {
     val n = arr.numElements()
     val out = new Array[Any](n)
     var i = 0

@@ -32,14 +32,6 @@ object BlockBridge {
   def rddBlocksFor(sc: SparkContext, rddIds: Set[Int]): Seq[RDDBlockId] =
     rddBlocks(sc).filter(b => rddIds.contains(b.rddId))
 
-  /** Storage memory in use across all block managers (max − remaining),
-    * in bytes — the flat-memory evidence stream for the blocking-release
-    * contract that heap-used alone can't carry (heap also holds
-    * execution and GC-garbage). */
-  def storageMemoryUsed(sc: SparkContext): Long =
-    sc.env.blockManager.master.getMemoryStatus.values
-      .map { case (max, remaining) => max - remaining }.sum
-
   /** Drain the async listener bus — lets a measurement listener
     * ([[graft.ProbeJobs]]) read complete job/stage records right after an
     * action returns, instead of racing event delivery. Dev-probe only. */

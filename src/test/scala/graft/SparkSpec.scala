@@ -12,6 +12,9 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // a native expression whose generated code does not compile must
+      // fail the suite, not silently run interpreted
+      .config("spark.sql.codegen.fallback", "false")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
       .getOrCreate()

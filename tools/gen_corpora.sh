@@ -10,7 +10,7 @@
 #               corpus (shipped 30-word vocab makes candidates ~n^2).
 #   boiler      documents with 5% planted 30-word license-prefix docs
 #               (zipf-docs 100000 0.05 0) — the cap-fire corpus
-#               (ProbeCap: shed vs per-class recall).
+#               (cap-fire runs: shed vs per-class recall).
 #   clustered   embeddings from a k=50 power-law gaussian mixture,
 #               sigma=0.35, label = TRUE cluster
 #               (clustered-embs 50 0.35) — the IVF/sign-ladder corpus.
@@ -18,7 +18,8 @@
 # GenData is a pure function of (table, row id): the same <sf> always
 # regenerates byte-identical values (GenDataSpec pins the modes), so
 # deleting /tmp/graft-* and re-running this script reproduces every
-# ProbeLsh/ProbeCap/ProbeIvf number.
+# corpus SCALE.md measured (the one-shot ProbeLsh/ProbeCap/ProbeIvf mains
+# that took those numbers are in git history up to f829172).
 #
 # Usage: tools/gen_corpora.sh <sf> [outRoot]      (default outRoot /tmp)
 #   e.g. tools/gen_corpora.sh 0.1    -> /tmp/graft-{zipflang,boiler,clustered}-sf0.1
