@@ -4,9 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** Session factory with the engine's tuned defaults: AQE (runtime
   * re-planning, skew-join splitting, partition coalescing), shuffle
-  * partitions sized to cores (not 200), UTC, UI off, and the native
-  * function extensions registered. Every local session in the engine
-  * builds through here. */
+  * partitions sized to cores (not 200), UTC, UI off, a codegen cache that
+  * holds a pass's working set ([[ReuseConf]]), and the native function
+  * extensions registered. Every session in the engine builds through
+  * here. */
 object GraftSession {
   /** The session's shuffle-partition default: `= cores`, overridable by
     * `SPARK_GRAFT_SHUFFLE_PARTITIONS` (see the comment in [[local]] for
@@ -15,19 +16,52 @@ object GraftSession {
   private[graft] def shufflePartitions(cores: String): String =
     GraftConf.current.shufflePartitions.fold(cores)(_.toString)
 
+  /** Settings that let warm passes reuse what does not depend on the
+    * data. [[local]] applies them and the test session applies the same
+    * ones: both the codegen cache and the status store are one per JVM,
+    * and the cache reads its size once, on first use.
+    *
+    * `spark.sql.codegen.cache.maxEntries` (Spark's default 100): the LRU
+    * of compiled generated classes must hold a pass's whole working set,
+    * or every warm pass evicts classes before their next use and
+    * recompiles them (Janino, 5–50 ms each). Working sets measured as
+    * distinct classes compiled in one pass on a 4-core box: the
+    * graftbench `etl` pass 154 (at 100, each warm pass recompiled about
+    * 110), its `queries` pass 122, and the 31 headline queries of
+    * `graft.Bench` at sf0.1 622 together (60 at most for one query). 1000
+    * covers the headline set with ~60 % headroom. A cached class keeps
+    * about 80 KB of heap (Janino keeps the bytecode), so the cache costs
+    * what a workload really compiles: ~12 MB for `etl`, 80 MB at most.
+    *
+    * The status store's retention (Spark's defaults: 1000 SQL executions,
+    * jobs and stages each) pays for that heap: the UI is off and nothing
+    * in the engine reads `statusStore`/`statusTracker`, yet Spark keeps
+    * the store, and every finished execution keeps its plan description
+    * there until the count is reached. Running jobs, stages and
+    * executions are kept whatever the bound. */
+  val ReuseConf: Map[String, String] = Map(
+    "spark.sql.codegen.cache.maxEntries" -> "1000",
+    "spark.sql.ui.retainedExecutions" -> "20",
+    "spark.ui.retainedJobs" -> "20",
+    "spark.ui.retainedStages" -> "20")
+
   /** `periodicGC`: ContextCleaner driver-GC cadence. The 2min default
     * keeps shuffle/broadcast state draining on long-running drivers
     * (see the config comment below). Harness mains, which already force
     * a GC between timed passes, pass a long interval instead: a
     * periodic full GC landing MID-pass on a 24–48 g heap is a
     * multi-second STW stall (q214 sf3: median 31.9 s cv 0.25 with 2min,
-    * 16.7 s cv 0.17 with the periodic GC pushed out). */
+    * 16.7 s cv 0.17 with the periodic GC pushed out).
+    * `master`: the cluster master; `None` runs in-process on
+    * `local[cores]`. */
   def local(cores: String = GraftConf.current.cpus.toString,
             app: String = "graft",
-            periodicGC: String = "2min"): SparkSession = {
+            periodicGC: String = "2min",
+            master: Option[String] = None): SparkSession = {
     val spark = SparkSession.builder()
       .appName(app)
-      .master(s"local[$cores]")
+      .master(master.getOrElse(s"local[$cores]"))
+      .config(ReuseConf)
       .config("spark.sql.shuffle.partitions", shufflePartitions(cores))
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

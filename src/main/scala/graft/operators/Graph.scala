@@ -26,16 +26,17 @@ object Graph {
     * edge-build scan was ~1.5 s of q215's ~4 s warm pass). Extra columns
     * (e.g. a weight) ride along via `carry`. Same row multiset, so every
     * downstream dedup/groupBy/join and the oracle see identical edges.
-    *
-    * PRECONDITION (ADVICE r14): columns `a` and `b` must share one type —
-    * `array(struct(a, b), struct(b, a))` fails analysis on mixed endpoint
-    * types, where the old union spelling would have coerced. Cast both
-    * endpoints to a common type before calling. */
+    * Endpoints of different types are cast to their common type (the one
+    * the old union spelling coerced to), since `array(struct(a, b),
+    * struct(b, a))` alone fails analysis on mixed types. */
   def symmetrized(pairs: DataFrame, a: String, b: String,
                   carry: Seq[String] = Nil): DataFrame = {
-    val fwd = struct((col(a).as("src") +: col(b).as("dst") +:
+    val Seq(ta, tb) = Seq(a, b).map(pairs.schema(_).dataType)
+    val common = if (ta == tb) ta else pairs.select(coalesce(col(a), col(b))).schema.head.dataType
+    val Seq(ea, eb) = Seq(a -> ta, b -> tb).map { case (c, t) => if (t == common) col(c) else col(c).cast(common) }
+    val fwd = struct((ea.as("src") +: eb.as("dst") +:
       carry.map(col)): _*)
-    val rev = struct((col(b).as("src") +: col(a).as("dst") +:
+    val rev = struct((eb.as("src") +: ea.as("dst") +:
       carry.map(col)): _*)
     pairs.select(explode(array(fwd, rev)).as("e")).select("e.*")
   }

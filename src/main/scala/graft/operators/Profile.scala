@@ -150,16 +150,26 @@ object Profile {
       date_format(max(col(ts)), "yyyy-MM-dd HH:mm:ss").as("ts_max"))
 
   /** D8: shape/dtype info (nb cell 5). The pandas original reports RAM;
-    * the distributed analogue is partition count + scan-size estimate. */
+    * the distributed analogue is partition count + scan-size estimate.
+    * Lazy like every section: the row and partition counts come from one
+    * aggregate in the returned plan, and the scan-size estimate is the
+    * optimizer's (no job). `n_partitions` counts the partitions that hold
+    * rows when that aggregate runs: `df.rdd.getNumPartitions` without its
+    * empty partitions, and 1 for a driver-side local frame, which the
+    * optimizer evaluates in one piece. */
   def tableInfo(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
     val dtypeCounts = df.schema.fields.groupBy(_.dataType.simpleString)
       .map { case (t, fs) => s"$t:${fs.length}" }.toSeq.sorted.mkString(",")
-    Seq((df.count(), df.columns.length.toLong, dtypeCounts,
-      df.rdd.getNumPartitions.toLong,
-      df.queryExecution.optimizedPlan.stats.sizeInBytes.toLong))
-      .toDF("n_rows", "n_cols", "dtype_counts", "n_partitions", "est_bytes")
+    df.select(spark_partition_id().as("__p"))
+      .agg(
+        count(lit(1)).as("n_rows"),
+        size(collect_set(col("__p"))).cast("long").as("n_partitions"))
+      .select(
+        col("n_rows"),
+        lit(df.columns.length.toLong).as("n_cols"),
+        lit(dtypeCounts).as("dtype_counts"),
+        col("n_partitions"),
+        lit(df.queryExecution.optimizedPlan.stats.sizeInBytes.toLong).as("est_bytes"))
   }
 
   /** A12: worst-null columns — completeness profile filtered to columns

@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, MapType, StringType, StructField, StructType}
 import java.nio.file.{Files, Paths}
 
 /** Sources and sinks for the ETL lifecycle (extraccion.py / carga.py), on
@@ -52,7 +53,7 @@ final class OrcSource(dir: String) extends Source {
   * `schema` for production reads — inference scans the data once more
   * and types drift with content; the default infers for ad-hoc use. */
 final class CsvSource(dir: String,
-                      schema: Option[org.apache.spark.sql.types.StructType] = None)
+                      schema: Option[StructType] = None)
     extends Source {
   def load(spark: SparkSession, name: String): DataFrame = {
     val p = s"$dir/$name.csv"
@@ -105,21 +106,31 @@ object Sinks {
   /** S5 sink rule (carga.py:34-47): drop Mongo `_id`, stringify every
     * string column with nulls becoming the literal 'nan' (the pandas
     * astype(str) quirk, SURVEY §1.3(3)) — kept byte-parity-compatible. */
-  def sinkForm(df: DataFrame): DataFrame = {
-    val dropped = if (df.columns.contains("_id")) df.drop("_id") else df
-    dropped.schema.fields.foldLeft(dropped) { (d, f) =>
-      if (f.dataType == org.apache.spark.sql.types.StringType)
-        d.withColumn(f.name, coalesce(col(f.name), lit("nan")))
-      else d
-    }
+  def sinkForm(df: DataFrame): DataFrame =
+    df.select(df.schema.fields.toSeq.filter(_.name != "_id").map { f =>
+      val c = Transforms.column(f.name)
+      if (f.dataType == StringType) coalesce(c, lit("nan")).as(f.name) else c
+    }: _*)
+
+  /** `df` with its row count observed, and a function that returns the
+    * count once an action over the result has run: the count comes with
+    * that action's own job, not a second one. Observed metrics arrive
+    * with write commands too. */
+  private[pipeline] def observeRows(df: DataFrame): (DataFrame, () => Long) = {
+    val obs = Observation()
+    (df.observe(obs, count(lit(1)).as("rows")), () => obs.get("rows").asInstanceOf[Long])
   }
 
-  /** Primary sink: parquet per table, `raw_<name>_transformado` naming
-    * (carga.py:50-52). Returns the written path. */
-  def parquet(df: DataFrame, outDir: String, name: String): String = {
-    val path = s"$outDir/raw_${name}_transformado"
-    sinkForm(df).write.mode("overwrite").parquet(path)
-    path
+  /** Where [[parquet]] writes table `name`: `raw_<name>_transformado`
+    * (carga.py:50-52). */
+  def parquetPath(outDir: String, name: String): String = s"$outDir/raw_${name}_transformado"
+
+  /** Primary sink: parquet per table, at [[parquetPath]]. Returns the
+    * rows written, counted by the write job itself. */
+  def parquet(df: DataFrame, outDir: String, name: String): Long = {
+    val (observed, rows) = observeRows(sinkForm(df))
+    observed.write.mode("overwrite").parquet(parquetPath(outDir, name))
+    rows()
   }
 
   /** CSV sink — the DISTRIBUTED sibling of the reference's Excel export
@@ -127,21 +138,18 @@ object Sinks {
     * row limit). Complex columns (arrays/structs) are JSON-stringified
     * — the CSV writer rejects them raw, and the reference stringifies
     * every object column at its sink anyway. Writes a JSON 'Resumen'
-    * aside (rows, cols, timestamp — carga.py:75-83's summary sheet). */
+    * aside (rows, cols, timestamp — carga.py:75-83's summary sheet); its
+    * row count is the CSV write's own. */
   def csv(df: DataFrame, outDir: String, name: String): String = {
     val path = s"$outDir/csv_$name"
-    val flat = sinkForm(df).schema.fields.foldLeft(sinkForm(df)) { (d, f) =>
-      f.dataType match {
-        case _: org.apache.spark.sql.types.ArrayType |
-             _: org.apache.spark.sql.types.StructType |
-             _: org.apache.spark.sql.types.MapType =>
-          d.withColumn(f.name, to_json(col(f.name)))
-        case _ => d
-      }
-    }
-    flat.write.mode("overwrite").option("header", "true").csv(path)
+    val sf = sinkForm(df)
+    val flat = Transforms.project(sf, sf.schema.fields.toSeq.collect {
+      case StructField(n, _: ArrayType | _: StructType | _: MapType, _, _) => n -> to_json(Transforms.column(n))
+    })
+    val (observed, rows) = observeRows(flat)
+    observed.write.mode("overwrite").option("header", "true").csv(path)
     val resumen =
-      s"""{"registros":${df.count()},"columnas":${df.columns.length},"generado":"${java.time.Instant.now()}"}"""
+      s"""{"registros":${rows()},"columnas":${df.columns.length},"generado":"${java.time.Instant.now()}"}"""
     Files.writeString(Paths.get(s"$outDir/csv_${name}_resumen.json"), resumen)
     path
   }
@@ -198,7 +206,7 @@ object Sinks {
   /** S7 verification (carga.py:95-121): read every sink back, count. */
   def verify(spark: SparkSession, outDir: String, names: Seq[String]): Map[String, Long] =
     names.map { n =>
-      n -> spark.read.parquet(s"$outDir/raw_${n}_transformado").count()
+      n -> spark.read.parquet(parquetPath(outDir, n)).count()
     }.toMap
 }
 
@@ -254,10 +262,12 @@ object Pipeline {
     val extracted = source.loadAll(spark, names).filter(_._2.columns.nonEmpty)
       // S1's find().limit(n): Spark pushes the limit into the scan
       .map { case (n, df) => n -> limit.map(df.limit).getOrElse(df) }
-    val transformed = Transforms.all(extracted)
+    // both counts ride the sink's write job as observed metrics
+    val observed = extracted.map { case (n, df) => n -> Sinks.observeRows(df) }
+    val transformed = Transforms.all(observed.map { case (n, (df, _)) => n -> df })
     val counts = transformed.map { case (n, df) =>
-      Sinks.parquet(df, outDir, n)
-      n -> (extracted(n).count(), df.count())
+      val loaded = Sinks.parquet(df, outDir, n)
+      n -> (observed(n)._2(), loaded)
     }
     val verified = Sinks.verify(spark, outDir, transformed.keys.toSeq)
     val report = Report(counts, verified, outDir)
@@ -270,14 +280,8 @@ object Pipeline {
     * [--limite=N] [--config=<file>] [--tables=a,b]`. */
   def main(args: Array[String]): Unit = {
     val cfg = Config.fromArgs(args.toIndexedSeq)
-    val conf = graft.GraftConf.current
-    val spark = SparkSession.builder()
-      .master(conf.master.getOrElse(s"local[${conf.cpus}]"))
-      .config("spark.sql.shuffle.partitions", conf.cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(app = "graft-pipeline",
+      master = graft.GraftConf.current.master)
     val report = run(spark, new ParquetSource(cfg.inDir), cfg.outDir, cfg.tables, cfg.limit)
     println(report.toJson)
     spark.stop()

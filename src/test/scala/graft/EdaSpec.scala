@@ -50,6 +50,30 @@ class EdaSpec extends SparkSpec {
     assert(math.abs(wn(0).getAs[Double]("null_pct") - 66.67) < 0.01)
   }
 
+  test("building the quality section starts no job; its info row is unchanged") {
+    val df = spark.range(0, 9, 1, 3)
+      .select(col("id").cast("int").as("x"), when(col("id") % 3 === 0, "a").as("y"))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val q = try {
+      org.apache.spark.graftbridge.BlockBridge.drainListenerBus(spark.sparkContext)
+      jobs.set(0)
+      val built = Eda.quality(df, Seq("x", "y"))
+      org.apache.spark.graftbridge.BlockBridge.drainListenerBus(spark.sparkContext)
+      assert(jobs.get == 0, s"building Eda.quality started ${jobs.get} job(s)")
+      built
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // what the eager version reported: df.count(), the column count, the
+    // dtype census, df.rdd.getNumPartitions and the optimizer's estimate
+    val info = q("info").collect()(0)
+    assert(info.toSeq == Seq(9L, 2L, "int:1,string:1", df.rdd.getNumPartitions.toLong,
+      df.queryExecution.optimizedPlan.stats.sizeInBytes.toLong))
+  }
+
   test("pipeline Config parses file + CLI precedence and limit applies") {
     val f = java.nio.file.Files.createTempFile("graft_cfg", ".conf")
     java.nio.file.Files.writeString(f, "in=/from/file\nlimite=5\n# comment\n")

@@ -93,4 +93,13 @@ class GraphSpec extends SparkSpec {
     assert(!plan.contains("Cartesian"))
     graft.operators.Ckpt.release(spark)
   }
+
+  test("symmetrized casts an int and a long endpoint to their common type") {
+    val pairs = Seq((1, 2L, 5L), (3, 4L, 7L)).toDF("a", "b", "w")
+    val edges = Graph.symmetrized(pairs, "a", "b", Seq("w"))
+    assert(edges.schema("src").dataType == org.apache.spark.sql.types.LongType)
+    assert(edges.schema("dst").dataType == org.apache.spark.sql.types.LongType)
+    assert(edges.as[(Long, Long, Long)].collect().toSet ==
+      Set((1L, 2L, 5L), (2L, 1L, 5L), (3L, 4L, 7L), (4L, 3L, 7L)))
+  }
 }

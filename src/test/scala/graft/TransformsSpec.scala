@@ -1,6 +1,7 @@
 package graft
 
-import graft.pipeline.{ParquetSource, Pipeline, Sinks, Transforms}
+import graft.functions.CleanFns
+import graft.pipeline.{Eda, ParquetSource, Pipeline, Sinks, Transforms}
 import org.apache.spark.sql.functions._
 
 /** End-to-end fixture tests for the ETL pipeline (FIXTURES.md §1-2 edge
@@ -108,5 +109,58 @@ class TransformsSpec extends SparkSpec {
     // sink stringify rule: null string col → literal 'nan' (§1.3(3))
     val sunk = spark.read.parquet(s"$dir/out/raw_reviews_transformado")
     assert(sunk.filter($"id" === 59456981L).collect()(0).getAs[String]("reviewer_name") == "nan")
+  }
+
+  test("csv sink: the Resumen's registros is the frame's row count") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_csv").toString
+    val t = Transforms.listings(listingsRaw)
+    Sinks.csv(t, dir, "listings")
+    val resumen = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(s"$dir/csv_listings_resumen.json"))
+    assert(resumen.contains(s"\"registros\":${t.count()},"), resumen)
+    assert(resumen.contains(s"\"columnas\":${t.columns.length},"), resumen)
+    val back = spark.read.option("header", "true").csv(s"$dir/csv_listings")
+    assert(back.count() == 3L)
+    // the array column went out as JSON text
+    assert(back.filter($"id" === "44616").select("amenities_procesados").head().getString(0) == "[]")
+  }
+
+  test("transforms keep the withColumn-fold column order") {
+    val t = Transforms.listings(listingsRaw)
+    assert(t.columns.toSeq == listingsRaw.columns.toSeq ++ Seq(
+      "price_clean", "host_since_clean", "categoria_precio", "amenities_procesados") ++
+      CleanFns.DefaultAmenities.map(a => s"amenity_${a.toLowerCase.replace(' ', '_')}") ++
+      Seq("room_type_normalizado", "property_type_normalizado", "host_is_superhost_bin",
+        "beds_clean", "name_clean"))
+    val r = Transforms.reviews(reviewsRaw)
+    assert(r.columns.toSeq == reviewsRaw.columns.toSeq ++ Seq("date_clean", "año", "mes", "dia",
+      "trimestre", "dia_semana", "nombre_mes", "comments_clean", "comments_length",
+      "sentiment_score", "reviewer_name_clean"))
+    // a column the input already has keeps its place
+    val again = Transforms.listings(Transforms.listings(listingsRaw))
+    assert(again.columns.toSeq == Transforms.listings(listingsRaw).columns.toSeq)
+    assert(Sinks.sinkForm(t.withColumn("_id", lit(1))).columns.toSeq == t.columns.toSeq)
+  }
+
+  test("a warm pass of the ETL and its notebook sections compiles no class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val dir = java.nio.file.Files.createTempDirectory("graft_warm").toString
+    listingsRaw.withColumn("neighbourhood_cleansed", lit("Roma"))
+      .write.mode("overwrite").parquet(s"$dir/in/listings.parquet")
+    reviewsRaw.write.mode("overwrite").parquet(s"$dir/in/reviews.parquet")
+    def pass(i: Int): Unit = {
+      val out = s"$dir/out$i"
+      Pipeline.run(spark, new ParquetSource(s"$dir/in"), out)
+      val Seq(l, r) = Seq("listings", "reviews").map(t => spark.read.parquet(Sinks.parquetPath(out, t)).cache())
+      val sections = Eda.quality(l, Seq("price", "beds", "name")) ++ Eda.listings(l) ++
+        Eda.reviews(r) + ("correlations" -> Eda.correlations(l, "price_clean", Seq("beds_clean")))
+      sections.values.foreach(_.collect())
+      Seq(l, r).foreach(_.unpersist(blocking = true))
+    }
+    pass(1)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    pass(2)
+    val recompiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
+    assert(recompiled == 0, s"the warm pass recompiled $recompiled generated classes")
   }
 }
