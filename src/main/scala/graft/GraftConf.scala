@@ -16,7 +16,6 @@ final case class GraftConf(
     benchOnly: Option[Set[String]],
     warmRuns: Int,
     ckptDir: Option[String],
-    ckptAsyncRelease: Boolean,
     lshKeyBits: Option[Int],
     lshMaxBucket: Int,
     censusDump: Option[String],
@@ -69,7 +68,6 @@ object GraftConf {
       benchOnly = names("BENCH_ONLY"),
       warmRuns = positive("WARM_RUNS").getOrElse(5),
       ckptDir = get("CKPT_DIR"),
-      ckptAsyncRelease = get("CKPT_ASYNC_RELEASE").contains("1"),
       lshKeyBits = int("LSH_KEY_BITS").map { w =>
         require(w >= 4 && w <= 15, s"SPARK_GRAFT_LSH_KEY_BITS must be in [4, 15], got $w"); w
       },

@@ -124,7 +124,8 @@ object GraftSession {
         qe.observedMetrics.foreach { case (name, row) =>
           if (name.endsWith("_cap") && row.getAs[Long]("rows_in_dropped_buckets") > 0L)
             log.warn(s"$name: dropped ${row.getAs[Long]("rows_in_dropped_buckets")} rows " +
-              s"in over-cap buckets (largest bucket ${row.getAs[Long]("max_bucket")})")
+              s"in ${row.getAs[Long]("buckets_dropped")} over-cap buckets " +
+              s"(largest bucket ${row.getAs[Long]("max_bucket")})")
         }
       override def onFailure(funcName: String,
                              qe: org.apache.spark.sql.execution.QueryExecution,

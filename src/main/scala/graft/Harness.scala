@@ -3,6 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import graft.operators.Ckpt
 import org.apache.spark.sql.SparkSession
 
 /** What the measuring mains share: one timed pass with the between-pass
@@ -11,18 +12,20 @@ object Harness {
   /** Times `action` and returns its wall seconds, or None when it throws
     * (logged as `[tag] name failed: ...`; a failure is never a time, or a
     * broken query would make a total faster). Then, outside the timed
-    * region, the between-pass hygiene: release the pass's checkpoint
-    * blocks so they cannot leak into the next pass, and GC so the
+    * region, the between-pass hygiene: the pass runs in a [[Ckpt.scope]],
+    * which releases its checkpoint blocks so they cannot leak into the
+    * next pass, and a GC so the
     * ContextCleaner reclaims the pass's shuffle and broadcast state now,
     * not whenever the driver heap next collects. Without the GC, later
     * passes time the debris of earlier ones (at sf10, pass 6 of identical
     * q22 ran 4× pass 1; with a GC per pass all passes are flat). */
   def timed(spark: SparkSession, tag: String, name: String)(action: => Any): Option[Double] = {
-    val t0 = System.nanoTime()
-    val r = try { action; Some((System.nanoTime() - t0) / 1e9) }
-            catch { case e: Throwable =>
-              System.err.println(s"[$tag] $name failed: ${e.getMessage}"); None }
-    operators.Ckpt.release(spark)
+    val r = Ckpt.scope(spark) {
+      val t0 = System.nanoTime()
+      try { action; Some((System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable =>
+        System.err.println(s"[$tag] $name failed: ${e.getMessage}"); None }
+    }
     System.gc()
     r
   }

@@ -35,7 +35,7 @@ object ProbeRecall {
         acc.init :+ (acc.last._1 -> a.toLong)
       case (acc, d) => acc :+ (d -> 1L)
     }
-    for ((dir, anchorMod) <- specs) {
+    for ((dir, anchorMod) <- specs) operators.Ckpt.scope(spark) {
       val emb = Queries.tbl(spark, dir, "embeddings")
       val n = emb.count()
       val w = VecQueries.lshKeyBits(n)
@@ -79,7 +79,6 @@ object ProbeRecall {
           if (totT == 0) "null" else f"${totH.toDouble / totT}%.4f"},""" +
         s""""floor":${operators.Similarity.RecallFloor},""" +
         s""""target_cos":${operators.Similarity.RecallTargetCos},"bins":$bins}""")
-      operators.Ckpt.release(spark)
     }
     spark.stop()
   }

@@ -19,14 +19,14 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      // each query owns its checkpoint blocks, freed before the next one —
+      // 50+ queries in one session would otherwise accumulate storage
+      try graft.operators.Ckpt.scope(spark) {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // free this query's localCheckpoint blocks before the next one —
-      // 50+ queries in one session would otherwise accumulate storage
-      graft.operators.Ckpt.release(spark)
     }
     val oracle = SparkEntry.oracleSql.toSeq.filter { case (k, _) => only.forall(_.contains(k)) }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), Harness.json(Harness.Obj(oracle: _*)))

@@ -52,8 +52,7 @@ object Bpe {
     * (a, b, weighted pair count) in merge order. */
   def train(words: DataFrame, wordCol: String, freqCol: String, k: Int)
       : (DataFrame, Seq[(String, String, Long)]) = {
-    val spark = words.sparkSession
-    var (seg, ids) = Ckpt.localScoped(words.select(
+    var seg = Ckpt.local(words.select(
       col(wordCol).as("w"), col(freqCol).cast("long").as("freq"),
       charSyms(col(wordCol)).as("syms")))
     val merges = Seq.newBuilder[(String, String, Long)]
@@ -70,11 +69,11 @@ object Bpe {
       else {
         val Array(a, b) = top(0).getString(0).split(" ", 2)
         merges += ((a, b, top(0).getLong(1)))
-        val (next, nids) = Ckpt.localScoped(
+        val next = Ckpt.local(
           seg.withColumn("syms", applyMerge(col("syms"), a, b)))
         next.count()                                   // materialize before releasing parent
-        Ckpt.releaseIds(spark, ids)
-        seg = next; ids = nids
+        Ckpt.free(seg)
+        seg = next
       }
       r += 1
     }

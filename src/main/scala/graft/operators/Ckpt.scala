@@ -1,68 +1,62 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
 
-/** Lifecycle registry for `localCheckpoint` intermediates — or, with
-  * `SPARK_GRAFT_CKPT_DIR` set, the switchover to RELIABLE checkpoints on
-  * durable storage (the cluster fault-tolerance mode; see [[reliableDir]]).
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
+
+/** Checkpoint barriers and their owners — or, with `SPARK_GRAFT_CKPT_DIR`
+  * set, RELIABLE checkpoints on durable storage (the cluster
+  * fault-tolerance mode; see [[reliableDir]]).
   *
-  * `Dataset.localCheckpoint(eager = false)` registers its backing RDD with
-  * the block manager immediately but nothing ever unpersists it — repeated
-  * operator invocations in one session accumulate checkpoint blocks until
-  * eviction churn (the `Block rdd_N already exists` warnings seen
-  * mid-bench). Every checkpoint in the library goes through [[local]] /
-  * [[localScoped]], which record the persisted RDD ids; entry points call
-  * [[release]] after the consuming action completes, and iterative
-  * operators ([[Dedup.clusters]]) release each round's blocks via
-  * [[releaseIds]] as soon as the next round's checkpoint is materialized.
+  * `Dataset.localCheckpoint(eager = false)` persists its backing RDD but
+  * nothing ever unpersists it: repeated operator invocations in one
+  * session would accumulate checkpoint blocks until eviction churn. Every
+  * checkpoint in the library goes through [[local]], and each one gets
+  * exactly one owner:
+  *  - the innermost [[scope]] open on the calling thread, which releases
+  *    everything it owns when its body returns or throws;
+  *  - otherwise the session owner of its SparkContext, drained by
+  *    [[release]].
+  * Iterative operators [[free]] each generation once the next one is
+  * materialized, so a DP loop holds at most two live generations.
+  *
+  * The owned RDD is read from the checkpoint's own plan (its root is a
+  * `LogicalRDD` over exactly the RDD the call persisted), so concurrent
+  * callers on one session never claim each other's RDDs. Owners hold RDD
+  * ids, not RDD references, so the ContextCleaner reclaims a dropped
+  * frame exactly as before. Each owner is bound to its SparkContext and
+  * looks its ids up only there: RDD ids restart from 0 in a fresh
+  * context, and a stale id must never unpersist a successor's RDD.
+  *
+  * Release is blocking. `unpersist(blocking = false)` only ENQUEUES block
+  * removal: a driver looping iterative operators back-to-back produces
+  * generations faster than the async removal drains them, so storage
+  * grows pass over pass even though every single pass fits (SCALE_r10
+  * `q227_steady_state`: a 24 g heap ran one pass flat but OOMed at pass 5
+  * of 7). Blocking removal costs one driver→BlockManagerMaster round-trip
+  * per RDD.
   *
   * Unpersisting a locally-checkpointed RDD deletes its blocks and makes it
   * unrecomputable (lineage is truncated) — release ONLY after the last
-  * action over frames derived from it.
-  *
-  * Single-writer assumption: ids are attributed by diffing
-  * `getPersistentRDDs` around the checkpoint call, and the registry is
-  * session-global — plan construction and release must not interleave
-  * with another thread persisting RDDs on the same SparkContext (true for
-  * the driver-contract mains and the sequential test suite; a concurrent
-  * caller would need a registry scoped per pipeline).
-  *
-  * The registry is keyed by `applicationId`: RDD ids restart from 0 in a
-  * fresh SparkContext, so ids tracked under a stopped context must never
-  * alias (and unpersist) unrelated RDDs in its successor. Only one
-  * SparkContext is live per JVM, so EVERY registry touch under a live
-  * context (checkpoint or release) prunes every other application's
-  * entries — a restart that only ever releases still sheds its
-  * predecessor's stale ids.
-  */
+  * action over frames derived from it. */
 object Ckpt {
-  private val tracked =
-    scala.collection.mutable.LinkedHashMap[String, scala.collection.mutable.LinkedHashSet[Int]]()
 
-  private[graft] def idsFor(appId: String): scala.collection.mutable.LinkedHashSet[Int] =
-    synchronized {
-      // The caller's context is the JVM's single live one: any other
-      // tracked application is stopped — drop its id set so it can't
-      // alias (and unpersist) fresh RDD ids.
-      tracked.filterInPlace((app, _) => app == appId)
-      tracked.getOrElseUpdate(appId, scala.collection.mutable.LinkedHashSet[Int]())
-    }
-
-  private[graft] def trackedApps: Set[String] = synchronized(tracked.keySet.toSet)
-
-  /** RELIABLE-checkpoint mode (round 14, VERDICT r13 #2): set
-    * `SPARK_GRAFT_CKPT_DIR=<durable path>` (HDFS/S3 on a cluster, any
-    * directory locally) and every [[local]]/[[localScoped]] call becomes
-    * an EAGER `Dataset.checkpoint` to that directory instead of a lazy
-    * `localCheckpoint`. This is the fault-tolerant path for the DP-loop
-    * families (graph traversals, [[Dedup.clusters]]) on a real cluster:
-    * the in-loop N−2 generation release makes released local-checkpoint
-    * blocks unrecoverable by design (see Graph.scala), which is fine
+  /** RELIABLE-checkpoint mode: set `SPARK_GRAFT_CKPT_DIR=<durable path>`
+    * (HDFS/S3 on a cluster, any directory locally) and every [[local]]
+    * call becomes an EAGER `Dataset.checkpoint` to that directory instead
+    * of a lazy local checkpoint. This is the fault-tolerant path for the
+    * DP-loop families (graph traversals, [[Dedup.clusters]]) on a real
+    * cluster: the in-loop N−2 generation release makes freed local
+    * generations unrecoverable by design (see Graph.scala), which is fine
     * under local[32] but leaves a multi-hour 100 TB graph DP with no
     * executor-loss tolerance. Reliable checkpoints invert that trade —
     * every generation's partitions live as files on durable storage, so
-    * the SAME scoped release discipline is safe against executor loss
-    * (there are no block-manager blocks to lose; release is a no-op).
+    * the SAME release discipline is safe against executor loss: a
+    * file-backed generation is never owned, and [[free]] leaves it
+    * readable.
     *
     * Semantics are identical by construction (the checkpoint is a plan
     * barrier either way — CkptModeSpec pins result equivalence on the
@@ -86,15 +80,48 @@ object Ckpt {
   /** True when the reliable-checkpoint mode is active (env or test hook). */
   private[graft] def isReliable: Boolean = reliableDir.isDefined
 
-  /** Lazy local checkpoint, tracked for session-level [[release]]. */
-  def local(df: DataFrame): DataFrame = localScoped(df)._1
+  /** The checkpoint RDD ids one owner holds on one SparkContext. */
+  private final class Owner(val sc: SparkContext) {
+    private val ids = mutable.LinkedHashSet[Int]()
 
-  /** Lazy local checkpoint returning the persisted RDD ids it registered,
-    * for scoped early release inside iterative operators. Under
-    * [[reliableDir]] the checkpoint is EAGER and durable instead, and the
-    * returned id set is empty — releasing file-backed generations is a
-    * structural no-op, so callers' release discipline needs no branching. */
-  def localScoped(df: DataFrame): (DataFrame, Set[Int]) = synchronized {
+    def add(id: Int): Unit = synchronized { ids += id; () }
+
+    /** Unpersists `id` if this owner holds it. */
+    def drop(id: Int): Unit = if (synchronized(ids.remove(id))) unpersist(Seq(id))
+
+    def dropAll(): Unit = unpersist(synchronized { val all = ids.toList; ids.clear(); all })
+
+    private def unpersist(held: Seq[Int]): Unit = if (held.nonEmpty && !sc.isStopped) {
+      val persistent = sc.getPersistentRDDs
+      held.foreach(id => persistent.get(id).foreach(_.unpersist(blocking = true)))
+    }
+  }
+
+  /** The innermost open [[scope]] of each thread. */
+  private val scopes = new ThreadLocal[Owner]
+
+  /** Owner of the checkpoints made outside any scope; replaced (its ids
+    * forgotten, never unpersisted) when a new SparkContext appears. */
+  private var unscoped: Option[Owner] = None
+
+  private def sessionOwner(sc: SparkContext): Owner = synchronized {
+    unscoped.filter(_.sc eq sc).getOrElse {
+      val o = new Owner(sc); unscoped = Some(o); o
+    }
+  }
+
+  private def ownerFor(sc: SparkContext): Owner =
+    Option(scopes.get).filter(_.sc eq sc).getOrElse(sessionOwner(sc))
+
+  private def rddId(ck: DataFrame): Option[Int] = ck.queryExecution.logical match {
+    case r: LogicalRDD => Some(r.rdd.id)
+    case _ => None
+  }
+
+  /** Lazy local checkpoint of `df`, owned by the calling thread's scope
+    * (or the session). Under [[reliableDir]] the checkpoint is EAGER and
+    * durable instead, and nothing owns it. */
+  def local(df: DataFrame): DataFrame = {
     val sc = df.sparkSession.sparkContext
     reliableDir match {
       case Some(dir) =>
@@ -102,70 +129,42 @@ object Ckpt {
         // e.g. file:/..., plus a per-set UUID subdir) — match by
         // substring, or every checkpoint would re-set the dir and
         // scatter generations across fresh UUID subdirs.
-        if (!sc.getCheckpointDir.exists(_.contains(dir))) sc.setCheckpointDir(dir)
-        (df.checkpoint(eager = true), Set.empty[Int])
-      case None => localScopedBlocks(df)
+        synchronized {
+          if (!sc.getCheckpointDir.exists(_.contains(dir))) sc.setCheckpointDir(dir)
+        }
+        df.checkpoint(eager = true)
+      case None =>
+        val out = df.localCheckpoint(eager = false, StorageLevel.MEMORY_AND_DISK)
+        val id = rddId(out).getOrElse(
+          throw new IllegalStateException("localCheckpoint returned a plan not rooted at a LogicalRDD"))
+        ownerFor(sc).add(id)
+        out
     }
   }
 
-  private def localScopedBlocks(df: DataFrame): (DataFrame, Set[Int]) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    val out = df.localCheckpoint(/* eager = */ false,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val added = sc.getPersistentRDDs.keySet.toSet -- before
-    // Single-writer guard (VERDICT r11 #6b): ids are attributed by this
-    // before/after diff, and localCheckpoint persists exactly ONE RDD —
-    // more than one new id means another thread persisted RDDs
-    // concurrently, and those ids would be silently mis-attributed here
-    // and mis-RELEASED later (data loss for the other pipeline's cache,
-    // invisible until its consumer recomputes or dies). The scaladoc
-    // assumption is now load-bearing for long-running embeddings, so an
-    // interleave fails loudly at registration instead.
-    require(added.size <= 1,
-      s"Ckpt.localScoped observed ${added.size} newly-persisted RDD ids " +
-        s"(${added.mkString(",")}) for a single localCheckpoint — another " +
-        "thread is persisting RDDs concurrently on this SparkContext; " +
-        "the Ckpt registry is single-writer (scope a registry per " +
-        "pipeline for concurrent callers)")
-    idsFor(sc.applicationId) ++= added
-    (out, added)
+  /** Releases one checkpoint made by [[local]] on this thread — safe once
+    * every consumer of it has run or been checkpointed itself. A frame
+    * this thread's owner does not hold — a file-backed (reliable)
+    * generation, or no checkpoint at all — is left as it is. */
+  def free(ck: DataFrame): Unit =
+    rddId(ck).foreach(ownerFor(ck.sparkSession.sparkContext).drop)
+
+  /** Runs `body` — which must include the terminal action over its
+    * frames — as the owner of every checkpoint this thread makes inside
+    * it, and releases them all when it returns or throws. Scopes nest;
+    * other threads' checkpoints are never touched. */
+  def scope[T](spark: SparkSession)(body: => T): T = {
+    val outer = scopes.get
+    val owner = new Owner(spark.sparkContext)
+    scopes.set(owner)
+    try body
+    finally {
+      scopes.set(outer)
+      owner.dropAll()
+    }
   }
 
-  /** Release synchronously (the default). `unpersist(blocking = false)`
-    * only ENQUEUES block removal: a driver looping iterative operators
-    * back-to-back produces checkpoint generations faster than the async
-    * removal drains them, so storage grows without bound even though
-    * every single pass fits — the adjudicated root cause of the q227/q214
-    * sf10 pass spread (SCALE_r10 `q227_steady_state`: a 24 g heap ran one
-    * pass flat at ~160 s but OOMed at pass 5 of 7). Blocking removal is a
-    * driver→BlockManagerMaster round-trip per RDD — microseconds against
-    * an iterative round's seconds — so it is the right default for a
-    * long-running embedding. `SPARK_GRAFT_CKPT_ASYNC_RELEASE=1` restores
-    * the pre-round-11 async behavior (A/B probe knob only). */
-  private val blockingRelease: Boolean = !graft.GraftConf.current.ckptAsyncRelease
-
-  /** Test hook: the blocking-release default is part of the storage
-    * contract (SCALE_r11 proof), so CI pins it directly — a timing-based
-    * guard alone can pass spuriously when the async drain happens to win
-    * the race (ADVICE r11). */
-  private[graft] def isBlockingRelease: Boolean = blockingRelease
-
-  /** Unpersist a specific checkpoint's blocks (safe once every consumer of
-    * that checkpoint has run or been checkpointed itself). Blocks until
-    * the BlockManager has actually dropped them (see [[blockingRelease]])
-    * so repeated executions hold flat storage. */
-  def releaseIds(spark: SparkSession, ids: Set[Int]): Unit = synchronized {
-    val persistent = spark.sparkContext.getPersistentRDDs
-    ids.foreach(id => persistent.get(id).foreach(_.unpersist(blocking = blockingRelease)))
-    idsFor(spark.sparkContext.applicationId) --= ids
-  }
-
-  /** Unpersist every checkpoint tracked under this session's context —
-    * call after a query's terminal action (Verify writes, Bench passes,
-    * test assertions). Ids tracked under other (stopped) contexts are
-    * never touched. */
-  def release(spark: SparkSession): Unit = synchronized {
-    releaseIds(spark, idsFor(spark.sparkContext.applicationId).toSet)
-  }
+  /** Releases every checkpoint made on this session's context outside any
+    * [[scope]] — call after the terminal action of unscoped work. */
+  def release(spark: SparkSession): Unit = sessionOwner(spark.sparkContext).dropAll()
 }

@@ -31,7 +31,7 @@ object Dedup {
     * salted — salting would split a bucket and silently change the
     * candidate set per run, dropping is deterministic and auditable. The
     * drop is never silent: `lhs` carries an `observe` metric
-    * (`<tag>_cap`: rows_in_dropped_buckets, max_bucket) that
+    * (`<tag>_cap`: rows_in_dropped_buckets, buckets_dropped, max_bucket) that
     * [[graft.GraftSession]]'s listener WARN-logs on any direct action.
     * Returns (observed lhs, plain rhs) — the metric sits on one join side
     * only so the self-join never duplicates the CollectMetrics name, and
@@ -106,6 +106,9 @@ object Dedup {
       if (observed)
         o.observe(obsName,
           coalesce(sum(col("__bn")), lit(0L)).as("rows_in_dropped_buckets"),
+          // the over-cap (band, key) count also bounds winnowing's single
+          // broadcast collect_list row of over-cap keys
+          count(lit(1)).as("buckets_dropped"),
           coalesce(max(col("__bn")), lit(0L)).as("max_bucket"))
       else o
     }
@@ -421,11 +424,10 @@ object Dedup {
     *
     * Input columns (id_a, id_b); output (id, cluster). */
   def clusters(pairs: DataFrame, maxRounds: Int = 20): DataFrame = {
-    val spark = pairs.sparkSession
     // materialize pairs BEFORE the union — otherwise both union branches
     // re-derive the (expensive) pair pipeline independently
-    val (p, pIds) = Ckpt.localScoped(pairs)
-    val (edges, edgeIds) = Ckpt.localScoped(
+    val p = Ckpt.local(pairs)
+    val edges = Ckpt.local(
       p.select(col("id_a").as("src"), col("id_b").as("dst"))
         .union(p.select(col("id_b").as("src"), col("id_a").as("dst"))))
     // Round 1 fused into initialization: label(id) = min(id, neighbors) is
@@ -440,7 +442,6 @@ object Dedup {
     def checksum(df: DataFrame): Long =
       df.agg(coalesce(sum("cluster"), lit(0L))).collect()(0).getLong(0)
     var prev = checksum(labels)
-    var prevIds = Set.empty[Int]
     var converged = false
     var rounds = 0
     while (!converged && rounds < maxRounds) {
@@ -455,29 +456,26 @@ object Dedup {
         .join(labels.select(col("id").as("cluster"), col("cluster").as("c2")),
           "cluster")
         .select(col("id"), col("c2").as("cluster"))
-      val (next, nextIds) = Ckpt.localScoped(
+      val next = Ckpt.local(
         labels.union(msgs).union(jump)
           .groupBy("id").agg(min("cluster").as("cluster")))
+      val cur = checksum(next) // materializes this round's checkpoint …
+      Ckpt.free(labels) // … so last round's blocks can go
       labels = next
-      val cur = checksum(labels) // materializes this round's checkpoint …
-      Ckpt.releaseIds(spark, prevIds) // … so last round's blocks can go
-      prevIds = nextIds
       converged = cur == prev
       prev = cur
       rounds += 1
     }
-    if (!converged) { // fail loudly, but free this invocation's blocks first
-      Ckpt.releaseIds(spark, pIds ++ edgeIds ++ prevIds)
-      require(converged,
-        s"Dedup.clusters: min-label propagation not at a fixpoint after " +
-          s"$maxRounds rounds (component diameter ≳ 2^$maxRounds?) — " +
-          "refusing to return unconverged cluster labels")
-    }
+    // the caller's scope releases this invocation's blocks on the throw
+    require(converged,
+      s"Dedup.clusters: min-label propagation not at a fixpoint after " +
+        s"$maxRounds rounds (component diameter ≳ 2^$maxRounds?) — " +
+        "refusing to return unconverged cluster labels")
     // The final labels are materialized, so the pair/edge checkpoints are
     // no longer reachable from any future action — free them now. The
-    // final round's blocks stay until the caller's terminal action, then
-    // fall to the session-level Ckpt.release.
-    Ckpt.releaseIds(spark, pIds ++ edgeIds)
+    // final round's blocks stay until the caller's scope ends.
+    Ckpt.free(p)
+    Ckpt.free(edges)
     labels
   }
 
@@ -531,9 +529,9 @@ object Dedup {
     // n − α + 1 prints (any fixed per-doc order; rarest-first chosen so
     // prefix buckets are the df tail) must share a print with the other
     // side ANYWHERE — pairs whose smaller side's prefix hits nothing
-    // are provably below τ and are never enumerated. One extra prefix
-    // element covers the 1e-6 output rounding (roundAt can admit
-    // n_shared/min a half-ulp under τ, i.e. α−1 shared prints).
+    // are provably below τ and are never enumerated. α is the smallest
+    // shared count the 1e-6 output rounding admits ([[winnowPrefixLen]]),
+    // which can be below ⌈τ·n⌉.
     //
     // Cap semantics are preserved exactly: shared prints are counted
     // net of over-cap fingerprints (array_except against the over-cap
@@ -575,14 +573,7 @@ object Dedup {
       .select(col("id"),
         expr("transform(s, x -> x.key)").as("sorted"), size(col("s")).as("nfp"))
       .select(col("id").as("id_x"), col("nfp").as("nfp_x"),
-        // n − α + 2 prints: one extra element absorbs the 1e-6 output
-        // rounding (roundAt can admit α−1 shared prints). PRECONDITION
-        // (ADVICE r14): that one-element slack covers the rounding only
-        // while 1/n_fps > 5e-7, i.e. docs under 2,000,000 fingerprints
-        // (≈ 8M chars at w=4 — far above any chunked-corpus doc; like
-        // q169's 10⁶-token note, raise the slack for book-scale inputs).
-        explode(expr(s"slice(sorted, 1, " +
-          s"cast(size(sorted) - (ceil($threshold * size(sorted)) - 1) + 1 as int))"))
+        explode(slice(col("sorted"), lit(1), winnowPrefixLen(col("nfp"), threshold)))
           .as("key"))
     val full = lhs
       .select(col("id").as("id_y"), col("nfp").as("nfp_y"), col("key"))
@@ -633,6 +624,21 @@ object Dedup {
       .filter(col("overlap") >= threshold)
       .select("id_a", "id_b", "overlap")
       .orderBy("id_a", "id_b")
+  }
+
+  /** Prefix length that keeps [[winnowingPairs]] lossless for a doc of
+    * `n` prints: n − α + 1, where α is the smallest shared count whose
+    * overlap α/n passes the verify filter `Det.roundAt(·, 6) >= τ`. In
+    * exact arithmetic α = ⌈n·(τ − 5e-7)⌉ (roundAt's half unit); the two
+    * `admits` probes step that estimate onto roundAt's own floating-point
+    * decision, so the prefix is the shortest lossless one for every n.
+    * 0 when no shared count passes (no prints, or τ above 1). */
+  private[graft] def winnowPrefixLen(n: Column, threshold: Double): Column = {
+    def admits(s: Column) = Det.roundAt(s.cast(DoubleType) / n, 6) >= threshold
+    val est = ceil(n * lit(threshold - 5e-7))
+    val alpha = when(est > 0 && admits(est - 1), est - 1)
+      .when(admits(est), est).otherwise(est + 1)
+    when(n > 0, greatest(n - alpha + 1, lit(0L))).otherwise(lit(0L)).cast(IntegerType)
   }
 
   private def bruteJaccard(docs: DataFrame, threshold: Double): DataFrame = {
@@ -726,8 +732,8 @@ object Dedup {
     * edge list (no self-join); each iteration is one shuffle join
     * (edges ⋈ ranks on src) + one groupBy (dst). Rank state is O(|V|)
     * rows; nothing collects to the driver. The pair pipeline upstream is
-    * checkpointed once (not re-derived 1+iters times); its blocks fall to
-    * the session-level [[Ckpt.release]] after the caller's action. */
+    * checkpointed once (not re-derived 1+iters times); its blocks belong
+    * to the caller's [[Ckpt.scope]]. */
   def pageRank(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
                iters: Int = 3, damping: Double = 0.85): DataFrame = {
     val p = Ckpt.local(pairs.select(col(idA).cast(LongType).as("id_a"),

@@ -26,9 +26,9 @@ object BlockBridge {
       .getMatchingBlockIds(_.isRDD, askStorageEndpoints = true)
       .collect { case b: RDDBlockId => b }
 
-  /** RDD blocks belonging to the given RDD ids (e.g. ids captured from
-    * `Ckpt.localScoped` before a release, to assert the release actually
-    * dropped them). */
+  /** RDD blocks belonging to the given RDD ids (e.g. a checkpoint's RDD
+    * id read from its plan before a release, to assert the release
+    * actually dropped them). */
   def rddBlocksFor(sc: SparkContext, rddIds: Set[Int]): Seq[RDDBlockId] =
     rddBlocks(sc).filter(b => rddIds.contains(b.rddId))
 

@@ -1,15 +1,65 @@
 package graft
 
 import graft.operators.{Ckpt, Dedup, Similarity}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.graftbridge.BlockBridge
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 /** The two 100 TB safety rails added in round 4: the LSH mega-bucket cap
   * (bounded candidate volume under boilerplate skew, observable drops) and
-  * the localCheckpoint unpersist lifecycle (no storage accumulation across
-  * repeated operator invocations in one session). */
+  * the checkpoint lifecycle (every checkpoint owned by a scope or the
+  * session and released synchronously — no storage accumulation across
+  * repeated operator invocations, concurrent callers, or throws). */
 class CkptCapSpec extends SparkSpec {
   import spark.implicits._
+
+  private def rddIdOf(ck: DataFrame): Int =
+    ck.queryExecution.logical.asInstanceOf[LogicalRDD].rdd.id
+
+  // Owners hold ids, not RDDs, so the ContextCleaner may unpersist a
+  // checkpoint whose frame is unreachable at any GC: a test that expects
+  // blocks to still be there keeps its frames referenced.
+
+  /** Runs each body on its own fresh thread — outside every
+    * [[Ckpt.scope]] — all released at once, and returns their results in
+    * order (rethrowing the first failure). */
+  private def onThreads[T](bodies: Seq[() => T]): Seq[T] = {
+    val gate = new java.util.concurrent.CyclicBarrier(bodies.size)
+    val outs = new Array[Either[Throwable, T]](bodies.size)
+    val threads = bodies.zipWithIndex.map { case (body, i) =>
+      new Thread(() => outs(i) =
+        try { gate.await(); Right(body()) } catch { case e: Throwable => Left(e) })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    outs.toSeq.map(_.fold(e => throw e, identity))
+  }
+
+  /** `body` on a fresh thread: its checkpoints belong to the session. */
+  private def unscoped[T](body: => T): T = onThreads(Seq(() => body)).head
+
+  /** Runs `body` and asserts it leaves no checkpoint persisted and no RDD
+    * block behind. The persisted-RDD check is exact the moment `body`
+    * returns; the block check polls briefly, because once in 46
+    * concurrent stress runs of the two queries below a block was still
+    * listed right after both scopes closed, and gone at the next read
+    * about 5 s later. */
+  private def leavesNothing[T](body: => T): T = {
+    val sc = spark.sparkContext
+    val persisted = sc.getPersistentRDDs.keySet.toSet
+    val blocks = BlockBridge.rddBlocks(sc).toSet
+    val out = body
+    val still = sc.getPersistentRDDs.keySet.toSet -- persisted
+    assert(still.isEmpty, s"checkpoint RDDs still persisted: ${still.mkString(",")}")
+    eventually(timeout(10.seconds), interval(200.millis)) {
+      val left = BlockBridge.rddBlocks(sc).toSet -- blocks
+      assert(left.isEmpty, s"RDD blocks left: ${left.mkString(",")}")
+    }
+    out
+  }
 
   /** 200 identical boilerplate docs (one (band,key) bucket per band holds
     * all of them) plus two genuine near-dups outside the mega-bucket. */
@@ -27,30 +77,29 @@ class CkptCapSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(capped.toSet == Set((1001L, 1002L)),
       s"expected only the out-of-bucket near-dup pair, got ${capped.length} pairs")
-    Ckpt.release(spark)
   }
 
   test("without the cap the mega-bucket floods the pair list") {
     val n = Dedup.minhashLshPairs(megaDocs, "doc_id", "text").count()
     assert(n == 200L * 199 / 2 + 1) // all boilerplate pairs + the near-dup
-    Ckpt.release(spark)
   }
 
   test("simhash maxBucket bounds candidates the same way") {
     val capped = Dedup.simhashPairs(megaDocs, "doc_id", "text", maxBucket = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(!capped.exists(p => p._1 <= 200L || p._2 <= 200L))
-    Ckpt.release(spark)
   }
 
   test("cap drops are observable, never silent") {
     @volatile var dropped = -1L
+    @volatile var buckets = -1L
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
         qe.observedMetrics.collectFirst {
           // per-invocation sequence number between tag and _cap suffix
           case (name, row) if name.startsWith("minhash_lsh_") && name.endsWith("_cap") => row
         }.foreach { row =>
+          buckets = row.getAs[Long]("buckets_dropped")
           dropped = row.getAs[Long]("rows_in_dropped_buckets")
         }
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
@@ -62,10 +111,9 @@ class CkptCapSpec extends SparkSpec {
       val deadline = System.nanoTime() + 10_000_000_000L
       while (dropped < 0 && System.nanoTime() < deadline) Thread.sleep(50)
       assert(dropped == 200L * 8, s"expected 200 rows x 8 bands in dropped buckets, saw $dropped")
-    } finally {
-      spark.listenerManager.unregister(listener)
-      Ckpt.release(spark)
-    }
+      // one mega-bucket per band
+      assert(buckets == 8L, s"expected 8 over-cap buckets, saw $buckets")
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("two capped invocations compose into ONE plan — observe names are unique") {
@@ -74,36 +122,16 @@ class CkptCapSpec extends SparkSpec {
     val a = Dedup.minhashLshPairs(megaDocs, "doc_id", "text", maxBucket = 10)
     val b = Dedup.minhashLshPairs(megaDocs, "doc_id", "text", maxBucket = 10)
     assert(a.union(b).count() == 2) // the out-of-bucket near-dup pair, twice
-    Ckpt.release(spark)
-  }
-
-  test("Ckpt registry is keyed by applicationId — stale contexts are pruned") {
-    // Ids tracked under a stopped SparkContext must never be unpersisted in
-    // a successor context where RDD ids restart from 0 and could alias.
-    Ckpt.idsFor("app-from-a-stopped-context") += 999999
-    assert(Ckpt.trackedApps.contains("app-from-a-stopped-context"))
-    val (ck, ids) = Ckpt.localScoped(megaDocs)
-    ck.count()
-    // touching the registry under the live context dropped the stale app
-    assert(Ckpt.trackedApps == Set(spark.sparkContext.applicationId))
-    Ckpt.releaseIds(spark, ids)
-  }
-
-  test("release alone prunes stopped contexts — no checkpoint required first") {
-    // A restarted JVM whose new session only ever calls release (never
-    // localScoped) must still shed its predecessor's stale ids: liveness,
-    // not supersession-by-checkpoint, keys the prune.
-    Ckpt.idsFor("another-stopped-context") += 424242
-    assert(Ckpt.trackedApps.contains("another-stopped-context"))
-    Ckpt.release(spark)
-    assert(Ckpt.trackedApps == Set(spark.sparkContext.applicationId))
   }
 
   test("Ckpt.release unpersists every checkpoint a query registered") {
     val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    Dedup.minhashLshPairs(megaDocs, "doc_id", "text").count()
+    val pairs = unscoped {
+      val p = Dedup.minhashLshPairs(megaDocs, "doc_id", "text"); p.count(); p
+    }
     assert(spark.sparkContext.getPersistentRDDs.keySet.toSet != before,
       "the LSH path should have registered checkpoint blocks")
+    java.lang.ref.Reference.reachabilityFence(pairs)
     Ckpt.release(spark)
     assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == before)
   }
@@ -113,105 +141,136 @@ class CkptCapSpec extends SparkSpec {
     // checkpoint generations faster than the async drain accumulates
     // storage without bound (the q227/q214 sf10 spread's root cause —
     // SCALE_r10 q227_steady_state: one pass fit a 24 g heap, seven OOMed).
-    //
-    // ADVICE r11: the original assertions read getRDDStorageInfo, which
-    // enumerates the driver's persistentRdds map — a map unpersist clears
-    // synchronously REGARDLESS of the blocking flag, so they passed even
-    // under the async env knob (a vacuous guard). This version captures
-    // the checkpoint's RDD ids and asks the BlockManagerMaster for actual
-    // block state (askStorageEndpoints = true) immediately after release,
-    // plus pins the blocking default directly — a regression to async
-    // release flips isBlockingRelease and fails deterministically, and
-    // any removal lag shows up as live blocks for the captured ids.
-    import org.apache.spark.graftbridge.BlockBridge
+    // The driver's getRDDStorageInfo/persistentRdds views are cleared
+    // synchronously whatever the blocking flag, so this asks the
+    // BlockManagerMaster for actual block state (askStorageEndpoints =
+    // true) immediately after release; the async CONTROL below shows
+    // that check can fail.
     val sc = spark.sparkContext
-    assert(Ckpt.isBlockingRelease,
-      "blocking release is the contract default (SPARK_GRAFT_CKPT_ASYNC_RELEASE is an A/B-only knob)")
-    val (ck, ids) = Ckpt.localScoped(megaDocs)
-    assert(ck.count() == 202L)
-    assert(ids.nonEmpty, "localScoped should have registered the checkpoint RDD")
+    val ck = unscoped {
+      val ck = Ckpt.local(megaDocs)
+      assert(ck.count() == 202L)
+      ck
+    }
+    val id = rddIdOf(ck)
     // block writes report to the master synchronously during the put
     // (tellMaster), so by count()'s return the endpoint state is settled
-    assert(BlockBridge.rddBlocksFor(sc, ids).nonEmpty,
+    assert(BlockBridge.rddBlocksFor(sc, Set(id)).nonEmpty,
       "the checkpoint should hold BlockManager blocks before release")
+    java.lang.ref.Reference.reachabilityFence(ck)
     Ckpt.release(spark)
-    val leftover = BlockBridge.rddBlocksFor(sc, ids)
+    val leftover = BlockBridge.rddBlocksFor(sc, Set(id))
     assert(leftover.isEmpty,
       s"blocking release must have dropped every block before returning: " +
         leftover.mkString(","))
     assert(sc.getPersistentRDDs.isEmpty)
   }
 
-  /** Fork tools/graft_java.sh ProbeAsyncRelease and return its result
-    * line. stderr is MERGED into stdout (ADVICE r13: with only stdout
-    * drained, Spark's pre-setLogLevel INFO chatter on stderr could fill
-    * the ~64 KB pipe buffer and deadlock the child on write — the result
-    * line is found by its JSON marker, so merging is safe) and waitFor is
-    * bounded so a hung probe fails the test instead of the whole suite. */
-  private def runAsyncReleaseProbe(cycles: Int, async: Boolean): String = {
-    val repo = new java.io.File(".").getCanonicalFile
-    val pb = new java.lang.ProcessBuilder(
-      s"$repo/tools/graft_java.sh", "4g", "graft.ProbeAsyncRelease", cycles.toString)
-    if (async) pb.environment().put("SPARK_GRAFT_CKPT_ASYNC_RELEASE", "1")
-    else pb.environment().remove("SPARK_GRAFT_CKPT_ASYNC_RELEASE")
-    pb.environment().put("SPARK_GRAFT_CPUS", "4")
-    pb.redirectErrorStream(true)
-    val p = pb.start()
-    // drain on a thread: the timeout must bite even if the child never
-    // closes stdout (a blocking mkString on the main thread would hang
-    // BEFORE waitFor and defeat the bound)
-    val buf = new java.lang.StringBuilder
-    val reader = new Thread(() => {
-      val src = scala.io.Source.fromInputStream(p.getInputStream)
-      try src.getLines().foreach { l => buf.synchronized { buf.append(l).append('\n') } }
-      finally src.close()
-    })
-    reader.setDaemon(true)
-    reader.start()
-    val exited = p.waitFor(5, java.util.concurrent.TimeUnit.MINUTES)
-    if (!exited) {
-      p.destroyForcibly()
-      fail(s"probe JVM did not exit within 5 minutes; output tail: " +
-        buf.synchronized(buf.toString.takeRight(2000)))
-    }
-    reader.join(10000)
-    val out = buf.synchronized(buf.toString)
-    val rc = p.exitValue()
-    assert(rc == 0, s"probe JVM exited $rc; output tail: ${out.takeRight(2000)}")
-    out.linesIterator.find(_.contains("\"probe\":\"async_release\""))
-      .getOrElse(fail(s"probe printed no result line; output tail: ${out.takeRight(2000)}"))
-  }
+  /** 2000 rows of a few hundred bytes: enough blocks per checkpoint that
+    * an async removal is still in flight when the call returns. */
+  private def payload =
+    (1 to 2000).map(j => (j.toLong, s"row $j payload " * 8)).toDF("id", "t")
 
   test("async-release CONTROL: the BlockBridge guard can fail when release is async") {
-    // VERDICT r12 #6a: the blocking-default pin above is a config guard;
-    // this leg proves the post-release BlockBridge check is BEHAVIORAL —
-    // a forked JVM with SPARK_GRAFT_CKPT_ASYNC_RELEASE=1 (env is
-    // immutable in-process, hence the fork) must OBSERVE leftover blocks
-    // immediately after releaseIds returns, i.e. exactly the state the
-    // main spec's assertion exists to catch. Measured before pinning:
-    // async observes a leftover on cycle 1; blocking observes none in 50.
-    val line = runAsyncReleaseProbe(200, async = true)
-    assert(line.contains("\"blocking\":false"),
-      s"env knob must flip the release mode in the forked JVM: $line")
-    assert(!line.contains("\"leftover_observed\":0"),
-      s"async release must be observable as leftover blocks (else the " +
-        s"main spec's BlockBridge assertion is vacuous): $line")
+    // The guard above is behavioural, not vacuous: an async unpersist of
+    // a materialized checkpoint leaves blocks it observes right after the
+    // call returns — exactly the state a regression to async release
+    // would leave. Measured before pinning: observed on the first cycle.
+    val sc = spark.sparkContext
+    var observed = false
+    var cycles = 0
+    while (!observed && cycles < 200) {
+      val ck = Ckpt.local(payload)
+      ck.count()
+      val id = rddIdOf(ck)
+      sc.getPersistentRDDs(id).unpersist(blocking = false)
+      observed = BlockBridge.rddBlocksFor(sc, Set(id)).nonEmpty
+      Ckpt.free(ck)
+      cycles += 1
+    }
+    assert(observed, s"async unpersist left no observable blocks in $cycles cycles " +
+      "(the post-release BlockBridge check would be vacuous)")
   }
 
   test("blocking-release CONTROL: zero leftovers across every probe cycle") {
-    // VERDICT r13 #5: the complementary leg — the same forked probe
-    // WITHOUT the env knob must observe zero leftover blocks over all
-    // its cycles, so the pair brackets the contract from both sides in
-    // CI (async CAN leave leftovers; blocking NEVER does), not just the
-    // failure direction. 200 cycles in the probe's blocking mode run
-    // every cycle (each one is an assertion of the contract).
-    val line = runAsyncReleaseProbe(200, async = false)
-    assert(line.contains("\"blocking\":true"),
-      s"probe without the env knob must run in blocking mode: $line")
-    assert(line.contains("\"cycles\":200"),
-      s"blocking mode must run every cycle, never early-exit: $line")
-    assert(line.contains("\"leftover_observed\":0"),
-      s"blocking release must never leave observable leftover blocks: $line")
+    // the complementary leg: the same cycle through Ckpt never leaves an
+    // observable block, so the pair brackets the contract from both sides
+    val sc = spark.sparkContext
+    val leftovers = (1 to 200).count { _ =>
+      val ck = Ckpt.local(payload)
+      ck.count()
+      val id = rddIdOf(ck)
+      Ckpt.free(ck)
+      BlockBridge.rddBlocksFor(sc, Set(id)).nonEmpty
+    }
+    assert(leftovers == 0, s"$leftovers of 200 cycles left blocks after Ckpt.free")
+  }
+
+  test("a scope releases its own thread's checkpoints; release drains the unscoped ones") {
+    val sc = spark.sparkContext
+    def materialized() = { val ck = Ckpt.local(megaDocs); ck.count(); ck }
+    val outsideCk = unscoped(materialized())
+    val outside = rddIdOf(outsideCk)
+    val inside = rddIdOf(Ckpt.scope(spark)(materialized()))
+    assert(BlockBridge.rddBlocksFor(sc, Set(inside)).isEmpty,
+      "a scope must release what it owns when its body returns")
+    assert(BlockBridge.rddBlocksFor(sc, Set(outside)).nonEmpty,
+      "a scope must not release a checkpoint made outside it")
+    java.lang.ref.Reference.reachabilityFence(outsideCk)
+    Ckpt.release(spark)
+    assert(BlockBridge.rddBlocksFor(sc, Set(outside)).isEmpty)
+  }
+
+  test("interleaved scopes on two threads each release only their own checkpoints") {
+    // Both scopes open, then the first thread checkpoints, then the second
+    // scope closes: the first thread's checkpoint must survive that close.
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val sc = spark.sparkContext
+    def held(id: Int) = BlockBridge.rddBlocksFor(sc, Set(id)).nonEmpty
+    def await(l: CountDownLatch) = assert(l.await(60, TimeUnit.SECONDS), "peer thread stalled")
+    val (opened, secondOpened, made, secondClosed) =
+      (new CountDownLatch(1), new CountDownLatch(1), new CountDownLatch(1), new CountDownLatch(1))
+    @volatile var first = -1
+    onThreads(Seq(
+      () => Ckpt.scope(spark) {
+        opened.countDown()
+        await(secondOpened)
+        val ck = Ckpt.local(megaDocs)
+        first = rddIdOf(ck)
+        try ck.count() finally made.countDown()
+        await(secondClosed)
+        assert(held(first), "another thread's scope released this thread's checkpoint")
+        java.lang.ref.Reference.reachabilityFence(ck)
+      },
+      () => {
+        await(opened)
+        try Ckpt.scope(spark) { secondOpened.countDown(); await(made) }
+        finally secondClosed.countDown()
+      }))
+    assert(!held(first), "the first scope must release its checkpoint when it closes")
+  }
+
+  test("concurrent queries in their own scopes return their serial results and leave no blocks") {
+    // Two DP queries on two threads of one session: each scope owns
+    // exactly the checkpoints its thread made, so neither releases the
+    // other's generations mid-loop.
+    def run(q: String): Seq[String] = Ckpt.scope(spark) {
+      SparkEntry.queries(q)(spark, s"${GraftConf.DataRoot}/sf0.001").collect().map(_.toString).toSeq.sorted
+    }
+    val names = Seq("q215_cheapest_route", "q39_dedup_clusters")
+    val serial = leavesNothing(names.map(run))
+    assert(serial.forall(_.nonEmpty), "fixture queries should return rows")
+    val concurrent = leavesNothing(onThreads(names.map(q => () => run(q))))
+    assert(concurrent == serial)
+  }
+
+  test("a DP operator that throws mid-loop inside a scope leaves no blocks") {
+    // a 40-long chain cannot converge in one pointer-doubling round;
+    // clusters has materialized its pair, edge and round checkpoints
+    // before the require throws
+    val chain = (1L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    leavesNothing(intercept[IllegalArgumentException](
+      Ckpt.scope(spark)(Dedup.clusters(chain, maxRounds = 1))))
   }
 
   test("session shuffle-partition default follows cores — the adjudicated rule") {
@@ -228,9 +287,10 @@ class CkptCapSpec extends SparkSpec {
 
   test("clusters + release leave no persistent RDDs behind") {
     val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val pairs = Dedup.minhashLshPairs(megaDocs, "doc_id", "text", maxBucket = 10)
-    val labels = Dedup.clusters(pairs)
-    assert(labels.collect().nonEmpty)
+    unscoped {
+      val pairs = Dedup.minhashLshPairs(megaDocs, "doc_id", "text", maxBucket = 10)
+      assert(Dedup.clusters(pairs).collect().nonEmpty)
+    }
     Ckpt.release(spark)
     assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == before)
   }
@@ -241,6 +301,5 @@ class CkptCapSpec extends SparkSpec {
     val df = vecs.toDF("vec_id", "embedding", "label")
     val n = Similarity.lshNearDupPairs(df, 0.99, maxBucket = 10).count()
     assert(n == 0, s"identical-vector mega-bucket must be dropped, got $n pairs")
-    Ckpt.release(spark)
   }
 }

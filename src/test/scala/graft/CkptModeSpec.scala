@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.{Ckpt, Dedup, Graph}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Reliable-checkpoint mode (round 14, VERDICT r13 #2): with
   * `SPARK_GRAFT_CKPT_DIR` set, every Ckpt call becomes an eager
@@ -16,7 +17,7 @@ import org.apache.spark.sql.DataFrame
   *    fires in the local leg).
   *  - MECHANISM: the reliable leg registers NO persistent RDDs (nothing
   *    for an executor loss to take) and writes real checkpoint files
-  *    under the directory; scoped release is a structural no-op there.
+  *    under the directory; `Ckpt.free` leaves such a generation readable.
   *
   * Env is immutable in-process, so the spec drives the mode through
   * Ckpt.reliableDirOverride — the same code path the env var selects
@@ -51,24 +52,18 @@ class CkptModeSpec extends SparkSpec {
   private def rows(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
 
-  /** Run `body` with Ckpt forced into reliable mode at `dir`; always
-    * restore the default (env-driven) mode and drain the session blocks. */
+  /** Run `body` in a [[Ckpt.scope]] with Ckpt forced into reliable mode
+    * at `dir`; always restore the default (env-driven) mode. */
   private def inReliableMode[A](dir: String)(body: => A): A = {
     Ckpt.reliableDirOverride = Some(Some(dir))
-    try body
-    finally {
-      Ckpt.reliableDirOverride = None
-      Ckpt.release(spark)
-    }
+    try Ckpt.scope(spark)(body)
+    finally Ckpt.reliableDirOverride = None
   }
 
   private def inLocalMode[A](body: => A): A = {
     Ckpt.reliableDirOverride = Some(None) // force local even if env is set
-    try body
-    finally {
-      Ckpt.reliableDirOverride = None
-      Ckpt.release(spark)
-    }
+    try Ckpt.scope(spark)(body)
+    finally Ckpt.reliableDirOverride = None
   }
 
   test("DP operators are mode-equivalent: reliable ≡ local results") {
@@ -101,8 +96,7 @@ class CkptModeSpec extends SparkSpec {
     val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
     inReliableMode(dir) {
       assert(Ckpt.isReliable)
-      val (ck, ids) = Ckpt.localScoped(Seq((1L, "a"), (2L, "b")).toDF("id", "t"))
-      assert(ids.isEmpty, "reliable checkpoints must register no RDD ids")
+      val ck = Ckpt.local(Seq((1L, "a"), (2L, "b")).toDF("id", "t"))
       assert(ck.count() == 2L)
       // nothing for an executor loss to take: no new persistent RDDs
       assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == before,
@@ -117,24 +111,25 @@ class CkptModeSpec extends SparkSpec {
       }
       assert(files(java.nio.file.Paths.get(dir)) > 0,
         s"no checkpoint part-files under $dir")
-      // releasing a file-backed generation is a no-op, never an error
-      Ckpt.releaseIds(spark, ids)
+      // freeing a file-backed generation is a no-op, never an error
+      Ckpt.free(ck)
       assert(ck.count() == 2L, "generation must survive its own release")
     }
   }
 
   test("local mode (the default) still tracks and releases block ids") {
-    // guards the refactor: the block-registry path is unchanged when the
-    // reliable knob is absent
-    val (ck, ids) = inLocalMode {
-      val r = Ckpt.localScoped(Seq((1L, "a")).toDF("id", "t"))
-      r._1.count()
-      assert(r._2.nonEmpty, "local mode must register the checkpoint RDD id")
-      r
+    // without the reliable knob the checkpoint is a persisted block RDD,
+    // owned by the enclosing scope
+    val id = inLocalMode {
+      val ck = Ckpt.local(Seq((1L, "a")).toDF("id", "t"))
+      assert(ck.count() == 1L)
+      val id = ck.queryExecution.logical.asInstanceOf[LogicalRDD].rdd.id
+      assert(spark.sparkContext.getPersistentRDDs.contains(id),
+        "local mode must persist the checkpoint RDD")
+      java.lang.ref.Reference.reachabilityFence(ck) // no GC reclaim before the check
+      id
     }
-    // inLocalMode's finally released the session's blocks
-    assert(!spark.sparkContext.getPersistentRDDs.keySet.exists(ids.contains),
-      "release must have dropped the tracked ids")
-    assert(ck.queryExecution != null)
+    assert(!spark.sparkContext.getPersistentRDDs.contains(id),
+      "the scope must have released the checkpoint RDD")
   }
 }

@@ -59,7 +59,6 @@ class DedupSpec extends SparkSpec {
     assert(cross == expected, s"cross=$cross expected=$expected")
     assert(cross.exists(p => p._1 == 4L && p._2 == 1L)) // exact dup straddles
     assert(!cross.exists(p => p._1 == 2L && p._2 == 4L)) // within-side absent
-    graft.operators.Ckpt.release(spark)
   }
 
   test("simhashPairs: exact dups at hamming 0; unrelated docs excluded") {
@@ -76,13 +75,41 @@ class DedupSpec extends SparkSpec {
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
   }
 
+  test("winnowPrefixLen is the shortest lossless prefix, by brute enumeration of the shared count") {
+    // The verify filter Det.roundAt(s / n, 6) >= t in plain doubles, the
+    // same IEEE operations Spark's generated code runs.
+    def admits(s: Long, n: Long, t: Double): Boolean =
+      math.floor(s.toDouble / n * 1e6 + 0.5).toLong / 1e6 >= t
+    val ns = (1L to 3000L) ++ Seq(399999L, 400000L, 400001L, 1999999L, 2000000L,
+      2000001L, 2000005L, 2500000L, 4000000L, 4000003L, 10000000L)
+    for (t <- Seq(0.3, 0.5, 0.8, 0.9)) {
+      val got = ns.toDF("n")
+        .select(col("n"), Dedup.winnowPrefixLen(col("n").cast("int"), t).as("len"))
+        .as[(Long, Int)].collect().toMap
+      val alpha = ns.map(n => n -> (0L to n).find(admits(_, n, t)).getOrElse(n + 1)).toMap
+      for (n <- ns) {
+        assert(got(n) == n - alpha(n) + 1, s"t=$t n=$n: prefix ${got(n)}, brute alpha ${alpha(n)}")
+        val old = n - (math.ceil(t * n).toLong - 1) + 1 // the fixed one-print slack
+        if (n < 2000000L) assert(got(n) <= old, s"t=$t n=$n: prefix ${got(n)} > old $old")
+      }
+      // the double mirror agrees with Spark's roundAt at each boundary
+      val edges = ns.flatMap(n => Seq((n, alpha(n) - 1), (n, alpha(n)))).filter(_._2 >= 0)
+      val viaSpark = edges.toDF("n", "s")
+        .select(col("n"), col("s"), (graft.functions.Det.roundAt(
+          col("s").cast("double") / col("n").cast("int"), 6) >= t).as("ok"))
+        .as[(Long, Long, Boolean)].collect()
+      viaSpark.foreach { case (n, s, ok) =>
+        assert(ok == admits(s, n, t), s"t=$t n=$n s=$s: Spark $ok, mirror ${admits(s, n, t)}")
+      }
+    }
+  }
+
   test("winnowingPairs: exact dup at overlap 1.0, near dup found, unrelated excluded") {
     val pairs = Dedup.winnowingPairs(docs, "doc_id", "text", k = 5, w = 4, threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(pairs.exists(p => p._1 == 1L && p._2 == 4L && p._3 == 1.0)) // exact dup
     assert(pairs.exists(p => p._1 == 1L && p._2 == 2L && p._3 > 0.5))  // near dup
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))               // unrelated
-    graft.operators.Ckpt.release(spark)
   }
 
   test("embedding near-dup and brute top-k rank by quantized cosine") {
@@ -132,7 +159,6 @@ class DedupSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       assert(pref == brute, s"threshold $t: prefix $pref != brute $brute")
     }
-    graft.operators.Ckpt.release(spark)
   }
 
   test("containmentPairs is lossless and catches snippet-in-document pairs") {
@@ -169,7 +195,6 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(found.contains(2L -> 1L) && found.contains(2L -> 3L))
     assert(!found.contains(1L -> 2L), "big doc is not contained in its snippet")
-    graft.operators.Ckpt.release(spark)
   }
 
   test("partitionModularity: hand-computed Q on a two-community graph") {
@@ -191,7 +216,6 @@ class DedupSpec extends SparkSpec {
     val empty = Dedup.partitionModularity(
       Seq.empty[(Long, Long)].toDF("id_a", "id_b"), labels).collect()(0)
     assert(empty.getLong(0) == 0L && empty.getDouble(3) == 0.0)
-    graft.operators.Ckpt.release(spark)
   }
 
   test("triangleCount: hand-counted triangles, degree-oriented, no double count") {
@@ -216,6 +240,5 @@ class DedupSpec extends SparkSpec {
     val r = Dedup.pageRank(pairs).collect()
       .map(x => (x.getLong(0), x.getDouble(1))).toList
     assert(r == List((2L, 1.741625), (1L, 0.629188), (3L, 0.629188)))
-    graft.operators.Ckpt.release(spark)
   }
 }

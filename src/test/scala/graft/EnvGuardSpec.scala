@@ -5,24 +5,39 @@ import java.nio.file.{Files, Path, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
-/** Keeps the single-read property of [[GraftConf]]: no other file under
-  * `src/main` reads the process environment, so every knob keeps one
-  * name, one parser and one default. */
+/** Source rules over `src/main` that keep one mechanism in one place:
+  * only [[GraftConf]] reads the process environment, so every knob keeps
+  * one name, one parser and one default; and only `Ckpt` checkpoints, so
+  * every checkpoint has an owner that releases it. */
 class EnvGuardSpec extends AnyFunSuite {
-  test("only GraftConf reads the environment in src/main") {
+  private lazy val sources: List[Path] = {
     val root = Paths.get("src", "main")
     assert(Files.isDirectory(root), s"run from the repository root (no $root here)")
     val walk = Files.walk(root)
-    val sources = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-                  finally walk.close()
-    val reads = """sys\.env|System\.getenv""".r
-    val offenders = sources.filterNot(_.getFileName.toString == "GraftConf.scala").flatMap { p: Path =>
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
+  /** Lines matching `pattern` in every source file except `allowed`. */
+  private def offenders(pattern: Regex, allowed: String): List[String] =
+    sources.filterNot(_.getFileName.toString == allowed).flatMap { p =>
       Files.readAllLines(p).asScala.zipWithIndex.collect {
-        case (line, i) if reads.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+        case (line, i) if pattern.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
       }
     }
-    assert(offenders.isEmpty,
-      "read knobs through GraftConf, not the environment:\n" + offenders.mkString("\n"))
+
+  test("only GraftConf reads the environment in src/main") {
+    val found = offenders("""sys\.env|System\.getenv""".r, "GraftConf.scala")
+    assert(found.isEmpty,
+      "read knobs through GraftConf, not the environment:\n" + found.mkString("\n"))
+  }
+
+  test("only Ckpt checkpoints in src/main") {
+    val found = offenders("""localCheckpoint\(|\.checkpoint\(""".r, "Ckpt.scala")
+    assert(found.isEmpty,
+      "checkpoint through graft.operators.Ckpt, which owns and releases it:\n" +
+        found.mkString("\n"))
   }
 }

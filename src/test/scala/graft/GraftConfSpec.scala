@@ -21,7 +21,6 @@ class GraftConfSpec extends AnyFunSuite {
     assert(c.warmRuns == 5)
     assert(c.lshMaxBucket == GraftConf.DefaultLshMaxBucket && c.lshMaxBucket == 100000)
     assert(c.lshKeyBits.isEmpty)
-    assert(!c.ckptAsyncRelease)
     assert(c.ckptDir.isEmpty && c.censusDump.isEmpty && c.docsDir.isEmpty)
     assert(c.benchOut.isEmpty && c.streambenchOut.isEmpty && c.master.isEmpty)
     assert(c.benchOnly.isEmpty && c.benchOnlyQueries.isEmpty)
@@ -33,14 +32,13 @@ class GraftConfSpec extends AnyFunSuite {
       "SPARK_GRAFT_CPUS" -> "8", "SPARK_GRAFT_SHUFFLE_PARTITIONS" -> "128",
       "SPARK_GRAFT_SF_DIR" -> "/data/sf1", "SPARK_GRAFT_WARM_RUNS" -> "1",
       "SPARK_GRAFT_LSH_KEY_BITS" -> " 15 ", "SPARK_GRAFT_LSH_MAX_BUCKET" -> "3",
-      "SPARK_GRAFT_CKPT_ASYNC_RELEASE" -> "1", "SPARK_GRAFT_CKPT_DIR" -> "/ckpt",
+      "SPARK_GRAFT_CKPT_DIR" -> "/ckpt",
       "SPARK_GRAFT_STREAM_ONLY" -> "dedup, lsh_tag,", "SPARK_MASTER" -> "spark://m:7077"))
     assert(c.cpus == 8 && c.shufflePartitions.contains(128) && c.sfDir == "/data/sf1")
     assert(c.warmRuns == 1 && c.lshKeyBits.contains(15) && c.lshMaxBucket == 3)
-    assert(c.ckptAsyncRelease && c.ckptDir.contains("/ckpt"))
+    assert(c.ckptDir.contains("/ckpt"))
     assert(c.streamOnly == Set("dedup", "lsh_tag"))
     assert(c.master.contains("spark://m:7077"))
-    assert(!conf("CKPT_ASYNC_RELEASE" -> "true").ckptAsyncRelease, "only `1` flips the release mode")
   }
 
   test("BENCH_ONLY resolves against the registry, in registry order") {

@@ -61,7 +61,6 @@ class GraphSpec extends SparkSpec {
     val out = Graph.temporalBfs(edges, Seq(1L).toDF("id"), maxHops = 3)
       .as[(Long, Long)].collect().toMap
     assert(out === Map(1L -> 0L, 2L -> 10L, 4L -> 20L))
-    graft.operators.Ckpt.release(spark)
   }
 
   test("temporalBfs takes the earliest arrival among competing paths") {
@@ -72,7 +71,6 @@ class GraphSpec extends SparkSpec {
     val out = Graph.temporalBfs(edges, Seq(1L).toDF("id"), maxHops = 2)
       .as[(Long, Long)].collect().toMap
     assert(out(3L) === 30L)
-    graft.operators.Ckpt.release(spark)
   }
 
   test("kcore peels the pendant chain and keeps the clique with residual degrees") {
@@ -83,7 +81,6 @@ class GraphSpec extends SparkSpec {
     val out = Graph.kcore(edges, k = 3, rounds = 3)
       .as[(Long, Long)].collect().toMap
     assert(out === Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
-    graft.operators.Ckpt.release(spark)
   }
 
   test("bfs plan is iterative joins — no cartesian product anywhere") {
@@ -91,7 +88,6 @@ class GraphSpec extends SparkSpec {
     val plan = Graph.bfsLevels(edges, Seq(1L).toDF("id"), maxHops = 3)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Cartesian"))
-    graft.operators.Ckpt.release(spark)
   }
 
   test("symmetrized casts an int and a long endpoint to their common type") {

@@ -22,7 +22,6 @@ class PlanShapeSpec extends SparkSpec {
     for (q <- Queries.all if !bruteBaselines(q.name)) {
       assert(!plan(q.name).contains("CartesianProduct"),
         s"${q.name} plans a cartesian product")
-      graft.operators.Ckpt.release(spark)
     }
   }
 
@@ -88,7 +87,6 @@ class PlanShapeSpec extends SparkSpec {
       assert(global.forall(l => l.contains("_psg") || l.contains("_ab")),
         s"$q has a partition-less Window over a non-block frame:\n" +
           global.mkString("\n"))
-      graft.operators.Ckpt.release(spark)
     }
   }
 
@@ -167,7 +165,6 @@ class PlanShapeSpec extends SparkSpec {
   test("quality-aware dedup survivor filter compiles to WindowGroupLimit") {
     assert(plan("q176_dedup_best").contains("WindowGroupLimit"),
       "q176 rn=1 filter not pushed into the window")
-    graft.operators.Ckpt.release(spark)
   }
 
   test("source-overlap totals join broadcast; the fp join carries slim columns") {
@@ -270,7 +267,6 @@ class PlanShapeSpec extends SparkSpec {
       // the operator above. Either way: one signature evaluation per
       // consumer, never one per band.
       assert(c <= 1, s"$q computes the minhash signature $c times")
-      graft.operators.Ckpt.release(spark)
     }
   }
 
@@ -295,7 +291,6 @@ class PlanShapeSpec extends SparkSpec {
         .map(l => "lambdafunction\\(".r.findAllIn(l).length).sum
       assert(filterLambdas == 0,
         s"$q re-derives a HOF pipeline inside a Filter ($filterLambdas lambda copies)")
-      graft.operators.Ckpt.release(spark)
     }
     // same defect class, vector side: the adaptive bucket key joins on a
     // sign-sketch derivation — a nullable key re-ran the 12-plane sketch
@@ -306,7 +301,6 @@ class PlanShapeSpec extends SparkSpec {
         .map(l => "graft_dotq\\(".r.findAllIn(l).length).sum
       assert(filterDots == 0,
         s"$q re-derives the sign sketch inside a Filter ($filterDots dotq copies)")
-      graft.operators.Ckpt.release(spark)
     }
   }
 

@@ -212,7 +212,6 @@ class PropertySpec extends SparkSpec {
       und.toDF("src", "dst"), seeds.toDF("id"), maxHops = 3)
       .as[(Long, Long)].collect().toMap
     assert(got == want)
-    graft.operators.Ckpt.release(spark)
   }
 
   test("kcore equals the brute peel-to-fixpoint on random graphs") {
@@ -234,7 +233,6 @@ class PropertySpec extends SparkSpec {
     val got = graft.operators.Graph.kcore(und.toDF("src", "dst"), k, rounds = 15)
       .as[(Long, Long)].collect().toMap
     assert(got == want)
-    graft.operators.Ckpt.release(spark)
   }
 
   test("temporalBfs equals brute time-respecting path enumeration") {
@@ -258,7 +256,6 @@ class PropertySpec extends SparkSpec {
       edges.toDF("src", "dst", "ets"), seeds.toDF("id"), maxHops = 3)
       .as[(Long, Long)].collect().toMap
     assert(got == want)
-    graft.operators.Ckpt.release(spark)
   }
 
   test("bloom semi join equals a plain semi join and actually prunes") {
@@ -288,7 +285,6 @@ class PropertySpec extends SparkSpec {
       .minhashLshPairs(docs, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(capped == default && capped.nonEmpty)
-    graft.operators.Ckpt.release(spark)
   }
 
   test("prefix filter theorem: prefixJaccardPairs equals brute on random corpora") {
@@ -309,7 +305,6 @@ class PropertySpec extends SparkSpec {
       assert(pref == brute,
         s"t=$t: missing=${brute -- pref} extra=${pref -- brute}")
     }
-    graft.operators.Ckpt.release(spark)
   }
 
   test("PrefixSum.overKeys equals the single global window on random histograms") {

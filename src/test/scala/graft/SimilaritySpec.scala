@@ -322,7 +322,6 @@ class SimilaritySpec extends SparkSpec {
     val out = Similarity.marginMine(a, b, k = 2, threshold = 1.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3)))
     assert(out.toSeq == Seq((0L, 1L, 2.0), (2L, 3L, 2.0)))
-    graft.operators.Ckpt.release(spark)
   }
 
   test("marginMine hub vector is suppressed by its own neighborhood average") {
@@ -338,7 +337,6 @@ class SimilaritySpec extends SparkSpec {
     assert(out((0L, 1L)) > out((0L, 5L)),
       s"duplicate pair must out-margin the hub pair: $out")
     assert(out((0L, 1L)) > out((2L, 5L)), s"hub pair inflated: $out")
-    graft.operators.Ckpt.release(spark)
   }
 
   test("marginMine bucketed path never pairs across buckets") {
@@ -350,6 +348,5 @@ class SimilaritySpec extends SparkSpec {
       bucketCol = Some("label")).collect()
     // a0 (bucket 7) has no candidates; a2 (bucket 8) pairs only in 8
     assert(out.map(_.getLong(0)).toSet == Set(2L))
-    graft.operators.Ckpt.release(spark)
   }
 }

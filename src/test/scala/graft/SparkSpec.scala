@@ -1,6 +1,8 @@
 package graft
 
+import graft.operators.Ckpt
 import org.apache.spark.sql.SparkSession
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all specs (one JVM-wide session — ScalaTest
@@ -28,6 +30,12 @@ object TestSpark {
   }
 }
 
+/** Each test runs in its own [[Ckpt.scope]]: the checkpoints it makes
+  * are released when it ends, pass or fail. A checkpointed frame must
+  * therefore not outlive the test that forced it. */
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+
+  override def withFixture(test: NoArgTest): Outcome =
+    Ckpt.scope(spark)(super.withFixture(test))
 }

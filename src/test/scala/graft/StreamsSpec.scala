@@ -325,7 +325,6 @@ class StreamsSpec extends SparkSpec {
       assert(perDoc.count(_._2).toLong == batch.getAs[Long]("n_suppressed"),
         "streaming OR-of-bands suppression must equal the batch twin")
       assert(perDoc.filter(!_._2).keys.sum == batch.getAs[Long]("kept_id_sum"))
-      graft.operators.Ckpt.release(spark)
     } finally q.stop()
   }
 
