@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** Session factory with the engine's tuned defaults: AQE (runtime
   * re-planning, skew-join splitting, partition coalescing), shuffle
   * partitions sized to cores (not 200), UTC, UI off, a codegen cache that
-  * holds a pass's working set ([[ReuseConf]]), and the native function
+  * holds a pass's working set ([[SharedConf]]), and the native function
   * extensions registered. Every session in the engine builds through
   * here. */
 object GraftSession {
@@ -16,10 +16,9 @@ object GraftSession {
   private[graft] def shufflePartitions(cores: String): String =
     GraftConf.current.shufflePartitions.fold(cores)(_.toString)
 
-  /** Settings that let warm passes reuse what does not depend on the
-    * data. [[local]] applies them and the test session applies the same
-    * ones: both the codegen cache and the status store are one per JVM,
-    * and the cache reads its size once, on first use.
+  /** Settings that [[local]] and the test session both apply: both the
+    * codegen cache and the status store are one per JVM, and the cache
+    * reads its size once, on first use.
     *
     * `spark.sql.codegen.cache.maxEntries` (Spark's default 100): the LRU
     * of compiled generated classes must hold a pass's whole working set,
@@ -38,12 +37,18 @@ object GraftSession {
     * in the engine reads `statusStore`/`statusTracker`, yet Spark keeps
     * the store, and every finished execution keeps its plan description
     * there until the count is reached. Running jobs, stages and
-    * executions are kept whatever the bound. */
-  val ReuseConf: Map[String, String] = Map(
+    * executions are kept whatever the bound.
+    *
+    * `spark.sql.legacy.parquet.nanosAsLong`: a parquet TIMESTAMP(NANOS)
+    * column, which Spark cannot represent, lands as a raw long that
+    * `Queries.tbl` converts. Setting it here, once per session, keeps
+    * reads free of session-conf writes. */
+  val SharedConf: Map[String, String] = Map(
     "spark.sql.codegen.cache.maxEntries" -> "1000",
     "spark.sql.ui.retainedExecutions" -> "20",
     "spark.ui.retainedJobs" -> "20",
-    "spark.ui.retainedStages" -> "20")
+    "spark.ui.retainedStages" -> "20",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
   /** `periodicGC`: ContextCleaner driver-GC cadence. The 2min default
     * keeps shuffle/broadcast state draining on long-running drivers
@@ -61,7 +66,7 @@ object GraftSession {
     val spark = SparkSession.builder()
       .appName(app)
       .master(master.getOrElse(s"local[$cores]"))
-      .config(ReuseConf)
+      .config(SharedConf)
       .config("spark.sql.shuffle.partitions", shufflePartitions(cores))
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

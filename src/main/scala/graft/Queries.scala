@@ -17,7 +17,8 @@ object Queries {
   /** Read one testdata table (column-pruned, filter-pushdown-friendly).
     * `events.ts` has shipped both as parquet TIMESTAMP(MICROS) (reads
     * natively) and as TIMESTAMP(NANOS) (unrepresentable in Spark — lands
-    * as a raw long under legacy nanosAsLong mode). Branch on the landed
+    * as a raw long under the legacy nanosAsLong mode that
+    * `GraftSession.SharedConf` sets). Branch on the landed
     * type: a LongType column is nanos and gets truncated to microsecond
     * timestamps; a native timestamp is normalized to TIMESTAMP (the file
     * carries no UTC-adjustment flag so Spark infers TIMESTAMP_NTZ, which
@@ -28,7 +29,6 @@ object Queries {
   def tbl(s: SparkSession, dir: String, name: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = s.read.parquet(s"$dir/$name.parquet")
     if (name == "events") df.schema("ts").dataType match {
       case LongType =>

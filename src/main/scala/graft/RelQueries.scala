@@ -3763,8 +3763,8 @@ object RelQueries {
   // over the customer–supplier bipartite graph (an edge where the
   // customer ever ordered from the supplier; nodes encoded cust·2 /
   // supp·2+1 so one long id space carries both). Seeds are every 100th
-  // customer; 3 hops. Per hop one equi-join + distinct + anti-join —
-  // the shuffle is frontier-grain, never path-grain, which is why this
+  // customer; 3 hops. Per hop one frontier⋈edges join feeding one
+  // vertex-grain min aggregate — never path-grain, which is why this
   // survives 100 TB where the oracle's path-enumerating recursive CTE
   // (fine at sf0.01) would explode. Rollup is level-grain (≤4 rows).
   private val q214 = Q(

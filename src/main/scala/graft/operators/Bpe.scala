@@ -14,10 +14,11 @@ import org.apache.spark.sql.functions._
   * aggregate (pair counts, partial map-side combined) plus a narrow
   * per-word column rewrite. The driver holds only the merge table itself
   * (k rows, one bounded 1-row collect per round — the same
-  * driver-coordination shape as the k-means step). The evolving
-  * segmentation is checkpointed per round with scoped release, like
-  * [[Dedup.clusters]]' label iteration, so round r never recomputes
-  * rounds 1..r-1.
+  * driver-coordination shape as the k-means step). Each round's
+  * segmentation is one generation of [[Ckpt.advance]] (a `count` computes
+  * it, then the previous one is freed), like [[Dedup.clusters]]' labels,
+  * so round r never recomputes rounds 1..r-1 and at most two
+  * segmentations are live.
   *
   * Determinism: the argmax pair breaks ties by (count DESC, pair ASC),
   * so the merge sequence is a pure function of the vocabulary.
@@ -69,11 +70,7 @@ object Bpe {
       else {
         val Array(a, b) = top(0).getString(0).split(" ", 2)
         merges += ((a, b, top(0).getLong(1)))
-        val next = Ckpt.local(
-          seg.withColumn("syms", applyMerge(col("syms"), a, b)))
-        next.count()                                   // materialize before releasing parent
-        Ckpt.free(seg)
-        seg = next
+        seg = Ckpt.advance(seg, seg.withColumn("syms", applyMerge(col("syms"), a, b)))(_.count())._1
       }
       r += 1
     }

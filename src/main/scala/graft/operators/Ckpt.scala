@@ -20,8 +20,8 @@ import org.apache.spark.storage.StorageLevel
   *    everything it owns when its body returns or throws;
   *  - otherwise the session owner of its SparkContext, drained by
   *    [[release]].
-  * Iterative operators [[free]] each generation once the next one is
-  * materialized, so a DP loop holds at most two live generations.
+  * Iterative operators step from one generation to the next through
+  * [[advance]], so a loop holds at most two live generations.
   *
   * The owned RDD is read from the checkpoint's own plan (its root is a
   * `LogicalRDD` over exactly the RDD the call persisted), so concurrent
@@ -49,8 +49,8 @@ object Ckpt {
     * call becomes an EAGER `Dataset.checkpoint` to that directory instead
     * of a lazy local checkpoint. This is the fault-tolerant path for the
     * DP-loop families (graph traversals, [[Dedup.clusters]]) on a real
-    * cluster: the in-loop N−2 generation release makes freed local
-    * generations unrecoverable by design (see Graph.scala), which is fine
+    * cluster: the in-loop generation release makes freed local
+    * generations unrecoverable by design (see [[advance]]), which is fine
     * under local[32] but leaves a multi-hour 100 TB graph DP with no
     * executor-loss tolerance. Reliable checkpoints invert that trade —
     * every generation's partitions live as files on durable storage, so
@@ -148,6 +148,35 @@ object Ckpt {
     * generation, or no checkpoint at all — is left as it is. */
   def free(ck: DataFrame): Unit =
     rddId(ck).foreach(ownerFor(ck.sparkSession.sparkContext).drop)
+
+  /** One generation step of an iterative operator: checkpoints `next`,
+    * runs `probe` over the checkpoint, then frees `prev`, and returns the
+    * checkpoint with the probe's result. This is the only place a loop
+    * frees a generation.
+    *
+    * `probe` must be an action that computes EVERY partition of the
+    * checkpoint (a `count`, a full aggregate): a marked lazy checkpoint
+    * caches partitions as a job computes them, so once the probe has run
+    * `next` no longer reads `prev`, and `prev` has no consumer left.
+    * Only `next` itself is truncated by that job (Spark finalizes marked
+    * ancestors only under `spark.checkpoint.checkpointAllMarkedAncestors`,
+    * off by default), so a loop that reads only its last generation holds
+    * at most two live ones, however many rounds it runs.
+    *
+    * Recovery assumption: a freed local generation sits on the
+    * un-truncated recompute chain of the later ones, so a block lost after
+    * the free cannot be recomputed. That is moot in local mode, where
+    * `MEMORY_AND_DISK` blocks spill and never vanish, and on a cluster
+    * `localCheckpoint` already trades executor-loss tolerance for speed.
+    * A deployment that needs that tolerance sets [[reliableDir]]: every
+    * generation is then a file, results are identical (CkptModeSpec), and
+    * freeing it leaves it readable. */
+  def advance[T](prev: DataFrame, next: DataFrame)(probe: DataFrame => T): (DataFrame, T) = {
+    val ck = local(next)
+    val out = probe(ck)
+    free(prev)
+    (ck, out)
+  }
 
   /** Runs `body` — which must include the terminal action over its
     * frames — as the owner of every checkpoint this thread makes inside

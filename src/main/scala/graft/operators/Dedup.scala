@@ -415,7 +415,10 @@ object Dedup {
     * of length L converges in O(log L) rounds rather than O(L); on the
     * clique-like clusters near-dedup produces it is still 1-3 rounds.
     * The standard shuffle-based connected-components shape; no
-    * driver-side graph, only a scalar convergence check per round.
+    * driver-side graph, only a scalar convergence check per round. Each
+    * round's labels are one [[Ckpt.advance]] generation probed by that
+    * check, so at most two label generations are live beside the
+    * symmetrized edge checkpoint.
     *
     * Throws IllegalArgumentException if the checksum has not reached a
     * fixpoint within `maxRounds` rounds (would need a component of
@@ -424,21 +427,21 @@ object Dedup {
     *
     * Input columns (id_a, id_b); output (id, cluster). */
   def clusters(pairs: DataFrame, maxRounds: Int = 20): DataFrame = {
-    // materialize pairs BEFORE the union — otherwise both union branches
-    // re-derive the (expensive) pair pipeline independently
-    val p = Ckpt.local(pairs)
-    val edges = Ckpt.local(
-      p.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .union(p.select(col("id_b").as("src"), col("id_a").as("dst"))))
+    // Both directions in one pass over `pairs`, so each partition of the
+    // lazy edge checkpoint is computed by exactly one task.
+    val edges = Ckpt.local(Graph.symmetrized(pairs, "id_a", "id_b"))
     // Round 1 fused into initialization: label(id) = min(id, neighbors) is
-    // one groupBy over the edge list — no join, no checkpoint round-trip —
-    // and lands exactly where the first propagation round would.
-    var labels = edges.select(col("dst").as("id"), col("src").as("cluster"))
-      .union(edges.select(col("src").as("id"), col("src").as("cluster")))
-      .groupBy("id").agg(min("cluster").as("cluster"))
+    // one groupBy over the edge list (a node labels itself and its
+    // neighbor with its own id), and lands where the first propagation
+    // round would.
+    var labels = edges
+      .select(explode(array(struct(col("dst").as("id"), col("src").as("cluster")),
+        struct(col("src").as("id"), col("src").as("cluster")))).as("l"))
+      .groupBy(col("l.id").as("id")).agg(min(col("l.cluster")).as("cluster"))
     // Labels only ever decrease (min-propagation), so an unchanged label
     // checksum proves a fixpoint — one scalar aggregate per round instead
-    // of a change-detection join.
+    // of a change-detection join; it also computes every partition of
+    // the round's checkpoint.
     def checksum(df: DataFrame): Long =
       df.agg(coalesce(sum("cluster"), lit(0L))).collect()(0).getLong(0)
     var prev = checksum(labels)
@@ -456,11 +459,8 @@ object Dedup {
         .join(labels.select(col("id").as("cluster"), col("cluster").as("c2")),
           "cluster")
         .select(col("id"), col("c2").as("cluster"))
-      val next = Ckpt.local(
-        labels.union(msgs).union(jump)
-          .groupBy("id").agg(min("cluster").as("cluster")))
-      val cur = checksum(next) // materializes this round's checkpoint …
-      Ckpt.free(labels) // … so last round's blocks can go
+      val (next, cur) = Ckpt.advance(labels,
+        labels.union(msgs).union(jump).groupBy("id").agg(min("cluster").as("cluster")))(checksum)
       labels = next
       converged = cur == prev
       prev = cur
@@ -471,10 +471,9 @@ object Dedup {
       s"Dedup.clusters: min-label propagation not at a fixpoint after " +
         s"$maxRounds rounds (component diameter ≳ 2^$maxRounds?) — " +
         "refusing to return unconverged cluster labels")
-    // The final labels are materialized, so the pair/edge checkpoints are
-    // no longer reachable from any future action — free them now. The
-    // final round's blocks stay until the caller's scope ends.
-    Ckpt.free(p)
+    // The final labels are materialized and no longer read the edges, so
+    // the edge checkpoint goes now; the final round's blocks stay until
+    // the caller's scope ends.
     Ckpt.free(edges)
     labels
   }

@@ -3,28 +3,30 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Distributed graph traversal over an edge list — BFS reachability and
-  * bounded cheapest-path, the two relaxations a relational engine can run
-  * without a driver-side graph.
+/** Distributed graph traversal over an edge list, with no driver-side
+  * graph: three bounded monotone-min relaxations that share one loop,
+  * [[relax]] — BFS levels ([[bfsLevels]]), earliest time-respecting
+  * arrival ([[temporalBfs]]) and cheapest path ([[cheapestPath]]) — plus
+  * k-core peeling ([[kcore]]).
   *
-  * Both operators are CONSTANT-DEPTH unrolled plans: `maxHops` is a query
-  * constant (2–4 in practice), so each hop is one equi-join + one
-  * distinct/min-aggregate, checkpointed so hop `k+1` never recomputes hop
-  * `k`'s frontier. Nothing collects to the driver; frontier and visited
-  * sets live as DataFrames partitioned by node id. At 100 TB the per-hop
-  * shuffle is bounded by the true frontier size (BFS) or the vertex set
-  * (Bellman-Ford round), which is the textbook scale shape for
-  * shuffle-based graph traversal (Pregel-as-joins).
+  * Each relaxation is an edge layout plus a candidate rule. The edges are
+  * checkpointed once, hash-partitioned and sorted by `src`; each round
+  * joins the nodes that improved last round to them and merges the
+  * candidates in one vertex-grain aggregate. Only one count per round
+  * reaches the driver. `maxHops` is a query constant (2–4 in practice),
+  * and a round's shuffle is bounded by the improved frontier's out-edges
+  * plus the vertex set: the shape of shuffle-based graph traversal
+  * (Pregel as joins).
   */
 object Graph {
 
   /** Both directions of an undirected pair list in ONE pass — explode a
     * (forward, reverse) struct pair per row. The
     * `sel(a→src).union(sel(b→src))` spelling plans the pair subtree once
-    * PER UNION BRANCH, and for the trade-graph queries that subtree is
-    * the full orders⋈lineitem build (round-14 ProbeJobs: the duplicated
-    * edge-build scan was ~1.5 s of q215's ~4 s warm pass). Extra columns
-    * (e.g. a weight) ride along via `carry`. Same row multiset, so every
+    * PER UNION BRANCH: for the trade-graph queries that subtree is the
+    * full orders⋈lineitem build, and over a lazy checkpoint two tasks
+    * compute each of its partitions. Extra columns (e.g. a weight) ride
+    * along via `carry`. Same row multiset, so every
     * downstream dedup/groupBy/join and the oracle see identical edges.
     * Endpoints of different types are cast to their common type (the one
     * the old union spelling coerced to), since `array(struct(a, b),
@@ -41,77 +43,73 @@ object Graph {
     pairs.select(explode(array(fwd, rev)).as("e")).select("e.*")
   }
 
+  /** The edge list laid out for [[relax]] and [[kcore]]: distinct
+    * (src, dst), hash-partitioned and sorted by `src`, checkpointed.
+    * One exchange: hash(src) already clusters the (src, dst) dedup, so the
+    * dedup aggregates in place. It shuffles raw rows (no map-side
+    * combine), which wins while edge multiplicity is below 2 (the trade
+    * graph's is about 1.02); a caller with heavy parallel-edge
+    * multiplicity should pre-aggregate. */
+  private def distinctEdges(edges: DataFrame): DataFrame = Ckpt.local(
+    edges.select(col("src"), col("dst"))
+      .repartition(col("src")).dropDuplicates("src", "dst")
+      .sortWithinPartitions("src"))
+
+  /** The bounded monotone-min DP. Seeds start at 0. Each round joins last
+    * round's improved nodes (`src`, `v`) to the edge checkpoint `e`, and
+    * `cand` turns the joined rows into candidates (`id`, `_cand`). One
+    * vertex-grain aggregate over the standing values (tagged `_old`) and
+    * the candidates keeps `least(min(_old), min(_cand))` per node and sets
+    * `imp` where that is new or lower. Stops after `maxHops` rounds or the
+    * first round that improves no node; returns (`id`, `v`).
+    *
+    * `e` is hash-partitioned and sorted by `src` before its checkpoint,
+    * which keeps both, so each round's join reads the stored edge
+    * partitions with no exchange and no sort on the big side; a small
+    * delta becomes a broadcast join under AQE.
+    *
+    * Joining only the improved nodes gives the full relaxation's values
+    * round for round: a node that did not change emitted all its
+    * candidates in the round it last improved. With a monotone min, an
+    * empty delta is the fixpoint. The min over at most one non-null value
+    * per side per node does no arithmetic, so values are exact. */
+  private def relax(e: DataFrame, seeds: DataFrame, maxHops: Int)
+                   (cand: DataFrame => DataFrame): DataFrame = {
+    var dist = Ckpt.local(seeds.select(col("id")).distinct()
+      .withColumn("v", lit(0L)).withColumn("imp", lit(true)))
+    var h = 0
+    var improved = 1L
+    while (h < maxHops && improved > 0) {
+      val delta = dist.filter(col("imp")).select(col("id").as("src"), col("v"))
+      val merged = dist.select(col("id"), col("v").as("_old"), lit(null).cast("long").as("_cand"))
+        .union(cand(e.join(delta, "src"))
+          .select(col("id"), lit(null).cast("long").as("_old"), col("_cand")))
+        .groupBy("id")
+        .agg(min(col("_old")).as("_old"), min(col("_cand")).as("_cand"))
+        .select(col("id"), least(col("_cand"), col("_old")).as("v"),
+          (col("_old").isNull ||
+            (col("_cand").isNotNull && col("_cand") < col("_old"))).as("imp"))
+      val (next, n) = Ckpt.advance(dist, merged)(_.filter(col("imp")).count())
+      dist = next
+      improved = n
+      h += 1
+    }
+    dist.select("id", "v")
+  }
+
   /** Min-hop level of every node reachable from `seeds` within `maxHops`
     * hops of the directed edge list `edges` (columns `src`, `dst`; pass
     * both directions for an undirected graph). `seeds` carries column
     * `id`. Output: (id, level) with level = min #hops in [0, maxHops].
     *
-    * FUSED HOP (round 15, guide §2.4): each hop is frontier ⋈ edges
-    * (shuffle on the frontier), then ONE vertex-grain aggregate —
-    * `union(visited, raw dsts@h) groupBy id min(level)` — which performs
-    * the dst dedup, the already-visited suppression, and the visited
-    * merge in a single exchange. The pre-r15 spelling ran the same hop
-    * as THREE vertex-grain passes (distinct on dst, anti-join against a
-    * growing union of per-hop checkpoints, lazy union), shuffling the
-    * visited set twice per hop and re-scanning h checkpoint relations
-    * at hop h. min(level) gives the BFS minimum exactly: a node already
-    * visited carries a level < h, a new node only the fresh h.
-    *
-    * One checkpoint per hop (the merged visited relation); hop N's
-    * count() materializes it, after which generation N−1 has no
-    * remaining consumer and is released in-loop — live checkpoint
-    * generations are ≤2 regardless of depth (the pre-r15 code kept
-    * every per-hop frontier alive to session release because the final
-    * union read them all; the fused visited relation is self-contained). */
-  def bfsLevels(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
-    // CO-LOCATED EDGE LAYOUT (round 8): dropDuplicates leaves the edge
-    // relation hash-partitioned by (src, dst), so every hop's join used
-    // to RE-SHUFFLE the whole edge list by src — the dominant cost at
-    // the sf10 scale point (the frontier is small; the edges are not).
-    // Repartition+sort by src ONCE before the checkpoint:
-    // localCheckpoint preserves outputPartitioning/outputOrdering, so
-    // every subsequent hop joins the stored, already-sorted edge
-    // partitions with zero exchange and zero sort on the big side —
-    // the same reasoning as bucketing a fact table by its join key.
-    // ONE exchange, not two (round 14): hash(src) satisfies the
-    // (src, dst) dedup's clustered distribution, so repartition FIRST
-    // and the dropDuplicates aggregates in place — the old
-    // dedup-then-repartition spelling shuffled the full edge list twice.
-    // Trade acknowledged (guide §2.3 vs §2.4): repartition-first forgoes
-    // map-side combining below the exchange, so it shuffles RAW rows —
-    // a win whenever edge multiplicity m < 2 (one exchange of N beats
-    // two of N/m). The trade graph measures m ≈ 1.02 (600k raw vs 587k
-    // distinct (c,s) at sf0.1); a caller with heavy parallel-edge
-    // multiplicity should pre-aggregate before calling.
-    val e = Ckpt.local(
-      edges.select(col("src"), col("dst"))
-        .repartition(col("src")).dropDuplicates("src", "dst")
-        .sortWithinPartitions("src"))
-    var visited = Ckpt.local(
-      seeds.select(col("id")).distinct().withColumn("level", lit(0L)))
-    var h = 1
-    var exhausted = false
-    while (h <= maxHops && !exhausted) {
-      // nodes first seen last hop ARE the frontier — a filter over the
-      // cached visited checkpoint, no separate frontier relation
-      val frontier = visited.filter(col("level") === lit(h - 1L))
-        .select(col("id").as("src"))
-      val cand = e.join(frontier, "src")
-        .select(col("dst").as("id"), lit(h.toLong).as("level"))
-      val nv = Ckpt.local(
-        visited.select("id", "level").union(cand)
-          .groupBy("id").agg(min(col("level")).as("level")))
-      // An empty new-node set means every remaining hop is a no-op —
-      // skip them (the result is the fixpoint either way; the count also
-      // materializes this hop's merged checkpoint before the next hop —
-      // and the release below — touches it). One scalar action per hop.
-      exhausted = nv.filter(col("level") === lit(h.toLong)).count() == 0
-      Ckpt.free(visited)
-      visited = nv
-      h += 1
-    }
-    visited
-  }
+    * A BFS level is the unit-weight min DP: a node's first discovery is
+    * its minimum, and the improved nodes are exactly the new frontier.
+    * The raw (dst, v + 1) rows go straight into [[relax]]'s merge with no
+    * pre-aggregate, so a hop stays one vertex-grain exchange. */
+  def bfsLevels(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame =
+    relax(distinctEdges(edges), seeds, maxHops)(
+      _.select(col("dst").as("id"), (col("v") + 1L).as("_cand")))
+      .select(col("id"), col("v").as("level"))
 
   /** K-CORE decomposition by fixed-round peeling: each round drops every
     * node whose degree among the still-alive nodes is < `k`; after
@@ -152,13 +150,7 @@ object Graph {
     // instead fixes sf10 but doubles sf3 — the node-grain broadcast is
     // the right trade until dead sets stop fitting the driver, which is
     // a graph 100× beyond this family's node counts.)
-    // one exchange, not two — see bfsLevels (hash(src) already
-    // clusters the (src, dst) dedup)
-    val e0 = Ckpt.local(
-      edges.select(col("src"), col("dst"))
-        .repartition(col("src")).dropDuplicates("src", "dst")
-        .sortWithinPartitions("src"))
-    var e = e0
+    var e = distinctEdges(edges)
     def deg(g: DataFrame): DataFrame =
       g.groupBy("src").agg(count(lit(1)).as("deg"))
     (1 to rounds).foreach { _ =>
@@ -184,152 +176,28 @@ object Graph {
     * exact — no path enumeration. Each round is one shuffle on src +
     * one min per dst, the [[cheapestPath]] shape with the temporal
     * usability predicate in the join. */
-  def temporalBfs(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
-    // src-partitioned + sorted once — every round's delta join then
-    // reads the stored edge partitions with no exchange (see bfsLevels).
-    val e = Ckpt.local(
-      edges.select(col("src"), col("dst"), col("ets").cast("long").as("ets"))
-        .repartition(col("src")).sortWithinPartitions("src"))
-    // DELTA-FRONTIER rounds (round 8): only nodes whose arrival CHANGED
-    // last round can open new edges (an unchanged src already emitted all
-    // its candidates the round it last improved), so each round joins the
-    // delta — not the full arrival relation — against the edge list.
-    // Results are round-for-round identical to the full relaxation; the
-    // per-round cost is bounded by the changed frontier's out-edges, and
-    // once the delta is small AQE plans it as a broadcast join (no edge
-    // shuffle at all). The empty-delta exit is the same fixpoint proof as
-    // before (min-arrival is monotone), now at delta grain.
-    // FUSED ROUND + scoped release — see cheapestPath for the merge
-    // derivation and the recovery assumption. Live checkpoint
-    // generations are ≤2.
-    var arr = Ckpt.local(
-      seeds.select(col("id")).distinct()
-        .withColumn("arr", lit(0L)).withColumn("imp", lit(true)))
-    var h = 0
-    var done = false
-    while (h < maxHops && !done) {
-      val delta = arr.filter(col("imp"))
-        .select(col("id").as("src"), col("arr"))
-      val cand = e.join(delta, "src")
-        .filter(col("ets") >= col("arr"))
-        .groupBy(col("dst").as("id")).agg(min(col("ets")).as("_cand"))
-      val merged = Ckpt.local(
-        arr.select(col("id"), col("arr").as("_old"),
-            lit(null).cast("long").as("_cand"))
-          .union(cand.select(col("id"),
-            lit(null).cast("long").as("_old"), col("_cand")))
-          .groupBy("id")
-          .agg(min(col("_old")).as("_old"), min(col("_cand")).as("_cand"))
-          .select(col("id"), least(col("_cand"), col("_old")).as("arr"),
-            (col("_old").isNull ||
-              (col("_cand").isNotNull && col("_cand") < col("_old"))).as("imp")))
-      // the count also materializes this round's merged checkpoint
-      // (every partition — filter+count is a full scan) before the
-      // previous generation is released below
-      done = merged.filter(col("imp")).count() == 0
-      Ckpt.free(arr)
-      arr = merged
-      h += 1
-    }
-    arr.select("id", "arr")
-  }
+  def temporalBfs(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame =
+    relax(
+      Ckpt.local(edges.select(col("src"), col("dst"), col("ets").cast("long").as("ets"))
+        .repartition(col("src")).sortWithinPartitions("src")),
+      seeds, maxHops)(
+      _.filter(col("ets") >= col("v"))
+        .groupBy(col("dst").as("id")).agg(min(col("ets")).as("_cand")))
+      .select(col("id"), col("v").as("arr"))
 
   /** Cheapest cost to reach each node from `seeds` using at most
     * `maxHops` weighted edges (`src`, `dst`, `w` — LONG weights so the
     * min is order-independent and exactly portable). `seeds`: column
     * `id`. Output: (id, cost) — the bounded Bellman-Ford relaxation.
-    *
-    * Per round: cost ⋈ edges on src → candidate dst costs, union with
-    * the standing costs, min per node. Unlike BFS the frontier does not
-    * shrink (a cheaper path may revisit a settled node), so each round
-    * is vertex-grain — still one shuffle per round, `maxHops` rounds.
-    * Rounds are lazily checkpointed and each is freed once the next is
-    * materialized; the edge list and the final round belong to the
-    * caller's [[Ckpt.scope]] (constant depth). */
-  def cheapestPath(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
-    // src-partitioned + sorted once — every round's delta join then
-    // reads the stored edge partitions with no exchange (see bfsLevels).
-    // one exchange, not two — see bfsLevels (hash(src) already
-    // clusters the (src, dst) min-weight aggregate)
-    val e = Ckpt.local(
-      edges.repartition(col("src"))
+    * Parallel edges keep their minimum weight, aggregated in place after
+    * the one exchange on `src`; a round's candidates are min(v + w) per
+    * dst. */
+  def cheapestPath(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame =
+    relax(
+      Ckpt.local(edges.repartition(col("src"))
         .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
-        .sortWithinPartitions("src"))
-    // DELTA-FRONTIER Bellman-Ford (round 8): a src whose cost did not
-    // change last round re-derives only candidates already merged in an
-    // earlier round, so relaxing it again is pure waste — each round
-    // joins only last round's IMPROVED nodes against the edge list.
-    // Round-for-round identical results to the full relaxation; per-round
-    // work is bounded by the changed frontier's out-edges instead of the
-    // whole vertex set, and a small delta becomes a broadcast join under
-    // AQE (the sf3-measured 3.06×-for-3×-data asymptote came from the
-    // full-relation rounds). Empty delta ⇒ fixpoint (monotone min), exit.
-    // FUSED ROUND (round 15, guide §2.4): the round's merge is ONE
-    // vertex-grain aggregate — `union(costs tagged _old, candidates
-    // tagged _cand) groupBy id` — whose min(_old)/min(_cand) pair yields
-    // the new cost (least of the two) AND the improved flag
-    // (_old null | _cand < _old) in the same pass. The pre-r15 spelling
-    // ran TWO vertex-grain passes per round (improved = cand ⋈ costs
-    // left-join filter; new costs = costs anti-join improved ∪ improved)
-    // with two checkpoints, shuffling the costs relation twice; the
-    // fused round shuffles it once and checkpoints once. min over the
-    // ≤1 non-null value per side per id is exact — no arithmetic
-    // changes, so every path cost is bit-identical.
-    // SCOPED GENERATION RELEASE (round 12, VERDICT r11 #2): without it
-    // every round's checkpoints stay live until the caller's scope
-    // ends — vertex-grain generations whose
-    // INTRA-pass working set OOMed a 24 g heap at sf10 even after
-    // blocking release flattened the cross-pass floor. The DP only ever
-    // reads generation N−1: round N's filter(imp).count() computes EVERY
-    // partition of merged(N) (a filter+count is a full scan, and a
-    // marked localCheckpoint RDD caches partitions as they are computed)
-    // — only merged(N) itself is lineage-FINALIZED by the job
-    // (doCheckpoint recurses to ancestors only under
-    // spark.checkpoint.checkpointAllMarkedAncestors, default false;
-    // ADVICE r12) — so merged(N−1), both the costs it fed and the delta
-    // filtered from it, has no remaining CONSUMER and is released inside
-    // the loop: live generations are ≤2 regardless of maxHops (≤4
-    // pre-r15, when improved and the anti-join∪union costs were separate
-    // generations). Recovery assumption, stated plainly: released
-    // generations sit on un-truncated recompute chains of later ones, so
-    // a lost block after release is NOT recomputable — irrelevant in
-    // local mode (MEMORY_AND_DISK blocks spill, never vanish), and moot
-    // on a cluster because localCheckpoint itself trades executor-loss
-    // tolerance for speed (Spark's own contract). A fault-tolerant
-    // cluster deployment sets SPARK_GRAFT_CKPT_DIR (round 14, VERDICT
-    // r13 #2): Ckpt then checkpoints every generation EAGERLY to durable
-    // storage, results are identical (CkptModeSpec), and the same scoped
-    // release discipline becomes actually safe — released generations
-    // live as files, not lost blocks. Same discipline as Dedup.clusters
-    // and (since round 15) bfsLevels/temporalBfs.
-    var costs = Ckpt.local(
-      seeds.select(col("id")).distinct()
-        .withColumn("cost", lit(0L)).withColumn("imp", lit(true)))
-    var h = 0
-    var done = false
-    while (h < maxHops && !done) {
-      val delta = costs.filter(col("imp"))
-        .select(col("id").as("src"), col("cost"))
-      val cand = e.join(delta, "src")
-        .groupBy(col("dst").as("id"))
-        .agg(min(col("cost") + col("w")).as("_cand"))
-      val merged = Ckpt.local(
-        costs.select(col("id"), col("cost").as("_old"),
-            lit(null).cast("long").as("_cand"))
-          .union(cand.select(col("id"),
-            lit(null).cast("long").as("_old"), col("_cand")))
-          .groupBy("id")
-          .agg(min(col("_old")).as("_old"), min(col("_cand")).as("_cand"))
-          .select(col("id"), least(col("_cand"), col("_old")).as("cost"),
-            (col("_old").isNull ||
-              (col("_cand").isNotNull && col("_cand") < col("_old"))).as("imp")))
-      // the count also materializes this round's merged checkpoint
-      // before the previous generation is released below
-      done = merged.filter(col("imp")).count() == 0
-      Ckpt.free(costs)
-      costs = merged
-      h += 1
-    }
-    costs.select("id", "cost")
-  }
+        .sortWithinPartitions("src")),
+      seeds, maxHops)(
+      _.groupBy(col("dst").as("id")).agg(min(col("v") + col("w")).as("_cand")))
+      .select(col("id"), col("v").as("cost"))
 }

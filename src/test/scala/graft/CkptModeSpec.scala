@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Ckpt, Dedup, Graph}
+import graft.operators.{Bpe, Ckpt, Dedup, Graph}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -11,10 +11,11 @@ import org.apache.spark.sql.execution.LogicalRDD
   * released localCheckpoint generations unrecoverable by design. This
   * spec pins the contract that makes the mode trustworthy:
   *
-  *  - RESULT EQUIVALENCE: temporalBfs, cheapestPath, and Dedup.clusters
-  *    return identical rows under both modes on fixture graphs whose
-  *    loops run several generations (so the scoped release actually
-  *    fires in the local leg).
+  *  - RESULT EQUIVALENCE: every caller of `Ckpt.advance` — bfsLevels,
+  *    temporalBfs, cheapestPath, Dedup.clusters and Bpe.train — returns
+  *    identical rows under both modes on fixtures whose loops run several
+  *    generations (so the in-loop release actually fires in the local
+  *    leg).
   *  - MECHANISM: the reliable leg registers NO persistent RDDs (nothing
   *    for an executor loss to take) and writes real checkpoint files
   *    under the directory; `Ckpt.free` leaves such a generation readable.
@@ -89,6 +90,24 @@ class CkptModeSpec extends SparkSpec {
     assert(cost(6L) == 6L)
     val arr = local._1.map(r => r.head -> r(1)).toMap
     assert(!arr.contains(9L), s"time-respecting rule must block node 9: $arr")
+  }
+
+  test("bfsLevels and Bpe.train are mode-equivalent: reliable ≡ local results") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val words = Seq(("low", 5L), ("lower", 2L), ("newest", 6L), ("widest", 3L))
+      .toDF("w", "freq")
+    def run() = {
+      val (seg, merges) = Bpe.train(words, "w", "freq", k = 4)
+      (rows(Graph.bfsLevels(edges, seeds, maxHops = 10)), rows(seg), merges)
+    }
+    val local = inLocalMode(run())
+    val reliable = inReliableMode(dir)(run())
+    assert(reliable._1 == local._1, "bfsLevels diverged across ckpt modes")
+    assert(reliable._2 == local._2, "Bpe.train segmentation diverged across ckpt modes")
+    assert(reliable._3 == local._3, "Bpe.train merges diverged across ckpt modes")
+    // the chain is walked end to end and all four merges happened
+    assert(local._1.map(r => r.head -> r(1)).toMap.apply(6L) == 6L)
+    assert(local._3.size == 4)
   }
 
   test("reliable mode holds no block-manager state and writes durable files") {

@@ -9,8 +9,9 @@ import scala.util.matching.Regex
 
 /** Source rules over `src/main` that keep one mechanism in one place:
   * only [[GraftConf]] reads the process environment, so every knob keeps
-  * one name, one parser and one default; and only `Ckpt` checkpoints, so
-  * every checkpoint has an owner that releases it. */
+  * one name, one parser and one default; only `Ckpt` checkpoints, so
+  * every checkpoint has an owner that releases it; and iterative
+  * operators free their generations only through `Ckpt.advance`. */
 class EnvGuardSpec extends AnyFunSuite {
   private lazy val sources: List[Path] = {
     val root = Paths.get("src", "main")
@@ -39,5 +40,14 @@ class EnvGuardSpec extends AnyFunSuite {
     assert(found.isEmpty,
       "checkpoint through graft.operators.Ckpt, which owns and releases it:\n" +
         found.mkString("\n"))
+  }
+
+  test("only Ckpt.advance frees a loop generation in src/main") {
+    // the one hand-written free left is Dedup.clusters' post-loop release
+    // of its edge checkpoint, which is no generation
+    val found = offenders("""Ckpt\.free\(""".r, "Ckpt.scala")
+    assert(found.size == 1 && found.head.contains("Dedup.scala") &&
+      found.head.contains("Ckpt.free(edges)"),
+      "step an iterative operator's generations with Ckpt.advance:\n" + found.mkString("\n"))
   }
 }

@@ -63,7 +63,11 @@ class SourcesSpec extends SparkSpec {
     val asInst  = writeAs(timestamp_micros(col("us")))
 
     val reads = Seq(asNanos, asNtz, asInst).map { dir =>
+      // a read writes no session conf: the nanos mode is a session default
+      val conf = spark.conf.getAll
       val df = Queries.tbl(spark, dir, "events")
+      val changed = spark.conf.getAll.toSet diff conf.toSet
+      assert(changed.isEmpty, s"tbl set session conf $changed, dir=$dir")
       assert(df.schema("ts").dataType == TimestampType, s"dir=$dir")
       df.select(col("event_id"),
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("sec"),

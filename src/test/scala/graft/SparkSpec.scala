@@ -17,10 +17,10 @@ object TestSpark {
       // a native expression whose generated code does not compile must
       // fail the suite, not silently run interpreted
       .config("spark.sql.codegen.fallback", "false")
-      // the engine's codegen cache size and status-store retention: the
-      // cache is one per JVM and sized on first use, so the recompile
-      // spec in TransformsSpec measures the cap the engine really runs with
-      .config(GraftSession.ReuseConf)
+      // the engine's shared settings: the codegen cache is one per JVM
+      // and sized on first use, so the recompile spec in TransformsSpec
+      // measures the cap the engine really runs with
+      .config(GraftSession.SharedConf)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
       .getOrCreate()
