@@ -16,9 +16,10 @@ object GraftSession {
   private[graft] def shufflePartitions(cores: String): String =
     GraftConf.current.shufflePartitions.fold(cores)(_.toString)
 
-  /** Settings that [[local]] and the test session both apply: both the
-    * codegen cache and the status store are one per JVM, and the cache
-    * reads its size once, on first use.
+  /** Settings that [[local]] and the test session both apply: the
+    * codegen cache, the status store, the memory manager and the AQE
+    * stage pools are each one per JVM, and the cache and the pools read
+    * their size once, on first use.
     *
     * `spark.sql.codegen.cache.maxEntries` (Spark's default 100): the LRU
     * of compiled generated classes must hold a pass's whole working set,
@@ -42,13 +43,46 @@ object GraftSession {
     * `spark.sql.legacy.parquet.nanosAsLong`: a parquet TIMESTAMP(NANOS)
     * column, which Spark cannot represent, lands as a raw long that
     * `Queries.tbl` converts. Setting it here, once per session, keeps
-    * reads free of session-conf writes. */
+    * reads free of session-conf writes.
+    *
+    * `spark.buffer.pageSize` (Spark derives nextPow2(execution pool /
+    * cores / 16) clamped to 1–64 MiB: 32 MiB on a 4 GiB heap, 64 MiB on
+    * the 24–48 GiB scale heaps): the memory manager sizes every Tungsten
+    * page by it, and an `UnsafeHashedRelation` (a broadcast hash join
+    * whose keys do not pack into one long, e.g. `Dedup.capBucketsScoped`'s
+    * `(band int, key bigint)` exclusion) allocates one whole page however
+    * few rows it holds, on the driver and again on every executor that
+    * reads the broadcast. At 32 MiB each q22 pass kept a 32.1 MiB
+    * broadcast value for a ~34 KiB relation until the next driver GC. A
+    * task's page table holds at most 8192 pages, so the page size also
+    * caps one task's execution memory: 4 MiB allows 32 GiB, above the
+    * ~28.6 GiB unified region of a 48 GiB heap (1 MiB would cap a task
+    * at 8 GiB). Hash aggregation maps and sorters grow page by page
+    * either way.
+    *
+    * The three AQE stage pools (`shuffle-exchange`, `broadcast-exchange`,
+    * `ResultQueryStageExecution`; Spark's caps 1024, 128 and 1024) are
+    * cached thread pools whose core size equals their cap, with a 60 s
+    * keep-alive: every stage submission within a minute of the last one
+    * starts a new thread until the cap, each holding its thread-local
+    * state on the heap: 48 small actions in one JVM left 48 live
+    * `shuffle-exchange` threads, and the graftbench `queries` run's held
+    * heap grew ~0.95 MB a pass (~0.03 MB capped). 16 is Spark's own cap
+    * for the subquery pool. A smaller cap only queues submissions: a shuffle
+    * task submits its map stage and returns without waiting, a broadcast
+    * or result task runs a job over child stages that AQE materialized
+    * before submitting it, and the subqueries either may wait on run in
+    * the separate subquery pool. */
   val SharedConf: Map[String, String] = Map(
     "spark.sql.codegen.cache.maxEntries" -> "1000",
     "spark.sql.ui.retainedExecutions" -> "20",
     "spark.ui.retainedJobs" -> "20",
     "spark.ui.retainedStages" -> "20",
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.buffer.pageSize" -> "4m",
+    "spark.sql.shuffleExchange.maxThreadThreshold" -> "16",
+    "spark.sql.broadcastExchange.maxThreadThreshold" -> "16",
+    "spark.sql.resultQueryStage.maxThreadThreshold" -> "16")
 
   /** `periodicGC`: ContextCleaner driver-GC cadence. The 2min default
     * keeps shuffle/broadcast state draining on long-running drivers

@@ -731,16 +731,11 @@ object Dedup {
     * edge list (no self-join); each iteration is one shuffle join
     * (edges ⋈ ranks on src) + one groupBy (dst). Rank state is O(|V|)
     * rows; nothing collects to the driver. The pair pipeline upstream is
-    * checkpointed once (not re-derived 1+iters times); its blocks belong
-    * to the caller's [[Ckpt.scope]]. */
+    * read once, into the degree checkpoint (not re-derived 1+iters
+    * times); its blocks belong to the caller's [[Ckpt.scope]]. */
   def pageRank(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
                iters: Int = 3, damping: Double = 0.85): DataFrame = {
-    val p = Ckpt.local(pairs.select(col(idA).cast(LongType).as("id_a"),
-      col(idB).cast(LongType).as("id_b")))
-    val edges = p.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(p.select(col("id_b").as("src"), col("id_a").as("dst")))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("src")
-    val withDeg = Ckpt.local(edges.withColumn("deg", count(lit(1)).over(w)))
+    val withDeg = Ckpt.local(rankEdges(pairs, idA, idB))
     var ranks = withDeg.select(col("src").as("id")).distinct()
       .withColumn("rank", lit(1.0))
     for (_ <- 1 to iters) {
@@ -755,6 +750,14 @@ object Dedup {
     }
     ranks.select(col("id").as("doc_id"), Det.roundAt(col("rank"), 6).as("pagerank"))
       .orderBy(desc("pagerank"), col("doc_id"))
+  }
+
+  /** [[pageRank]]'s edge list: both directions of every pair, from one
+    * pass over `pairs`, with each source's out-degree `deg`. */
+  private[graft] def rankEdges(pairs: DataFrame, idA: String, idB: String): DataFrame = {
+    val ids = pairs.select(col(idA).cast(LongType).as("id_a"), col(idB).cast(LongType).as("id_b"))
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("src")
+    Graph.symmetrized(ids, "id_a", "id_b").withColumn("deg", count(lit(1)).over(w))
   }
 
   /** EXACT set-similarity join via prefix filtering (AllPairs/PPJoin

@@ -126,11 +126,13 @@ object Sinks {
   def parquetPath(outDir: String, name: String): String = s"$outDir/raw_${name}_transformado"
 
   /** Primary sink: parquet per table, at [[parquetPath]]. Returns the
-    * rows written, counted by the write job itself. */
-  def parquet(df: DataFrame, outDir: String, name: String): Long = {
-    val (observed, rows) = observeRows(sinkForm(df))
+    * rows written, counted by the write job itself, and the schema
+    * written. */
+  def parquet(df: DataFrame, outDir: String, name: String): (Long, StructType) = {
+    val sf = sinkForm(df)
+    val (observed, rows) = observeRows(sf)
     observed.write.mode("overwrite").parquet(parquetPath(outDir, name))
-    rows()
+    (rows(), sf.schema)
   }
 
   /** CSV sink — the DISTRIBUTED sibling of the reference's Excel export
@@ -203,11 +205,14 @@ object Sinks {
            props: java.util.Properties = new java.util.Properties): Unit =
     sinkForm(df).write.mode("overwrite").jdbc(url, table, props)
 
-  /** S7 verification (carga.py:95-121): read every sink back, count. */
-  def verify(spark: SparkSession, outDir: String, names: Seq[String]): Map[String, Long] =
-    names.map { n =>
-      n -> spark.read.parquet(parquetPath(outDir, n)).count()
-    }.toMap
+  /** S7 verification (carga.py:95-121): read every sink back, count.
+    * Each table is read with the schema [[parquet]] wrote, so the read
+    * runs no schema-inference job. */
+  def verify(spark: SparkSession, outDir: String,
+             written: Map[String, StructType]): Map[String, Long] =
+    written.map { case (n, schema) =>
+      n -> spark.read.schema(schema).parquet(parquetPath(outDir, n)).count()
+    }
 }
 
 /** E1 orchestration (main.py:224-263): extract → transform → load →
@@ -265,11 +270,9 @@ object Pipeline {
     // both counts ride the sink's write job as observed metrics
     val observed = extracted.map { case (n, df) => n -> Sinks.observeRows(df) }
     val transformed = Transforms.all(observed.map { case (n, (df, _)) => n -> df })
-    val counts = transformed.map { case (n, df) =>
-      val loaded = Sinks.parquet(df, outDir, n)
-      n -> (observed(n)._2(), loaded)
-    }
-    val verified = Sinks.verify(spark, outDir, transformed.keys.toSeq)
+    val written = transformed.map { case (n, df) => n -> Sinks.parquet(df, outDir, n) }
+    val counts = written.map { case (n, (loaded, _)) => n -> (observed(n)._2(), loaded) }
+    val verified = Sinks.verify(spark, outDir, written.map { case (n, (_, schema)) => n -> schema })
     val report = Report(counts, verified, outDir)
     Files.createDirectories(Paths.get(outDir))
     Files.writeString(Paths.get(s"$outDir/reporte_etl.json"), report.toJson)

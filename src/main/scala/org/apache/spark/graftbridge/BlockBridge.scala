@@ -1,7 +1,7 @@
 package org.apache.spark.graftbridge
 
 import org.apache.spark.SparkContext
-import org.apache.spark.storage.RDDBlockId
+import org.apache.spark.storage.{BroadcastBlockId, RDDBlockId}
 
 /** Bridge into `private[spark]` storage APIs (BlockManagerMaster), placed
   * under an `org.apache.spark` subpackage the same way Spark's own
@@ -31,6 +31,21 @@ object BlockBridge {
     * actually dropped them). */
   def rddBlocksFor(sc: SparkContext, rddIds: Set[Int]): Seq[RDDBlockId] =
     rddBlocks(sc).filter(b => rddIds.contains(b.rddId))
+
+  /** The estimated size of every broadcast VALUE (not its serialized
+    * pieces) the driver's memory store holds, by block. Broadcast values
+    * are put without telling the master, so this asks the driver's own
+    * block manager. */
+  def broadcastValueSizes(sc: SparkContext): Map[BroadcastBlockId, Long] = {
+    val bm = sc.env.blockManager
+    bm.getMatchingBlockIds(_.isBroadcast).collect {
+      case b: BroadcastBlockId if b.field.isEmpty && bm.memoryStore.contains(b) =>
+        b -> bm.memoryStore.getSize(b)
+    }.toMap
+  }
+
+  /** The Tungsten page size the driver's memory manager hands out. */
+  def pageSizeBytes(sc: SparkContext): Long = sc.env.memoryManager.pageSizeBytes
 
   /** Drain the async listener bus — lets a measurement listener
     * ([[graft.ProbeJobs]]) read complete job/stage records right after an

@@ -359,4 +359,13 @@ class PlanShapeSpec extends SparkSpec {
     assert(p.contains("graft_token_eq_positions") && p.contains("graft_best_window_enc"),
       s"q169 lost its native kernels:\n$p")
   }
+
+  test("pageRank reads its pairs once: one scan, no Union under the degree window") {
+    import org.apache.spark.sql.functions.col
+    val pairs = spark.range(20).select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
+    val p = graft.operators.Dedup.rankEdges(pairs, "id_a", "id_b").queryExecution.executedPlan.toString
+    assert("Range \\(".r.findAllIn(p).size == 1, s"pageRank scans its pairs more than once:\n$p")
+    assert(p.contains("Window") && !p.contains("Union"),
+      s"pageRank's degree window reads a Union of the pairs:\n$p")
+  }
 }

@@ -8,17 +8,18 @@
 # drift-valid protocol on this box (see SCALE.md), min-of-legs arbiter.
 #
 # Usage: tools/ab_ckpt_mode.sh <sfDir> <q1,q2,...> <outdir> [xmx]
+#   (xmx defaults to graft_java.sh's Tier-1 heap; every core is used)
 #   e.g. tools/ab_ckpt_mode.sh /root/testdata/sf0.1 \
 #        q39_dedup_clusters,q215_cheapest_route,q227_temporal_reach /tmp/ckpt_ab
 set -euo pipefail
 cd "$(git rev-parse --show-toplevel)"
-SF="${1:?sf dir}"; QS="${2:?query list}"; OUT="${3:?outdir}"; XMX="${4:-16g}"
+SF="${1:?sf dir}"; QS="${2:?query list}"; OUT="${3:?outdir}"; XMX="${4:-auto}"
 mkdir -p "$OUT"
 rm -f "$OUT"/L_*.json "$OUT"/R_*.json "$OUT"/*.log "$OUT"/failures
 
 leg() { # $1=tag $2=ckptdir(optional; empty = local mode)
   local tag="$1" dir="${2:-}"
-  local env=(SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS=32
+  local env=(SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS="$(nproc)"
              SPARK_GRAFT_BENCH_ONLY="$QS" SPARK_GRAFT_WARM_RUNS="${AB_WARM_RUNS:-3}"
              SPARK_GRAFT_BENCH_OUT="$OUT/$tag.json")
   [ -n "$dir" ] && { rm -rf "$dir"; env+=(SPARK_GRAFT_CKPT_DIR="$dir"); }

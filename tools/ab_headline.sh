@@ -9,23 +9,32 @@
 # min-of-legs per query per side (min is the right estimator for a
 # lower-bounded timing corrupted by one-sided noise).
 #
-# Usage: ab_headline.sh <old-classes-dir> <q1,q2,...> <outdir>
+# Both legs launch through graft_java.sh (Spark's full module options)
+# on every core of the box, with the Tier-1 heap unless XMX is set.
+#
+# Usage: ab_headline.sh <old-classes-dir> <q1,q2,...> <outdir> <sfDir>
 set -euo pipefail
-OLD="${1:?old classes dir}"; QS="${2:?query list}"; OUT="${3:?outdir}"
-NEW=/root/repo/target/scala-2.13/classes
+cd "$(git rev-parse --show-toplevel)"
+OLD="$(realpath "${1:?old classes dir}")"; QS="${2:?query list}"; OUT="${3:?outdir}"
+SF="${4:?sf dir}"
 mkdir -p "$OUT"
-run() { # $1=classes $2=tag
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
+# graft_java.sh runs the classes at ../target/scala-2.13/classes from its
+# own directory, so the old leg gets that layout around the old classes
+OLDROOT="$(mktemp -d)"; trap 'rm -rf "$OLDROOT"' EXIT
+mkdir -p "$OLDROOT/tools" "$OLDROOT/target/scala-2.13"
+ln -s "$OLD" "$OLDROOT/target/scala-2.13/classes"
+ln -s "$PWD/tools/graft_java.sh" "$PWD/tools/java_opts.txt" "$OLDROOT/tools/"
+run() { # $1=launcher $2=tag
+  SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS="$(nproc)" \
   SPARK_GRAFT_BENCH_ONLY="$QS" SPARK_GRAFT_WARM_RUNS=5 \
   SPARK_GRAFT_BENCH_OUT="$OUT/$2.json" \
-  java -Xmx16g --add-exports java.base/sun.nio.ch=ALL-UNNAMED \
-    -cp "/opt/spark/jars/*:$1" graft.Bench > "$OUT/$2.log" 2>&1
+    "$1" "${XMX:-auto}" graft.Bench > "$OUT/$2.log" 2>&1
   echo "leg $2 done"
 }
-run "$OLD" A1
-run "$NEW" B1
-run "$OLD" A2
-run "$NEW" B2
+run "$OLDROOT/tools/graft_java.sh" A1
+run tools/graft_java.sh B1
+run "$OLDROOT/tools/graft_java.sh" A2
+run tools/graft_java.sh B2
 python3 - "$OUT" <<'EOF'
 import json, sys, os
 out = sys.argv[1]

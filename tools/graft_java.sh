@@ -9,8 +9,13 @@
 # round 10 on q227 sf10 @ 24g — NOT an engine bug, a launcher gap; any
 # memory-pressured run can hit it).
 #
-# Usage: tools/graft_java.sh <Xmx> <MainClass> [args...]   (env knobs pass through)
+# Usage: tools/graft_java.sh <Xmx|auto> <MainClass> [args...]   (env knobs pass through)
+# `auto` sizes the heap by the Tier-1 rule: half the box's memory,
+# clamped to 2-8 GiB.
 set -euo pipefail
-XMX="${1:?heap, e.g. 24g}"; shift
+XMX="${1:?heap, e.g. 24g or auto}"; shift
+if [ "$XMX" = auto ]; then
+  XMX="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo)"
+fi
 exec java "-Xmx$XMX" $(cat "$(dirname "$0")/java_opts.txt") \
   -cp "/opt/spark/jars/*:$(dirname "$0")/../target/scala-2.13/classes" "$@"

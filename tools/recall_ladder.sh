@@ -22,6 +22,10 @@
 #   tools/gen_corpora.sh 0.1 && tools/gen_corpora.sh 1
 #   tools/graft_java.sh 48g graft.GenData /tmp/graft-clustered5k-sf10 10 clustered-embs 5000 0.35
 #
+# Every rung runs on all cores with graft_java.sh's Tier-1 heap (half the
+# box's memory, 2-8 GiB); XMX overrides it for every rung (the n=200k
+# rung needed 48g on a 32-core box).
+#
 # Usage: tools/recall_ladder.sh [outFile]     (default /tmp/recall_ladder.jsonl)
 set -euo pipefail
 cd "$(git rev-parse --show-toplevel)"
@@ -29,17 +33,17 @@ OUT="${1:-/tmp/recall_ladder.jsonl}"
 : > "$OUT"
 IDLE=1000000000
 
-run() { # $1=xmx $2=parts $3=cap $4...=probe args
-  local xmx="$1" parts="$2" cap="$3"; shift 3
-  SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SHUFFLE_PARTITIONS="$parts" \
+run() { # $1=parts $2=cap $3...=probe args
+  local parts="$1" cap="$2"; shift 2
+  SPARK_GRAFT_CPUS="$(nproc)" SPARK_GRAFT_SHUFFLE_PARTITIONS="$parts" \
   SPARK_GRAFT_LSH_MAX_BUCKET="$cap" \
-  tools/graft_java.sh "$xmx" graft.ProbeRecall "$@" 2>/dev/null \
+  tools/graft_java.sh "${XMX:-auto}" graft.ProbeRecall "$@" 2>/dev/null \
     | grep '"probe":"recall"' >> "$OUT"
   tail -1 "$OUT"
 }
 
-run 16g 32  "$IDLE" /tmp/graft-clustered-sf0.1
-run 24g 32  "$IDLE" /tmp/graft-clustered-sf1
-run 24g 32  100     /tmp/graft-clustered-sf1          # default-cap honesty row
-run 48g 128 "$IDLE" /tmp/graft-clustered5k-sf10 100   # anchored truth
+run 32  "$IDLE" /tmp/graft-clustered-sf0.1
+run 32  "$IDLE" /tmp/graft-clustered-sf1
+run 32  100     /tmp/graft-clustered-sf1          # default-cap honesty row
+run 128 "$IDLE" /tmp/graft-clustered5k-sf10 100   # anchored truth
 echo "recall_ladder: wrote $OUT"
