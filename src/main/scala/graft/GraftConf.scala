@@ -18,7 +18,6 @@ final case class GraftConf(
     ckptDir: Option[String],
     lshKeyBits: Option[Int],
     lshMaxBucket: Int,
-    censusDump: Option[String],
     streamOnly: Set[String],
     streambenchOut: Option[String],
     docsDir: Option[String],
@@ -72,7 +71,6 @@ object GraftConf {
         require(w >= 4 && w <= 15, s"SPARK_GRAFT_LSH_KEY_BITS must be in [4, 15], got $w"); w
       },
       lshMaxBucket = int("LSH_MAX_BUCKET").getOrElse(DefaultLshMaxBucket),
-      censusDump = get("CENSUS_DUMP"),
       streamOnly = names("STREAM_ONLY").getOrElse(Set.empty),
       streambenchOut = get("STREAMBENCH_OUT"),
       docsDir = get("DOCS_DIR"),

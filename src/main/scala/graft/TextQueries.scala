@@ -2018,9 +2018,13 @@ object TextQueries {
       val hist = labeled.groupBy("q")
         .agg(count(when(col("is_dup"), lit(1))).as("n_pos"),
           count(when(!col("is_dup"), lit(1))).as("n_neg"))
+      // the block key carries an unreachable coalesce fallback: floor() is
+      // always nullable, and the isnotnull(<block>) inferred for the
+      // offsets join would push down through the histogram and re-derive
+      // qualityScore (4 graft_quality_signals calls) in a Filter per row
       graft.operators.PrefixSum.overKeys(hist, "q",
-          floor(col("q") / 4096L).cast("long"), inclusive = false,
-          Seq("n_neg" -> "cumneg_lt"))
+          coalesce(floor(col("q") / 4096L).cast("long"), lit(Long.MinValue)),
+          inclusive = false, Seq("n_neg" -> "cumneg_lt"))
         .agg(sum(col("n_pos")).as("np"), sum(col("n_neg")).as("nn"),
           sum(col("n_pos") * (lit(2) * col("cumneg_lt") + col("n_neg"))).as("num2"))
         .select(col("np").as("n_pos"), col("nn").as("n_neg"),

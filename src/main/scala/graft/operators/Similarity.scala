@@ -708,8 +708,13 @@ object Similarity {
   def pqAdcTopK(corpus: DataFrame, queries: DataFrame, codebooks: DataFrame,
                 m: Int, dims: Int, topK: Int): DataFrame = {
     val sd = dims / m
+    // the _outer form on purpose: an inner explode makes the optimizer infer
+    // `size(codes) > 0 AND isnotnull(codes)` and push it through the alias
+    // into pqEncode's join condition, re-running graft_pq_mins twice more
+    // per row. The null (subspace, code) rows it keeps drop at the inner
+    // equi-join below.
     val enc = pqEncode(corpus, codebooks, m, dims)
-      .select(col("vec_id"), posexplode(col("codes")).as(Seq("subspace", "code")))
+      .select(col("vec_id"), posexplode_outer(col("codes")).as(Seq("subspace", "code")))
     val lutD = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
       .crossJoin(broadcast(pqCbRow(codebooks, sd)))
       .select(col("query_id"), col("q_emb"), explode(col("cbs")).as("e"))

@@ -21,7 +21,7 @@ class GraftConfSpec extends AnyFunSuite {
     assert(c.warmRuns == 5)
     assert(c.lshMaxBucket == GraftConf.DefaultLshMaxBucket && c.lshMaxBucket == 100000)
     assert(c.lshKeyBits.isEmpty)
-    assert(c.ckptDir.isEmpty && c.censusDump.isEmpty && c.docsDir.isEmpty)
+    assert(c.ckptDir.isEmpty && c.docsDir.isEmpty)
     assert(c.benchOut.isEmpty && c.streambenchOut.isEmpty && c.master.isEmpty)
     assert(c.benchOnly.isEmpty && c.benchOnlyQueries.isEmpty)
     assert(c.streamOnly.isEmpty)

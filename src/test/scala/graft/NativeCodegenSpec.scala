@@ -65,6 +65,8 @@ class NativeCodegenSpec extends AnyFunSuite {
     test(s"$name compiles through GenerateUnsafeProjection and matches eval") {
       val expr = build(inputs.zipWithIndex.map { case ((_, t), i) => BoundReference(i, t, nullable = true) })
       assert(expr.getClass.getSimpleName == name)
+      // the plan gate (RecomputeRule) finds native kernels by this prefix
+      assert(expr.prettyName.startsWith("graft_"), expr.prettyName)
       assert(expr.checkInputDataTypes().isSuccess, expr.checkInputDataTypes())
       val row = InternalRow.fromSeq(inputs.map { case (v, t) => Literal.create(v, t).value })
       val compiled = GenerateUnsafeProjection.generate(Seq(expr)) // throws if the Java does not compile

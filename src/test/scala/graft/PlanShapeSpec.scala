@@ -7,8 +7,12 @@ package graft
   * a 100 TB run. Uses the sf0.001 testdata tables. */
 class PlanShapeSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
-  private def plan(name: String): String =
-    Queries.byName(name).run(spark, sf).queryExecution.executedPlan.toString()
+
+  /** Every registry query's executed plan, built once: the registry-wide
+    * tests and the single-query guards all read these strings. */
+  private lazy val plans: Map[String, String] = Queries.all.map(q =>
+    q.name -> q.run(spark, sf).queryExecution.executedPlan.toString()).toMap
+  private def plan(name: String): String = plans(name)
 
   /** The documented O(n²) recall baselines — the ONLY queries allowed a
     * cartesian product (q24/q30 brute pairs; q53 embeds the brute ground
@@ -19,10 +23,18 @@ class PlanShapeSpec extends SparkSpec {
       "q217_margin_mining", "q249_simhash_recall")
 
   test("no query except the documented brute baselines plans a cartesian product") {
-    for (q <- Queries.all if !bruteBaselines(q.name)) {
-      assert(!plan(q.name).contains("CartesianProduct"),
-        s"${q.name} plans a cartesian product")
+    for ((name, p) <- plans if !bruteBaselines(name)) {
+      assert(!p.contains("CartesianProduct"), s"$name plans a cartesian product")
     }
+  }
+
+  test("no registry plan repeats an expensive call inside one operator") {
+    val found = for {
+      (name, p) <- plans.toSeq.sortBy(_._1)
+      r <- RecomputeRule.repeats(p)
+    } yield s"$name: $r"
+    if (found.nonEmpty) fail(
+      s"per-row recompute (${found.size}):\n" + found.mkString("\n"))
   }
 
   test("rank-limited windows push the limit into WindowGroupLimit") {
