@@ -33,6 +33,14 @@ object GraftSession {
     * about 80 KB of heap (Janino keeps the bytecode), so the cache costs
     * what a workload really compiles: ~12 MB for `etl`, 80 MB at most.
     *
+    * `spark.sql.codegen.useIdInClassName` (Spark's default true names each
+    * whole-stage class after its codegen stage id): AQE numbers a plan's
+    * stages in the order it creates them, which follows which stages
+    * finish first, so the same code came back under a new class name and
+    * missed the cache — q119 at sf0.001 recompiled 4–9 classes in its
+    * first warm pass and 0–7 in its second, almost all of them such
+    * renames. Without the id the cache key is the code itself.
+    *
     * The status store's retention (Spark's defaults: 1000 SQL executions,
     * jobs and stages each) pays for that heap: the UI is off and nothing
     * in the engine reads `statusStore`/`statusTracker`, yet Spark keeps
@@ -49,7 +57,7 @@ object GraftSession {
     * cores / 16) clamped to 1–64 MiB: 32 MiB on a 4 GiB heap, 64 MiB on
     * the 24–48 GiB scale heaps): the memory manager sizes every Tungsten
     * page by it, and an `UnsafeHashedRelation` (a broadcast hash join
-    * whose keys do not pack into one long, e.g. `Dedup.capBucketsScoped`'s
+    * whose keys do not pack into one long, e.g. `Dedup.capBuckets`'s
     * `(band int, key bigint)` exclusion) allocates one whole page however
     * few rows it holds, on the driver and again on every executor that
     * reads the broadcast. At 32 MiB each q22 pass kept a 32.1 MiB
@@ -75,6 +83,7 @@ object GraftSession {
     * the separate subquery pool. */
   val SharedConf: Map[String, String] = Map(
     "spark.sql.codegen.cache.maxEntries" -> "1000",
+    "spark.sql.codegen.useIdInClassName" -> "false",
     "spark.sql.ui.retainedExecutions" -> "20",
     "spark.ui.retainedJobs" -> "20",
     "spark.ui.retainedStages" -> "20",

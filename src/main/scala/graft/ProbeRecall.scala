@@ -45,7 +45,7 @@ object ProbeRecall {
           operators.Similarity.nearDupPairsAnchored(emb, threshold, anchorMod)
         else operators.Similarity.nearDupPairs(emb, threshold))
       val lshAll = operators.Similarity
-        .lshNearDupPairs(emb, threshold, keyBits = w)
+        .lshNearDupPairs(emb, threshold, keyBits = w).pairs
         .select(col("id_a").as("l_a"), col("id_b").as("l_b"))
       val lsh = operators.Ckpt.local(
         if (anchorMod > 1)

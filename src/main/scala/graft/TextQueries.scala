@@ -118,7 +118,7 @@ object TextQueries {
   private val q22 = Q(
     "q22_minhash_lsh",
     (s, dir) => Dedup.minhashLshPairs(tbl(s, dir, "documents"), "doc_id", "text",
-      numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5),
+      numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5).pairs,
     Some(s"""WITH $minhashCtes
         SELECT id_a, id_b, ${jaccardSql("sh_a", "sh_b")} AS jaccard
         FROM cand WHERE ${jaccardSql("sh_a", "sh_b")} >= 0.5
@@ -472,7 +472,7 @@ object TextQueries {
     (s, dir) => {
       val docs = tbl(s, dir, "documents")
       val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
-        numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5)
+        numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5).pairs
       val cl = Dedup.clusters(pairs)
       val sizes = cl.groupBy("cluster").agg(count(lit(1)).as("sz"))
       // corpus size joins in as a broadcast scalar — plan construction
@@ -546,7 +546,7 @@ object TextQueries {
       val brute = Dedup.wordJaccardPairs(docs, "doc_id", "text", shingleN = 3, threshold = 0.5)
         .select("id_a", "id_b")
       val lsh = Dedup.minhashLshPairs(docs, "doc_id", "text",
-        numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5)
+        numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5).pairs
         .select(col("id_a").as("l_a"), col("id_b").as("l_b"))
       val nLsh = lsh.agg(count(lit(1)).as("n_lsh"))
       brute.join(lsh, col("id_a") === col("l_a") && col("id_b") === col("l_b"), "left")
@@ -713,7 +713,7 @@ object TextQueries {
     (s, dir) => {
       val docs = tbl(s, dir, "documents")
       val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
-        numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5)
+        numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5).pairs
       Dedup.dedupByClusters(docs, "doc_id", pairs)
         .groupBy("lang")
         .agg(count(lit(1)).as("n_kept"), sum(col("doc_id")).as("id_sum"))
@@ -1108,7 +1108,7 @@ object TextQueries {
     "q107_pagerank",
     (s, dir) => Dedup.pageRank(
       Dedup.minhashLshPairs(tbl(s, dir, "documents"), "doc_id", "text",
-        numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5)
+        numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5).pairs
         .select("id_a", "id_b"),
       iters = 3, damping = 0.85),
     Some {
@@ -1303,7 +1303,7 @@ object TextQueries {
     "q117_triangles",
     (s, dir) => Dedup.triangleCount(
       Dedup.minhashLshPairs(tbl(s, dir, "documents"), "doc_id", "text",
-        numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5)
+        numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5).pairs
         .select("id_a", "id_b")),
     Some(s"""WITH $minhashCtes,
         pairs AS (SELECT id_a, id_b FROM cand
@@ -1337,7 +1337,7 @@ object TextQueries {
     (s, dir) => {
       val pairs = graft.operators.Ckpt.local(
         Dedup.minhashLshPairs(tbl(s, dir, "documents"), "doc_id", "text",
-          numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5)
+          numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5).pairs
           .select("id_a", "id_b"))
       val tri = Dedup.triangleCount(pairs)
       val wedges = pairs
@@ -1434,9 +1434,9 @@ object TextQueries {
         .select("doc_id")
       val surv = tbl(s, dir, "documents").select("doc_id", "text")
         .join(survIds, Seq("doc_id"))
-      val (pairs, shedIds) = Dedup.minhashLshPairsWithShed(surv, "doc_id",
+      val lsh = Dedup.minhashLshPairs(surv, "doc_id",
         "text", numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5)
-      val dropped = pairs
+      val dropped = lsh.pairs
         .select(col("id_b").as("doc_id")).distinct()
         .withColumn("is_dup", lit(1))
       val funnel = slim.join(dropped, Seq("doc_id"), "left")
@@ -1455,7 +1455,7 @@ object TextQueries {
       // (0 when the cap never fired — every tested sf); shares the
       // banded checkpoint, so the audit adds one group-by, not a pass.
       val shed = slim
-        .join(shedIds.select(col("id").as("doc_id")), Seq("doc_id"))
+        .join(lsh.shed.select(col("id").as("doc_id")), Seq("doc_id"))
         .agg(count(lit(1)).as("n_docs"),
           coalesce(sum("nt"), lit(0L)).as("n_tokens"))
         .select(lit("lsh_capped").as("reason"), col("n_docs"), col("n_tokens"))
@@ -1834,7 +1834,7 @@ object TextQueries {
       val docs = tbl(s, dir, "documents")
       graft.operators.Dedup.partitionModularity(
         Dedup.minhashLshPairs(docs, "doc_id", "text",
-          numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5)
+          numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5).pairs
           .select("id_a", "id_b"),
         docs.select(col("doc_id").as("id"), col("source").as("label")))
     },
@@ -1952,7 +1952,7 @@ object TextQueries {
     "q150_split_leakage",
     (s, dir) => {
       val cl = Dedup.clusters(Dedup.minhashLshPairs(tbl(s, dir, "documents"),
-        "doc_id", "text", numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5))
+        "doc_id", "text", numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5).pairs)
       val bucket = pmod(TextFns.portableHash(col("id").cast("string")), lit(100L))
       val split = when(bucket < 90, "train").when(bucket < 95, "val").otherwise("test")
       val groups = cl.withColumn("split", split)
@@ -2003,7 +2003,7 @@ object TextQueries {
     "q158_auc",
     (s, dir) => {
       val pairs = Dedup.minhashLshPairs(tbl(s, dir, "documents"), "doc_id", "text",
-        numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5)
+        numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5).pairs
       // ONE pass over the lazy pair pipeline (explode both endpoints) —
       // the union-of-selects spelling re-executed the whole LSH verify
       // join once per branch (round-14, guide §2.4: duplicated subtrees)
@@ -2823,7 +2823,7 @@ object TextQueries {
     (s, dir) => {
       val docs = tbl(s, dir, "documents")
       val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
-        numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5)
+        numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5).pairs
       val cl = Dedup.clusters(pairs)
       val q = docs.select(col("doc_id"), col("lang"),
         TextFns.qualityScore(col("text")).as("q"))
@@ -2899,7 +2899,7 @@ object TextQueries {
       def powChain(base: Column, e: Int): Column =
         if (e == 1) base else { val h = powChain(base, e / 2); h * h }
       val pairs = Dedup.minhashLshPairs(tbl(s, dir, "documents"),
-        "doc_id", "text", numHashes = 32, bands = 8, shingleN = 3, threshold = 0.0)
+        "doc_id", "text", numHashes = 32, bands = 8, shingleN = 3, threshold = 0.0).pairs
       // the 4 config branches union over this ≤20-row histogram —
       // checkpoint it so the LSH pass runs once, not once per branch
       val hist = graft.operators.Ckpt.local(pairs
@@ -2960,7 +2960,7 @@ object TextQueries {
     "q179_cluster_hist",
     (s, dir) => {
       val pairs = Dedup.minhashLshPairs(tbl(s, dir, "documents"),
-        "doc_id", "text", numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5)
+        "doc_id", "text", numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5).pairs
       val sizes = Dedup.clusters(pairs).groupBy("cluster").agg(count(lit(1)).as("sz"))
       val bucket = when(col("sz") >= 64, 64L).when(col("sz") >= 32, 32L)
         .when(col("sz") >= 16, 16L).when(col("sz") >= 8, 8L)
@@ -3440,7 +3440,7 @@ object TextQueries {
       val nCand = attrs.groupBy("lang", "bkt").agg(count(lit(1)).as("nb"))
         .agg(sum(expr("(nb * (nb - 1)) div 2")).as("n_cand"))
       val truth = Dedup.minhashLshPairs(docs, "doc_id", "text",
-          numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5)
+          numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5).pairs
         .select("id_a", "id_b")
       val tstats = truth
         .join(attrs.select(col("doc_id").as("id_a"), col("lang").as("la"),
@@ -4222,7 +4222,7 @@ object TextQueries {
         .filter(col("doc_id") =!= col("mn"))
       // near-dup: survivor = min member per LSH connected component
       val cl = Dedup.clusters(Dedup.minhashLshPairs(tbl(s, dir, "documents"),
-        "doc_id", "text", numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5))
+        "doc_id", "text", numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5).pairs)
       val nearLosers = cl
         .withColumn("mn", min(col("id")).over(Window.partitionBy(col("cluster"))))
         .filter(col("id") =!= col("mn")).select(col("id").as("doc_id"))
@@ -4279,7 +4279,7 @@ object TextQueries {
     "q290_score_calibration",
     (s, dir) => {
       val pairs = Dedup.minhashLshPairs(tbl(s, dir, "documents"), "doc_id", "text",
-        numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5)
+        numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5).pairs
       // one pass over the lazy pair pipeline — see q158's rationale
       val dupIds = Dedup.pairEndpointIds(pairs)
       val scored = tbl(s, dir, "documents")
@@ -4441,7 +4441,7 @@ object TextQueries {
     (s, dir) => {
       val docs = tbl(s, dir, "documents")
       val cl = Dedup.clusters(Dedup.minhashLshPairs(docs,
-        "doc_id", "text", numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5))
+        "doc_id", "text", numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5).pairs)
       val losers = cl
         .withColumn("mn", min(col("id")).over(Window.partitionBy(col("cluster"))))
         .filter(col("id") =!= col("mn")).select(col("id").as("doc_id"))
@@ -4557,7 +4557,7 @@ object TextQueries {
     (s, dir) => {
       val docs = tbl(s, dir, "documents")
       val cl = Dedup.clusters(Dedup.minhashLshPairs(docs,
-        "doc_id", "text", numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5))
+        "doc_id", "text", numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5).pairs)
       val sized = cl.withColumn("cluster_size",
         count(lit(1)).over(Window.partitionBy(col("cluster"))))
       val memSh = docs.select(col("doc_id").as("id"), col("text"))
@@ -4677,7 +4677,7 @@ object TextQueries {
       // verify pipeline runs once, and take endpoints in one explode pass
       val pairs = graft.operators.Ckpt.local(
         Dedup.minhashLshPairs(docs, "doc_id", "text",
-          numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5))
+          numHashes = 32, bands = 8, shingleN = 3, threshold = 0.5).pairs)
       val ids = Dedup.pairEndpointIds(pairs)
       val sh5 = docs.select(col("doc_id").as("id"), col("text"))
         .join(broadcast(ids), "id")

@@ -251,7 +251,7 @@ object VecQueries {
     * match bit-for-bit at every rung. Yields CTEs `nc, wc, bc, pl, bits,
     * bands, ok_bk, shed_bk, bands_ok, cand` (no WITH prefix; callers
     * append; `shed_bk` mirrors the over-cap bucket relation of
-    * [[graft.operators.Dedup.capBucketsScoped]] for the shed audit). */
+    * [[graft.operators.Dedup.capBuckets]] for the shed audit). */
   private def bandedLshCtes: String = {
     val stride = Similarity.PlaneStride
     val bMax = Similarity.recallBands(15)
@@ -307,7 +307,7 @@ object VecQueries {
     "q47_embed_lsh",
     (s, dir) => {
       val emb = tbl(s, dir, "embeddings")
-      Similarity.lshNearDupPairs(emb, 0.2, keyBits = lshKeyBits(emb.count()))
+      Similarity.lshNearDupPairs(emb, 0.2, keyBits = lshKeyBits(emb.count())).pairs
     },
     Some {
       s"""WITH $bandedLshCtes
@@ -943,9 +943,9 @@ object VecQueries {
     (s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val brute = Similarity.nearDupPairs(emb, 0.2)
-      val (lshPairs, shedAudit) = Similarity.lshNearDupPairsScoped(emb, 0.2,
+      val lshRun = Similarity.lshNearDupPairs(emb, 0.2,
         keyBits = lshKeyBits(emb.count()))
-      val lsh = lshPairs.select(col("id_a").as("l_a"), col("id_b").as("l_b"))
+      val lsh = lshRun.pairs.select(col("id_a").as("l_a"), col("id_b").as("l_b"))
       val nLsh = lsh.agg(count(lit(1)).as("n_lsh"))
       val hi = col("cos") >= Similarity.RecallTargetCos
       val hit = col("l_a").isNotNull
@@ -956,7 +956,7 @@ object VecQueries {
           coalesce(sum(hi.cast("long")), lit(0L)).as("n_brute_hi"),
           coalesce(sum((hi && hit).cast("long")), lit(0L)).as("n_common_hi"))
         .crossJoin(broadcast(nLsh))
-        .crossJoin(broadcast(shedAudit))
+        .crossJoin(broadcast(lshRun.shed))
         .select(col("n_brute"), col("n_lsh"), col("n_common"),
           Det.roundAt(try_divide(col("n_common").cast(DoubleType),
             col("n_brute").cast(DoubleType)), 6).as("recall"),

@@ -23,23 +23,6 @@ import org.apache.spark.sql.types._
   */
 object Dedup {
 
-  /** Mega-bucket guard shared by the LSH pair generators. Boilerplate text
-    * (license headers, templated pages) lands thousands of docs on one
-    * (band, key) — locally O(b²) candidate explosion at corpus scale. The
-    * per-bucket size is a window count over the banding shuffle's own key
-    * (no extra join); rows in buckets over `maxBucket` are DROPPED, not
-    * salted — salting would split a bucket and silently change the
-    * candidate set per run, dropping is deterministic and auditable. The
-    * drop is never silent: `lhs` carries an `observe` metric
-    * (`<tag>_cap`: rows_in_dropped_buckets, buckets_dropped, max_bucket) that
-    * [[graft.GraftSession]]'s listener WARN-logs on any direct action.
-    * Returns (observed lhs, plain rhs) — the metric sits on one join side
-    * only so the self-join never duplicates the CollectMetrics name, and
-    * the name carries a per-invocation sequence number so two capped
-    * operators composed into ONE plan (e.g. a union of two
-    * [[minhashLshPairs]] calls) can't collide either. */
-  private val capSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-
   /** Default LSH bucket cap. 100000 everywhere in production: sized so it
     * never fires below corpus scale and only sheds boilerplate
     * mega-buckets. Env-overridable (`SPARK_GRAFT_LSH_MAX_BUCKET`) for
@@ -65,45 +48,44 @@ object Dedup {
     v
   }
 
-  private[operators] def capBuckets(banded: DataFrame, maxBucket: Int,
-                                    tag: String): (DataFrame, DataFrame) = {
-    val (l, r, _, _, _) = capBucketsScoped(banded, maxBucket, tag); (l, r)
-  }
+  private val capSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** [[capBuckets]] plus the shed audit: the third element is the
-    * DISTINCT non-(band,key) tuples (for the LSH callers: doc ids) that
-    * appear in at least one over-cap bucket, the fourth the over-cap
-    * (band, key) buckets themselves — both computed from the SAME banded
-    * checkpoint the candidate join reads, so exposing shed volume costs
-    * one group-by over the materialized slim relation, never a second
-    * corpus pass. A production funnel reports these numbers (see q119's
-    * `lsh_capped` row and q298's `n_shed_*` columns): capping is
-    * deterministic and loud in the logs, but a report that doesn't carry
-    * the shed count invites treating "0 pairs found" and "pairs shed by
-    * the cap" as the same outcome.
+  /** Mega-bucket guard shared by the banded pair operators. Boilerplate
+    * text (license headers, templated pages) lands thousands of docs on
+    * one (band, key) — locally O(b²) candidate explosion at corpus scale.
+    * Rows in buckets over `maxBucket` are DROPPED, not salted — salting
+    * would split a bucket and silently change the candidate set per run,
+    * dropping is deterministic and auditable. The drop is never silent:
+    * [[Capped.observed]] carries an `observe` metric (`<tag>_<seq>_cap`:
+    * rows_in_dropped_buckets, buckets_dropped, max_bucket) that
+    * [[graft.GraftSession]]'s listener WARN-logs on any direct action.
+    * The name carries a per-invocation sequence number so two capped
+    * operators composed into ONE plan (e.g. a union of two
+    * [[minhashLshPairs]] calls) can't collide. */
+  private[operators] def capBuckets(banded: DataFrame, maxBucket: Int,
+                                    tag: String): Capped =
+    new Capped(Ckpt.local(banded), maxBucket, s"${tag}_${capSeq.incrementAndGet()}_cap")
+
+  /** One [[capBuckets]] call over a `(band, key, …)` relation. `banded`
+    * is its checkpoint: the slim banded relation is materialized once,
+    * so neither join side re-derives signatures, and callers that need
+    * further passes over it (winnowing's document-frequency and prefix
+    * builds) read this materialization instead of the lazy input.
     *
-    * The FIFTH element is the banded checkpoint itself: callers that need
-    * further passes over the same exploded relation (e.g. winnowing's
-    * document-frequency and prefix builds) must read this materialization
-    * instead of re-deriving the lazy input — otherwise the exploded index
-    * is materialized twice (round-14 ADVICE). */
-  private[operators] def capBucketsScoped(banded: DataFrame, maxBucket: Int,
-      tag: String): (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val obsName = s"${tag}_${capSeq.incrementAndGet()}_cap"
-    // The slim banded relation is checkpointed once (the self-join must
-    // never re-derive signatures per side). Bucket sizes come from a
-    // groupBy — partial map-side aggregation, unlike a window count which
-    // would shuffle every banded row — and only the OVER-CAP keys (at
-    // most n_rows/maxBucket of them; in practice a handful of boilerplate
-    // buckets) are broadcast into a left-anti join, so the banded rows
-    // themselves reach the candidate self-join without an extra shuffle.
-    // The observe metric rides the lhs copy only: a duplicated
-    // CollectMetrics name inside the self-join would fail analysis.
-    val ck = Ckpt.local(banded)
-    def overCap(observed: Boolean) = {
-      val o = ck.groupBy("band", "key").agg(count(lit(1)).as("__bn"))
+    * Bucket sizes come from a groupBy — partial map-side aggregation,
+    * unlike a window count which would shuffle every banded row — and
+    * only the OVER-CAP keys (at most n_rows/maxBucket of them; in
+    * practice a handful of boilerplate buckets) are broadcast into a
+    * left-anti join, so the kept rows reach the candidate join without
+    * an extra shuffle. The observe metric rides [[observed]] only: a
+    * duplicated CollectMetrics name inside a self-join would fail
+    * analysis. */
+  private[operators] final class Capped(val banded: DataFrame, maxBucket: Int,
+                                        obsName: String) {
+    private def overCapOf(metric: Boolean) = {
+      val o = banded.groupBy("band", "key").agg(count(lit(1)).as("__bn"))
         .filter(col("__bn") > maxBucket)
-      if (observed)
+      if (metric)
         o.observe(obsName,
           coalesce(sum(col("__bn")), lit(0L)).as("rows_in_dropped_buckets"),
           // the over-cap (band, key) count also bounds winnowing's single
@@ -112,14 +94,52 @@ object Dedup {
           coalesce(max(col("__bn")), lit(0L)).as("max_bucket"))
       else o
     }
-    def kept(observed: Boolean) =
-      ck.join(broadcast(overCap(observed).select("band", "key")),
+    private def keptOf(metric: Boolean) =
+      banded.join(broadcast(overCapOf(metric).select("band", "key")),
         Seq("band", "key"), "left_anti")
-    val shed = ck.join(broadcast(overCap(observed = false).select("band", "key")),
-        Seq("band", "key"), "left_semi")
+
+    /** Kept rows carrying the cap metric: the left side of every join. */
+    val observed: DataFrame = keptOf(metric = true)
+    /** Kept rows without the metric: the right side. */
+    val plain: DataFrame = keptOf(metric = false)
+    /** The over-cap (band, key) buckets. */
+    lazy val overCap: DataFrame = overCapOf(metric = false).select("band", "key")
+    /** The shed audit: the DISTINCT non-(band, key) tuples (for the LSH
+      * callers: ids) in at least one over-cap bucket — one group-by over
+      * the materialized slim relation, never a second corpus pass. */
+    lazy val shed: DataFrame = banded.join(broadcast(overCap), Seq("band", "key"), "left_semi")
       .drop("band", "key").distinct()
-    (kept(observed = true), kept(observed = false), shed,
-      overCap(observed = false).select("band", "key"), ck)
+
+    /** The capped candidate join: kept rows meet the kept rows of their
+      * (band, key) bucket, the left side projected to `left` and the right
+      * to `right`. With a boolean column `side`, the left keeps its true
+      * rows and the right its false rows — two sets joined through one
+      * cap on their COMBINED bucket population. */
+    def bucketJoin(left: Seq[Column], right: Seq[Column],
+                   side: Option[String] = None): DataFrame = {
+      def of(df: DataFrame, rows: Column => Column, cols: Seq[Column]) =
+        side.fold(df)(s => df.filter(rows(col(s))))
+          .select(col("band") +: col("key") +: cols: _*)
+      of(observed, identity, left).join(of(plain, !_, right), Seq("band", "key"))
+    }
+
+    /** Each unordered candidate pair once: (id_a, id_b) with id_a < id_b,
+      * plus every `payload` column per side as `<payload>_a`/`<payload>_b`. */
+    def selfPairs(id: String, payload: String*): DataFrame = {
+      def cols(s: String) = col(id).as(s"id_$s") +: payload.map(p => col(p).as(s"${p}_$s"))
+      def names(s: String) = (s"id_$s" +: payload.map(p => s"${p}_$s")).map(col)
+      bucketJoin(cols("a"), cols("b"))
+        .filter(col("id_a") < col("id_b"))
+        .select(names("a") ++ names("b"): _*)
+        .dropDuplicates("id_a", "id_b")
+    }
+  }
+
+  /** A banded pair operator's result: the pairs, and the cap's shed
+    * audit. The audit is built only when read, so a caller that ignores
+    * it plans the pairs alone. */
+  final class CappedPairs(val pairs: DataFrame, audit: => DataFrame) {
+    lazy val shed: DataFrame = audit
   }
 
   /** Distinct endpoint ids of a pair list (columns `id_a`, `id_b`) in ONE
@@ -230,33 +250,24 @@ object Dedup {
   /** MinHash+LSH near-duplicate pairs: shingle → minhash → band → bucket
     * self-join → exact-Jaccard verify ≥ `threshold`.
     *
-    * Returns (id_a, id_b, jaccard) with id_a < id_b, Jaccard rounded to 6.
-    * Deterministic end-to-end: both candidate generation (identical band
-    * keys) and verification (integer set sizes) are engine-portable.
+    * `pairs` is (id_a, id_b, jaccard) with id_a < id_b, Jaccard rounded
+    * to 6. Deterministic end-to-end: both candidate generation (identical
+    * band keys) and verification (integer set sizes) are engine-portable.
     * Buckets over `maxBucket` rows are dropped (see [[capBuckets]]) —
     * sized so the cap never fires at verify scale and only sheds
-    * boilerplate mega-buckets at corpus scale. */
+    * boilerplate mega-buckets at corpus scale.
+    *
+    * `shed` is the cap-shed audit: the distinct doc ids (column `id`)
+    * that had at least one band bucket excluded by the cap. A shed doc
+    * still enters candidate generation through its other (under-cap)
+    * bands — the shed count measures cap EXPOSURE, not docs fully removed
+    * from dedup; only pairs whose every shared band is over-cap are lost.
+    * Consumers (the q119 funnel report) surface the count so shed volume
+    * is part of the pipeline's output, not only a log line. */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       numHashes: Int = 32, bands: Int = 8,
                       shingleN: Int = 3, threshold: Double = 0.5,
-                      maxBucket: Int = DefaultMaxBucket): DataFrame =
-    minhashLshPairsWithShed(df, idCol, textCol, numHashes, bands, shingleN,
-      threshold, maxBucket)._1
-
-  /** [[minhashLshPairs]] plus the cap-shed audit: also returns the
-    * distinct doc ids (column `id`) that had at least one band bucket
-    * excluded by the cap. A shed doc still enters candidate generation
-    * through its other (under-cap) bands — the shed count measures
-    * cap EXPOSURE, not docs fully removed from dedup; only pairs whose
-    * every shared band is over-cap are lost. Shares the banded
-    * checkpoint with the pair
-    * join — the audit is one extra group-by over the materialized slim
-    * relation. Consumers (the q119 funnel report) surface the count so
-    * shed volume is part of the pipeline's output, not only a log line. */
-  def minhashLshPairsWithShed(df: DataFrame, idCol: String, textCol: String,
-                      numHashes: Int = 32, bands: Int = 8,
-                      shingleN: Int = 3, threshold: Double = 0.5,
-                      maxBucket: Int = DefaultMaxBucket): (DataFrame, DataFrame) = {
+                      maxBucket: Int = DefaultMaxBucket): CappedPairs = {
     val rowsPerBand = numHashes / bands
     val docs = df.select(
       col(idCol).as("id"),
@@ -273,16 +284,11 @@ object Dedup {
           graft.plans.Hash60MapExpr(col("sh"), MinhashP),
           numHashes).as("sig"))
       .select(col("id"), posexplode(bandKeys(col("sig"), bands, rowsPerBand)).as(Seq("band", "key")))
-    val (lhs, rhs, shedIds, _, _) = capBucketsScoped(banded, maxBucket, "minhash_lsh")
+    val cap = capBuckets(banded, maxBucket, "minhash_lsh")
     // Candidates are checkpointed (slim: two ids/row) so the id-set
     // extraction and both verify joins read one materialization of the
     // candidate shuffle instead of re-running it.
-    val cand = Ckpt.local(
-      lhs.select(col("band"), col("key"), col("id").as("id_a"))
-        .join(rhs.select(col("band"), col("key"), col("id").as("id_b")), Seq("band", "key"))
-        .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates("id_a", "id_b"))
+    val cand = Ckpt.local(cap.selfPairs("id"))
     // Exact-Jaccard verify: shingles are recomputed ONLY for candidate
     // ids — LSH leaves a candidate set orders of magnitude smaller than
     // the corpus, so shingling post-join against a broadcast id set beats
@@ -300,16 +306,22 @@ object Dedup {
         // array_intersect + array_union hash-set build per candidate
         .select(col("id"),
           sort_array(TextFns.wordShingles(col("__text"), shingleN)).as("sh"))
-    val pairs = cand
-      .join(candSh.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(candSh.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .withColumn("jaccard", Det.roundAt(
-        graft.plans.SortedJaccardExpr(col("sh_a"), col("sh_b")), 6))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-      .orderBy("id_a", "id_b")
-    (pairs, shedIds)
+    val pairs = verified(cand, candSh, "jaccard", threshold)(graft.plans.SortedJaccardExpr(_, _))
+    new CappedPairs(pairs, cap.shed)
   }
+
+  /** Verify tail of the set-similarity pair operators: attach each
+    * candidate's sorted sets from `sets` (id, sh), score every pair with
+    * `measure` rounded to 6, keep scores ≥ `threshold`. */
+  private def verified(cand: DataFrame, sets: DataFrame, name: String, threshold: Double)(
+      measure: (Column, Column) => Column): DataFrame =
+    cand
+      .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
+      .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
+      .withColumn(name, Det.roundAt(measure(col("sh_a"), col("sh_b")), 6))
+      .filter(col(name) >= threshold)
+      .select("id_a", "id_b", name)
+      .orderBy("id_a", "id_b")
 
   /** Incremental LSH near-dup join of a NEW batch against an existing
     * corpus INDEX: band buckets are computed on both sides and candidates
@@ -337,13 +349,11 @@ object Dedup {
     // One union-side cap: a mega-bucket floods pairs regardless of which
     // side its rows came from, so the size that matters is the COMBINED
     // bucket population.
-    val (lhs, rhs) = capBuckets(
+    val cap = capBuckets(
       bandedOf(index, isIdx = true).union(bandedOf(incoming, isIdx = false)),
       maxBucket, "cross_lsh")
     val cand = Ckpt.local(
-      lhs.filter(col("is_idx")).select(col("band"), col("key"), col("id").as("id_idx"))
-        .join(rhs.filter(!col("is_idx"))
-          .select(col("band"), col("key"), col("id").as("id_new")), Seq("band", "key"))
+      cap.bucketJoin(Seq(col("id").as("id_idx")), Seq(col("id").as("id_new")), Some("is_idx"))
         .select("id_new", "id_idx")
         .dropDuplicates("id_new", "id_idx"))
     def candSh(src: DataFrame, side: String) = {
@@ -394,12 +404,7 @@ object Dedup {
       .select(col("id"), col("sh"),
         posexplode(array((0 until 4).map(b =>
           shiftright(col("sh"), 8 * b).bitwiseAND(255L)): _*)).as(Seq("band", "key")))
-    val (l, r) = capBuckets(banded, maxBucket, "simhash")
-    val lhs = l.select(col("band"), col("key"), col("id").as("id_a"), col("sh").as("sh_a"))
-    val rhs = r.select(col("band"), col("key"), col("id").as("id_b"), col("sh").as("sh_b"))
-    lhs.join(rhs, Seq("band", "key"))
-      .filter(col("id_a") < col("id_b"))
-      .dropDuplicates("id_a", "id_b")
+    capBuckets(banded, maxBucket, "simhash").selfPairs("id", "sh")
       .withColumn("hamming", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast(LongType))
       .filter(col("hamming") <= maxHamming)
       .select("id_a", "id_b", "hamming")
@@ -557,16 +562,15 @@ object Dedup {
     // against a per-doc count relation
     val inv = docs.select(col("id"), size(col("fps")).as("nfp"),
       explode(col("fps")).as("key"), lit(0).as("band"))
-    // invCk is the SAME banded checkpoint the candidate join reads —
-    // dfreq/pre below read it instead of re-materializing the lazy
-    // exploded index a second time (round-14 ADVICE: duplicate
-    // storage-memory for the full inverted index)
-    val (lhs, _, _, overCap, invCk) = capBucketsScoped(inv, maxBucket, "winnow")
-    // global rarity order (df asc, key asc — total and deterministic);
+    val cap = capBuckets(inv, maxBucket, "winnow")
+    // dfreq/pre read the SAME banded checkpoint the candidate join reads,
+    // never the lazy exploded index a second time (that would hold the
+    // full inverted index in storage memory twice).
+    // Global rarity order (df asc, key asc — total and deterministic);
     // the prefix needs only SOME fixed per-doc order for correctness,
     // rarest-first minimizes candidate volume
-    val dfreq = invCk.groupBy("key").agg(count(lit(1)).as("cnt"))
-    val pre = invCk.join(dfreq, "key")
+    val dfreq = cap.banded.groupBy("key").agg(count(lit(1)).as("cnt"))
+    val pre = cap.banded.join(dfreq, "key")
       .groupBy("id")
       .agg(sort_array(collect_list(struct(col("cnt"), col("key")))).as("s"))
       .select(col("id"),
@@ -574,7 +578,7 @@ object Dedup {
       .select(col("id").as("id_x"), col("nfp").as("nfp_x"),
         explode(slice(col("sorted"), lit(1), winnowPrefixLen(col("nfp"), threshold)))
           .as("key"))
-    val full = lhs
+    val full = cap.observed
       .select(col("id").as("id_y"), col("nfp").as("nfp_y"), col("key"))
     val cand = pre
       // Pin the candidate join's parallelism (round 15): AQE coalesces
@@ -602,7 +606,7 @@ object Dedup {
     // once. A corpus whose boilerplate makes that array large should
     // compute the net-of-cap count with a left-anti join on the
     // exploded candidate keys instead of this broadcast.
-    val capped = overCap.agg(
+    val capped = cap.overCap.agg(
       coalesce(collect_list(col("key")), array().cast("array<long>")).as("capped_keys"))
     cand
       .join(docs.select(col("id").as("id_a"), col("fps").as("fps_a")), "id_a")
@@ -760,22 +764,30 @@ object Dedup {
     Graph.symmetrized(ids, "id_a", "id_b").withColumn("deg", count(lit(1)).over(w))
   }
 
-  /** EXACT set-similarity join via prefix filtering (AllPairs/PPJoin
-    * family — Bayardo et al. 2007, Xiao et al. 2008): unlike the LSH
-    * paths this is lossless — its output is IDENTICAL to the O(n²) brute
-    * Jaccard join at the same threshold. Elements sort by global document
-    * frequency (rarest first, id tie-break); if J(x,y) ≥ τ the two sets
-    * must share an element within each side's first
-    * |x| − ⌈τ·|x|⌉ + 1 sorted elements (else the intersection fits in
-    * the suffix, < ⌈τ·|x|⌉ ≤ |x∩y|) — so candidates sharing no PREFIX
-    * element are skipped without ever being compared.
-    *
-    * Scale: the posting explode is the same order as the minhash shingle
-    * pass; the candidate self-join runs only over prefix postings, which
-    * by construction hold the globally RAREST elements — bucket sizes are
-    * the inverse-frequency tail, not the corpus. Mega-buckets (a corpus
-    * of near-identical docs) still fall under the [[capBuckets]] guard.
-    * Verification joins the two slim doc-set sides on id. */
+  /** Each doc's sorted distinct word `shingleN`-shingles (id, sh),
+    * checkpointed once: sorted at the source for the merge-walk verify
+    * (the prefix rarity order is built separately, by [[rarestPrefix]]). */
+  private def sortedSets(df: DataFrame, idCol: String, textCol: String,
+                         shingleN: Int): DataFrame =
+    Ckpt.local(df.select(col(idCol).as("id"),
+      sort_array(TextFns.wordShingles(col(textCol), shingleN)).as("sh")))
+
+  /** Prefix postings (id, key) of the prefix-filter joins: each doc's
+    * first |x| − ⌈τ·|x|⌉ + 1 elements in the global canonical order
+    * (document frequency asc, element asc — both engines total), from
+    * the (id, el) `posting` relation. */
+  private def rarestPrefix(posting: DataFrame, threshold: Double): DataFrame = {
+    val dfreq = posting.groupBy("el").agg(count(lit(1)).as("cnt"))
+    posting.join(dfreq, "el")
+      .groupBy("id")
+      .agg(sort_array(collect_list(struct(col("cnt"), col("el")))).as("s"))
+      .select(col("id"), expr("transform(s, x -> x.el)").as("sorted"))
+      .select(col("id"),
+        explode(expr(s"slice(sorted, 1, " +
+          s"cast(size(sorted) - ceil($threshold * size(sorted)) + 1 as int))"))
+          .as("key"))
+  }
+
   /** EXACT containment (asymmetric-Jaccard) join: directed pairs where
     * c(A→B) = |A∩B| / |A| ≥ `threshold` — the quote / near-superset
     * detector. Symmetric Jaccard misses a snippet embedded in a much
@@ -794,69 +806,48 @@ object Dedup {
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        shingleN: Int = 3, threshold: Double = 0.8,
                        maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    // sh sorted at the source (consumers: explode — order-free — and the
-    // merge-walk verify below; the prefix rarity order is built separately)
-    val docs = Ckpt.local(df.select(col(idCol).as("id"),
-      sort_array(TextFns.wordShingles(col(textCol), shingleN)).as("sh")))
+    val docs = sortedSets(df, idCol, textCol, shingleN)
     val posting = docs.select(col("id"), explode(col("sh")).as("el"))
-    val dfreq = posting.groupBy("el").agg(count(lit(1)).as("cnt"))
-    val ordered = posting.join(dfreq, "el")
-      .groupBy("id")
-      .agg(sort_array(collect_list(struct(col("cnt"), col("el")))).as("s"))
-      .select(col("id"), expr("transform(s, x -> x.el)").as("sorted"))
-    val pre = ordered.select(col("id"),
-        explode(expr(s"slice(sorted, 1, " +
-          s"cast(size(sorted) - ceil($threshold * size(sorted)) + 1 as int))"))
-          .as("key"))
     val full = posting.select(col("id"), col("el").as("key"))
       .withColumn("band", lit(0))
-    val (fullCapped, _) = capBuckets(full, maxBucket, "containment")
-    val cand = pre.select(col("id").as("id_a"), col("key"))
-      .join(fullCapped.select(col("id").as("id_b"), col("key")), "key")
+    val cand = rarestPrefix(posting, threshold).select(col("id").as("id_a"), col("key"))
+      .join(capBuckets(full, maxBucket, "containment").observed
+        .select(col("id").as("id_b"), col("key")), "key")
       .filter(col("id_a") =!= col("id_b"))
       .select("id_a", "id_b").distinct()
-    cand
-      .join(docs.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(docs.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .withColumn("containment", Det.roundAt(
-        graft.plans.SortedIntersectCountExpr(col("sh_a"), col("sh_b"))
-          .cast(DoubleType) / size(col("sh_a")), 6))
-      .filter(col("containment") >= threshold)
-      .select("id_a", "id_b", "containment")
-      .orderBy("id_a", "id_b")
+    verified(cand, docs, "containment", threshold)((a, b) =>
+      graft.plans.SortedIntersectCountExpr(a, b).cast(DoubleType) / size(a))
   }
 
+  /** EXACT set-similarity join via prefix filtering (AllPairs/PPJoin
+    * family — Bayardo et al. 2007, Xiao et al. 2008): unlike the LSH
+    * paths this is lossless — its output is IDENTICAL to the O(n²) brute
+    * Jaccard join at the same threshold. Elements sort by global document
+    * frequency (rarest first, id tie-break); if J(x,y) ≥ τ the two sets
+    * must share an element within each side's first
+    * |x| − ⌈τ·|x|⌉ + 1 sorted elements (else the intersection fits in
+    * the suffix, < ⌈τ·|x|⌉ ≤ |x∩y|) — so candidates sharing no PREFIX
+    * element are skipped without ever being compared.
+    *
+    * Scale: the posting explode is the same order as the minhash shingle
+    * pass; the candidate self-join runs only over prefix postings, which
+    * by construction hold the globally RAREST elements — bucket sizes are
+    * the inverse-frequency tail, not the corpus. Mega-buckets (a corpus
+    * of near-identical docs) still fall under the [[capBuckets]] guard.
+    * Verification joins the two slim doc-set sides on id. */
   def prefixJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                          shingleN: Int = 3, threshold: Double = 0.5,
                          maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    // sh sorted at the source — see containmentPairs
-    val docs = Ckpt.local(df.select(col(idCol).as("id"),
-      sort_array(TextFns.wordShingles(col(textCol), shingleN)).as("sh")))
-    val posting = docs.select(col("id"), explode(col("sh")).as("el"))
-    val dfreq = posting.groupBy("el").agg(count(lit(1)).as("cnt"))
-    // global canonical order: (df asc, element asc) — both engines total
-    val ordered = posting.join(dfreq, "el")
-      .groupBy("id")
-      .agg(sort_array(collect_list(struct(col("cnt"), col("el")))).as("s"))
-      .select(col("id"), expr("transform(s, x -> x.el)").as("sorted"))
-    val pre = ordered.select(col("id"),
-        explode(expr(s"slice(sorted, 1, " +
-          s"cast(size(sorted) - ceil($threshold * size(sorted)) + 1 as int))"))
-          .as("key"))
+    val docs = sortedSets(df, idCol, textCol, shingleN)
+    val pre = rarestPrefix(docs.select(col("id"), explode(col("sh")).as("el")), threshold)
       .withColumn("band", lit(0))
-    val (lhs, rhs) = capBuckets(pre, maxBucket, "prefix")
-    val cand = lhs.select(col("id").as("id_a"), col("key"))
-      .join(rhs.select(col("id").as("id_b"), col("key")), "key")
+    // one band: the join keys on `key` alone
+    val cap = capBuckets(pre, maxBucket, "prefix")
+    val cand = cap.observed.select(col("id").as("id_a"), col("key"))
+      .join(cap.plain.select(col("id").as("id_b"), col("key")), "key")
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
-    cand
-      .join(docs.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(docs.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .withColumn("jaccard", Det.roundAt(
-        graft.plans.SortedJaccardExpr(col("sh_a"), col("sh_b")), 6))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-      .orderBy("id_a", "id_b")
+    verified(cand, docs, "jaccard", threshold)(graft.plans.SortedJaccardExpr(_, _))
   }
 
   /** Newman modularity of the near-dup graph under a node partition

@@ -278,19 +278,15 @@ object Multimodal {
     * ~1/10⁶ of the corpus bytes at 100 TB. */
   def phashPairs(df: DataFrame, idCol: String, bytesCol: String,
                  width: Int = 9, height: Int = 8,
-                 maxHamming: Int = 10, maxBucket: Int = 100000): DataFrame = {
+                 maxHamming: Int = 10,
+                 maxBucket: Int = Dedup.DefaultMaxBucket): DataFrame = {
     val banded = df
       .select(col(idCol).as("id"), dhash64(col(bytesCol), width, height).as("ph"))
       .filter(col("ph").isNotNull)
       .select(col("id"), col("ph"),
         posexplode(array((0 until 4).map(b =>
           shiftright(col("ph"), 16 * b).bitwiseAND(65535L)): _*)).as(Seq("band", "key")))
-    val (l, r) = Dedup.capBuckets(banded, maxBucket, "phash")
-    val lhs = l.select(col("band"), col("key"), col("id").as("id_a"), col("ph").as("ph_a"))
-    val rhs = r.select(col("band"), col("key"), col("id").as("id_b"), col("ph").as("ph_b"))
-    lhs.join(rhs, Seq("band", "key"))
-      .filter(col("id_a") < col("id_b"))
-      .dropDuplicates("id_a", "id_b")
+    Dedup.capBuckets(banded, maxBucket, "phash").selfPairs("id", "ph")
       .withColumn("hamming", bit_count(col("ph_a").bitwiseXOR(col("ph_b"))).cast(LongType))
       .filter(col("hamming") <= maxHamming)
       .select("id_a", "id_b", "hamming")

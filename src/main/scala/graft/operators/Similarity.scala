@@ -341,29 +341,24 @@ object Similarity {
     * on an integer ladder (see q47) to hold bucket sizes roughly
     * constant. `bands = 0` (the default) derives [[recallBands]] from the
     * key width so the declared floor HOLDS at every rung; an explicit
-    * band count is the A/B and test hook. */
+    * band count is the A/B and test hook.
+    *
+    * `shed` is the cap-shed audit: ONE row
+    * `(n_shed_buckets, n_shed_rows)` — over-cap (band, key) buckets
+    * dropped by `maxBucket` and the DISTINCT vectors that sat in at least
+    * one of them. The declared recall floor ([[RecallFloor]] at cosine ≥
+    * [[RecallTargetCos]]) is a property of the blocking scheme and
+    * applies to a run IFF both counts are 0 — with shedding firing,
+    * recall over shed mass is arbitrary (the ladder's cap-100 row
+    * measured 0.1385 on a clustered 20k corpus; hot-cluster
+    * mass is owned by the centroid/SemDeDup paths). Callers that report
+    * pairs should report the audit beside them (q298 carries it as
+    * oracle-checked output columns); the audit is one group-by over the
+    * already-materialized slim banded checkpoint, never a second corpus
+    * pass. */
   def lshNearDupPairs(corpus: DataFrame, threshold: Double,
                       keyBits: Int = 4, bands: Int = 0,
-                      maxBucket: Int = Dedup.DefaultMaxBucket): DataFrame =
-    lshNearDupPairsScoped(corpus, threshold, keyBits, bands, maxBucket)._1
-
-  /** [[lshNearDupPairs]] plus the cap-shed audit (round 13, VERDICT r12
-    * #2): the second element is ONE row `(n_shed_buckets, n_shed_rows)` —
-    * over-cap (band, key) buckets dropped by `maxBucket` and the DISTINCT
-    * vectors that sat in at least one of them. The declared recall floor
-    * ([[RecallFloor]] at cosine ≥ [[RecallTargetCos]]) is a property of
-    * the blocking scheme and applies to a run IFF both counts are 0 —
-    * with shedding firing, recall over shed mass is arbitrary (the r12
-    * ladder honesty row measured 0.1385 at cap 100 on a clustered 20k
-    * corpus; hot-cluster mass is owned by the centroid/SemDeDup paths).
-    * Callers that report pairs should report the audit beside them
-    * (q298 carries it as oracle-checked output columns); the audit is one
-    * group-by over the already-materialized slim banded checkpoint, never
-    * a second corpus pass. */
-  def lshNearDupPairsScoped(corpus: DataFrame, threshold: Double,
-                            keyBits: Int = 4, bands: Int = 0,
-                            maxBucket: Int = Dedup.DefaultMaxBucket)
-      : (DataFrame, DataFrame) = {
+                      maxBucket: Int = Dedup.DefaultMaxBucket): Dedup.CappedPairs = {
     require(keyBits >= 1 && keyBits < PlaneStride,
       s"keyBits must be in [1, ${PlaneStride - 1}], got $keyBits")
     val b = if (bands > 0) bands else recallBands(keyBits)
@@ -378,24 +373,18 @@ object Similarity {
       graft.plans.DotQExpr(col("embedding"), col("embedding")).as("norm"))
     val banded = corpus.select(col("vec_id"),
       posexplode(array((0 until b).map(bandKey): _*)).as(Seq("band", "key")))
-    val (lhs, rhs, shedIds, shedBuckets, _) =
-      Dedup.capBucketsScoped(banded, maxBucket, "embed_lsh")
-    val audit = shedBuckets.agg(count(lit(1)).as("n_shed_buckets"))
-      .crossJoin(broadcast(shedIds.agg(count(lit(1)).as("n_shed_rows"))))
-    val cand = lhs.select(col("band"), col("key"), col("vec_id").as("id_a"))
-      .join(rhs.select(col("band"), col("key"), col("vec_id").as("id_b")), Seq("band", "key"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
+    val cap = Dedup.capBuckets(banded, maxBucket, "embed_lsh")
     def side(p: String) = base.select(
       col("vec_id").as(s"id_$p"), col("embedding").as(s"${p}_emb"),
       col("norm").as(s"${p}_norm"))
-    val pairs = cand.join(side("a"), "id_a").join(side("b"), "id_b")
+    val pairs = cap.selfPairs("vec_id").join(side("a"), "id_a").join(side("b"), "id_b")
       .withColumn("cos", pairCos(col("a_emb"), col("a_norm"), col("b_emb"), col("b_norm")))
       .filter(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"), col("cos"))
       .orderBy("id_a", "id_b")
-    (pairs, audit)
+    new Dedup.CappedPairs(pairs,
+      cap.overCap.agg(count(lit(1)).as("n_shed_buckets"))
+        .crossJoin(broadcast(cap.shed.agg(count(lit(1)).as("n_shed_rows")))))
   }
 
   /** Per-bucket centroids — the coarse-quantizer training primitive for
@@ -503,11 +492,10 @@ object Similarity {
     (assigned, rounds)
   }
 
-  /** Bucket-pruned near-dup: pairs restricted to the same coarse bucket —
-    * the n² cross join becomes Σ bucketᵢ², the production dedup shape at
-    * 100 TB (bucket = quantizer/LSH cell). */
-  /** Within-bucket exact-cosine near-dup pairs. The pair space is
-    * Σ|bucketᵢ|² — callers MUST supply a bucket whose CARDINALITY grows
+  /** Bucket-pruned exact-cosine near-dup: pairs restricted to the same
+    * coarse bucket — the n² cross join becomes Σ|bucketᵢ|², the
+    * production dedup shape at 100 TB (bucket = quantizer/LSH cell).
+    * Callers MUST supply a bucket whose CARDINALITY grows
     * with the corpus (e.g. the adaptive label#sign-sub-bucket ladder
     * q35/q112 build); a fixed-cardinality bucket makes this quadratic
     * (measured: the 10-way label bucket hit 36 s at sf3).
@@ -538,11 +526,10 @@ object Similarity {
       col("vec_id"), col("embedding"),
       graft.plans.DotQExpr(col("embedding"), col("embedding")).as("norm"),
       lit(0).as("band"), col(bucketCol).as("key"))
-    val (l, r) = Dedup.capBuckets(keyed, maxBucket, "vec_bucket")
-    def side(df: DataFrame, p: String) = df.select(
-      col("band"), col("key"), col("vec_id").as(s"${p}id"),
+    def side(p: String) = Seq(col("vec_id").as(s"${p}id"),
       col("embedding").as(s"${p}emb"), col("norm").as(s"${p}norm"))
-    side(l, "a_").join(side(r, "b_"), Seq("band", "key"))
+    // one band, so each pair meets once: no dedup
+    Dedup.capBuckets(keyed, maxBucket, "vec_bucket").bucketJoin(side("a_"), side("b_"))
       .filter(col("a_id") < col("b_id"))
       .withColumn("cos", pairCos(col("a_emb"), col("a_norm"), col("b_emb"), col("b_norm")))
       .filter(col("cos") >= threshold)
@@ -783,14 +770,10 @@ object Similarity {
           .unionByName(sb.select(col("b_id").as("vid"), col("b_emb").as("emb"),
             col("b_norm").as("nrm"), lit(false).as("is_a"),
             lit(0).as("band"), col("b_bucket").as("key")))
-        val (l, r) = Dedup.capBuckets(u, maxBucket, "margin_bucket")
-        l.filter(col("is_a"))
-          .select(col("band"), col("key"), col("vid").as("a_id"),
-            col("emb").as("a_emb"), col("nrm").as("a_norm"))
-          .join(r.filter(!col("is_a"))
-            .select(col("band"), col("key"), col("vid").as("b_id"),
-              col("emb").as("b_emb"), col("nrm").as("b_norm")),
-            Seq("band", "key"))
+        def cols(p: String) = Seq(col("vid").as(s"${p}id"),
+          col("emb").as(s"${p}emb"), col("nrm").as(s"${p}norm"))
+        Dedup.capBuckets(u, maxBucket, "margin_bucket")
+          .bucketJoin(cols("a_"), cols("b_"), Some("is_a"))
       case None    => sa.crossJoin(sb)
     }
     val scored = joined.withColumn("cos",

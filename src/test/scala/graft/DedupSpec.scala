@@ -23,11 +23,32 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhash LSH finds near and exact dups, not the unrelated doc") {
-    val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text", threshold = 0.5)
+    val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text", threshold = 0.5).pairs
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 4L))) // exact dup: jaccard 1.0
     assert(pairs.contains((1L, 2L)) && pairs.contains((2L, 4L))) // near dup
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
+  }
+
+  test("minhashLshPairs: shed audit is empty cap-idle, exact when firing") {
+    assert(Dedup.minhashLshPairs(docs, "doc_id", "text").shed.count() == 0,
+      "cap idle (default 100k): nothing shed")
+    // maxBucket = 1: EVERY (band, key) bucket holding ≥ 2 docs sheds.
+    // Recompute the shed ids independently from the band keys.
+    val banded = docs
+      .select(col("doc_id"), Dedup.minhashSignature(col("text"), 32, 3).as("sig"))
+      .select(col("doc_id"),
+        posexplode(Dedup.bandKeysFromSig(col("sig"), 32, 8)).as(Seq("band", "key")))
+    val multi = banded.groupBy("band", "key").count().filter(col("count") >= 2)
+    val expected = banded.join(multi, Seq("band", "key"))
+      .select("doc_id").distinct().as[Long].collect().toSet
+    assert(expected.contains(1L) && expected.contains(4L), // exact dups share every bucket
+      s"fixture must hold multi-doc buckets, got $expected")
+    val fired = Dedup.minhashLshPairs(docs, "doc_id", "text", maxBucket = 1)
+    val shed = fired.shed.select("id").as[Long].collect().toSet
+    assert(shed == expected, s"shed=$shed expected=$expected")
+    // with every multi-doc bucket shed there are NO candidates at all
+    assert(fired.pairs.count() == 0, "maxBucket=1 should shed every candidate pair")
   }
 
   test("identical docs get identical minhash signatures and simhash") {
@@ -49,7 +70,7 @@ class DedupSpec extends SparkSpec {
     val incoming = docs.filter($"doc_id".isin(2L, 4L))
     val cross = Dedup.crossLshPairs(index, incoming, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val full = Dedup.minhashLshPairs(docs, "doc_id", "text")
+    val full = Dedup.minhashLshPairs(docs, "doc_id", "text").pairs
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val idx = Set(1L, 3L)
     val expected = full.collect {

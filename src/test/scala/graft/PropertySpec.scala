@@ -279,10 +279,10 @@ class PropertySpec extends SparkSpec {
       .map(_.mkString(" ")), 60)
       .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     val capped = graft.operators.Dedup
-      .minhashLshPairs(docs, "doc_id", "text", maxBucket = Int.MaxValue)
+      .minhashLshPairs(docs, "doc_id", "text", maxBucket = Int.MaxValue).pairs
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val default = graft.operators.Dedup
-      .minhashLshPairs(docs, "doc_id", "text")
+      .minhashLshPairs(docs, "doc_id", "text").pairs
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(capped == default && capped.nonEmpty)
   }

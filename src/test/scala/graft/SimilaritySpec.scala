@@ -27,7 +27,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("banded candidates verify exactly: LSH pairs are a subset of brute pairs") {
     val brute  = pairs(Similarity.nearDupPairs(corpus, 0.5))
-    val banded = pairs(Similarity.lshNearDupPairs(corpus, 0.5, keyBits = 4))
+    val banded = pairs(Similarity.lshNearDupPairs(corpus, 0.5, keyBits = 4).pairs)
     assert(banded.subsetOf(brute), s"banded produced non-brute pairs: ${banded -- brute}")
     assert(brute.size >= 25, s"fixture should contain ≥25 true pairs, got ${brute.size}")
   }
@@ -36,7 +36,7 @@ class SimilaritySpec extends SparkSpec {
     // 30 planted twin pairs at cos ≈ 0.999: per-pair closed-form recall
     // 1−(1−p⁴)³ ≈ 0.9998 ≫ the declared 0.9 floor — all 30 must surface
     // (deterministic planes + corpus make this exact, not statistical).
-    val banded = pairs(Similarity.lshNearDupPairs(corpus, 0.5, keyBits = 4))
+    val banded = pairs(Similarity.lshNearDupPairs(corpus, 0.5, keyBits = 4).pairs)
     val twins = (0 until 30).map(i => (i.toLong * 2, i.toLong * 2 + 1)).toSet
     val found = twins.intersect(banded)
     assert(found.size >= 29, s"only ${found.size}/30 planted twins recalled")
@@ -47,10 +47,10 @@ class SimilaritySpec extends SparkSpec {
     // total band count and key width, so these are EXACT set inclusions
     // (what keeps the adaptive ladder rung-to-rung comparable), not
     // statistical tendencies.
-    val b2 = pairs(Similarity.lshNearDupPairs(corpus, 0.5, keyBits = 4, bands = 2))
-    val b4 = pairs(Similarity.lshNearDupPairs(corpus, 0.5, keyBits = 4, bands = 4))
+    val b2 = pairs(Similarity.lshNearDupPairs(corpus, 0.5, keyBits = 4, bands = 2).pairs)
+    val b4 = pairs(Similarity.lshNearDupPairs(corpus, 0.5, keyBits = 4, bands = 4).pairs)
     assert(b2.subsetOf(b4), s"bands=2 found pairs bands=4 missed: ${b2 -- b4}")
-    val w8 = pairs(Similarity.lshNearDupPairs(corpus, 0.5, keyBits = 8, bands = 4))
+    val w8 = pairs(Similarity.lshNearDupPairs(corpus, 0.5, keyBits = 8, bands = 4).pairs)
     assert(w8.subsetOf(b4), s"keyBits=8 found pairs keyBits=4 missed: ${w8 -- b4}")
   }
 
@@ -90,15 +90,15 @@ class SimilaritySpec extends SparkSpec {
         math.log1p(-math.pow(1.0 - math.acos(0.8) / math.Pi, 6))).toInt)
   }
 
-  test("lshNearDupPairsScoped: shed audit is zeros cap-idle, exact when firing") {
+  test("lshNearDupPairs: shed audit is zeros cap-idle, exact when firing") {
     // Cap idle (default 100k): nothing shed, and the audit says so.
-    val (_, idle) = Similarity.lshNearDupPairsScoped(corpus, 0.5, keyBits = 4)
+    val idle = Similarity.lshNearDupPairs(corpus, 0.5, keyBits = 4).shed
     val idleRow = idle.as[(Long, Long)].collect().head
     assert(idleRow == ((0L, 0L)), s"cap-idle audit should be (0,0), got $idleRow")
     // maxBucket = 1: EVERY bucket with ≥2 members sheds. Recompute the
     // expected counts independently from the banded relation itself.
-    val (pairs1, audit1) =
-      Similarity.lshNearDupPairsScoped(corpus, 0.5, keyBits = 4, maxBucket = 1)
+    val fired = Similarity.lshNearDupPairs(corpus, 0.5, keyBits = 4, maxBucket = 1)
+    val (pairs1, audit1) = (fired.pairs, fired.shed)
     val (shedBuckets, shedRows) = audit1.as[(Long, Long)].collect().head
     assert(shedBuckets > 0 && shedRows > 0,
       s"60-vector twin corpus at maxBucket=1 must shed, got ($shedBuckets, $shedRows)")
@@ -111,7 +111,7 @@ class SimilaritySpec extends SparkSpec {
     val brute = Similarity.nearDupPairs(corpus, 0.5)
       .select("id_a", "id_b", "cos").as[(Long, Long, Double)].collect()
       .map { case (a, b, c) => (a, b) -> c }.toMap
-    val banded = Similarity.lshNearDupPairs(corpus, 0.5, keyBits = 4)
+    val banded = Similarity.lshNearDupPairs(corpus, 0.5, keyBits = 4).pairs
       .select("id_a", "id_b", "cos").as[(Long, Long, Double)].collect()
     banded.foreach { case (a, b, c) =>
       assert(brute((a, b)) == c, s"cos mismatch on ($a,$b)")
