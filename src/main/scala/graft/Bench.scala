@@ -1,16 +1,58 @@
 package graft
 
-/** Driver-run benchmark: times the headline queries on
-  * SPARK_GRAFT_SF_DIR (default sf0.1) and prints ONE JSON line.
-  * Non-headline queries (including the deliberately O(n²) brute-force
-  * baselines) are excluded — they exist for oracle verification, not
-  * throughput. Each query runs one cold pass (JIT + parquet footer cache
-  * cold) then `SPARK_GRAFT_WARM_RUNS` (default 5) warm passes; the
-  * reported warm time is the MEDIAN of the warm passes — single-sample
-  * warm times on a shared box swung 9.97–48.85 s across identical trees. A failing query is never
-  * summed (a -1 sentinel would make the bench *faster* the more queries
-  * break): it is reported by name under "failed" and excluded from every
-  * total. */
+import graft.Harness.Obj
+import graft.pipeline.{ParquetSource, Pipeline}
+import org.apache.spark.graftbridge.BlockBridge
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+
+import scala.collection.mutable
+
+/** The one timing and inspection main: `graft.Bench [mode] [args...]`.
+  * It builds one session, runs a mode in it ([[run]]), writes the mode's
+  * report and stops the session. The data is `SPARK_GRAFT_SF_DIR`
+  * (default sf0.1) in every mode; the report is one JSON line on stdout,
+  * also written to the mode's file.
+  *
+  *   - no mode, `[out]`: the headline bench → `BENCH.json` (or
+  *     `SPARK_GRAFT_BENCH_OUT`; an argument wins). Non-headline queries
+  *     (including the deliberately O(n²) brute-force baselines) exist for
+  *     oracle verification, not throughput. Each query runs one cold pass
+  *     (JIT + parquet footer cache cold) then `SPARK_GRAFT_WARM_RUNS`
+  *     (default 5) warm passes; the reported warm time is the MEDIAN of
+  *     the warm passes, with a per-query cv — single-sample warm times on
+  *     a shared box swung 9.97–48.85 s across identical trees, and
+  *     same-binary totals differed by ±20%. `SPARK_GRAFT_BENCH_ONLY`
+  *     narrows the set.
+  *   - `wide [out [shardIdx numShards]]`: ONE cold pass over every
+  *     registry query (or one shard of them) → `BENCHWIDE.json`, so drift
+  *     in the ~250 non-headline queries is visible without the 6-pass
+  *     protocol; a single cold time per query is enough to flag a 2×+
+  *     drift. `tools/benchwide_sharded.sh` runs the shards in fresh JVMs
+  *     and `tools/merge_benchwide.py` merges them.
+  *   - `etl`: the reference's E1 lifecycle on its logged row counts
+  *     (listings 26,401 × the consumed columns; reviews 50,000 — see
+  *     BASELINE.md), extract → transform → sink → verify, one run, wall
+  *     seconds against the reference's 136.1 s. Printed only.
+  *   - `jobs <q1,q2> [passes=3]`: per pass, the total seconds, then one
+  *     line per job (duration, stages) and per stage (duration, tasks,
+  *     executor cpu, input / shuffle-read / shuffle-write bytes). Pass 1
+  *     is the cold pass; later passes are the warm shape the bench
+  *     medians. Text only.
+  *   - `show <q>...`: each query's full result (200 rows) and its
+  *     seconds — the local loop for checking oracle rows. Text only.
+  *   - `stream [out [p1,p2]]`: the [[StreamBench]] pipelines (all 8, or
+  *     the named ones) over the staged events feed → `STREAMBENCH.json`:
+  *     per pipeline rows, rows/s, median micro-batch ms (the engine's
+  *     `triggerExecution`), batches and peak state rows.
+  *
+  * Every mode times its items through [[Harness.passes]]. A failing query
+  * is never summed (a -1 sentinel would make the bench *faster* the more
+  * queries break): it is reported by name under "failed" and excluded
+  * from every total. Every name selection goes through [[Harness.select]],
+  * so an unknown name fails before anything runs. */
 object Bench {
   /** Expensive iterative/ML families promoted into the benched set in
     * round 7 so a perf regression there is visible: graph traversal
@@ -25,37 +67,261 @@ object Bench {
     // gate — benched so a regression in those shapes is visible
     "q158_auc", "q183_quantile_norm", "q281_repetition_filters")
 
+  /** The `wide` mode's fixed CALIBRATION PROBE (round 12): ten queries
+    * spanning the box's load axes — parquet-scan-bound (q01/q41/q11),
+    * shuffle-join (q03/q70/q80), window (q06), sessionization (q37),
+    * vector-CPU (q28), and LSH/checkpoint (q22) — run with 3 warm passes
+    * BEFORE and AFTER the cold sweep. The probe's round-over-round ratio
+    * estimates box drift INDEPENDENTLY of the 297 swept queries it is
+    * used to de-drift, and the before/after pair bounds intra-sweep
+    * drift. Names are pinned: changing this list breaks round-over-round
+    * comparability, and a name the registry lacks fails the run rather
+    * than shrink the estimator silently.
+    *
+    * Side effect, by design: the before-probe pre-warms JIT/codegen and
+    * the page cache for exactly these ten queries, so their entries in
+    * the SWEEP are warm-biased — symmetric in any two probe-carrying
+    * snapshots, but not against a pre-r12 one.
+    * `tools/diff_benchwide.py` therefore EXCLUDES the probe queries from
+    * per-query flagging. */
+  val ProbeQueries: Seq[String] = Seq(
+    "q01_groupby_agg", "q41_region_revenue", "q11_monthly_trend",
+    "q03_join_revenue", "q70_asof_join", "q80_range_join",
+    "q06_window_topn", "q37_sessionize", "q28_ann_brute",
+    "q22_minhash_lsh")
+
+  /** The words that select a mode as the first argument. */
+  val Modes: Set[String] = Set("wide", "etl", "jobs", "show", "stream")
+
+  /** A mode's JSON report and the file it is written to (None: stdout only). */
+  final case class Report(path: Option[String], body: Obj)
+
+  /** Registry queries by name, in the order named. */
+  def queries(names: Iterable[String]): Seq[Q] = Harness.select("query", Queries.all)(_.name)(names)
+
+  /** The headline set: `SPARK_GRAFT_BENCH_ONLY`'s queries, or the
+    * headline + [[Promoted]] queries, in registry order either way.
+    * Resolved here, not when the config is parsed, because the registry
+    * itself reads the config while it initializes. */
+  def headline(conf: GraftConf): Seq[Q] = conf.benchOnly.fold(
+    Queries.all.filter(q => q.headline || Promoted(q.name)))(ns => Queries.all.filter(queries(ns).toSet))
+
   def main(args: Array[String]): Unit = {
-    val conf = GraftConf.current
-    val sfDir = conf.sfDir
-    // 5 warm passes by default (3 through round 7): same-binary totals on
-    // a shared box differed by ±20%, so the bench reports the median plus
-    // a per-query cv, and a delta counts only when it exceeds that noise.
-    // The JSON's `warm_runs` records what an artifact actually used.
-    val warmRuns = conf.warmRuns
-    val headline = conf.benchOnlyQueries
-      .getOrElse(Queries.all.filter(q => q.headline || Promoted(q.name)))
+    val (mode, rest) =
+      if (args.headOption.exists(Modes)) (args.head, args.toSeq.tail) else ("headline", args.toSeq)
     // per-pass System.gc() already keeps the cleaner fed; a 2min
     // periodic GC would land mid-pass and stall the measurement
     val spark = GraftSession.local(app = "graft-bench", periodicGC = "10h")
-    def time(q: Q): Option[Double] =
-      Harness.timed(spark, "bench", q.name)(q.run(spark, sfDir).count())
-    val results = headline.map { q =>
-      val cold = time(q)
-      val warms = if (cold.isEmpty) Nil else (1 to warmRuns).flatMap(_ => time(q))
-      (q.name, cold, warms)
+    try run(spark, mode, rest).foreach { r =>
+      r.path.fold(println(Harness.json(r.body)))(Harness.emit(_, r.body))
     }
-    val failed = results.collect { case (n, c, w) if c.isEmpty || w.size < warmRuns => n }
-    val ok = results.collect { case (n, Some(c), w) if w.size == warmRuns => (n, c, w) }
-    val warm = ok.map { case (n, _, w) => n -> Harness.median(w) }
-    val cold = ok.map { case (n, c, _) => n -> c }
-    val cv = ok.map { case (n, _, w) => n -> Harness.cv(w) }
-    import Harness.Obj
-    Harness.emit(args.headOption.orElse(conf.benchOut).getOrElse("BENCH.json"), Obj(
-      "metric" -> "total", "value" -> warm.map(_._2).sum, "unit" -> "sec",
-      "queries" -> Obj(warm: _*), "cv" -> Obj(cv: _*),
-      "cold_total" -> cold.map(_._2).sum, "cold_queries" -> Obj(cold: _*),
-      "failed" -> failed, "warm_runs" -> warmRuns, "sf" -> sfDir))
-    spark.stop()
+    finally spark.stop()
+  }
+
+  /** Runs `mode` ("headline" or one of [[Modes]]) with its arguments in
+    * `spark`, which it leaves running. The text modes (`jobs`, `show`)
+    * print as they go and return None. */
+  def run(spark: SparkSession, mode: String, args: Seq[String],
+          conf: GraftConf = GraftConf.current): Option[Report] = {
+    val sf = conf.sfDir
+    def count(q: Q): Long = q.run(spark, sf).count()
+    mode match {
+      case "headline" =>
+        val runs = headline(conf).map(q => q.name -> Harness.passes(spark, "bench", q.name, conf.warmRuns)(count(q)))
+        val ok = runs.collect { case (n, Some(t)) => (n, t.head, t.tail) }
+        val warm = ok.map { case (n, _, w) => n -> Harness.median(w) }
+        val cold = ok.map { case (n, c, _) => n -> c }
+        Some(Report(args.headOption.orElse(conf.benchOut).orElse(Some("BENCH.json")), Obj(
+          "metric" -> "total", "value" -> warm.map(_._2).sum, "unit" -> "sec",
+          "queries" -> Obj(warm: _*), "cv" -> Obj(ok.map { case (n, _, w) => n -> Harness.cv(w) }: _*),
+          "cold_total" -> cold.map(_._2).sum, "cold_queries" -> Obj(cold: _*),
+          "failed" -> runs.collect { case (n, None) => n }, "warm_runs" -> conf.warmRuns, "sf" -> sf)))
+
+      case "wide" =>
+        val (shard, nShards) = if (args.length >= 3) (args(1).toInt, args(2).toInt) else (0, 1)
+        require(nShards >= 1 && shard >= 0 && shard < nShards, s"shard $shard of $nShards is not a valid slice")
+        def ms(s: Double): Double = math.rint(s * 1e3) / 1e3
+        val probes = queries(ProbeQueries)
+        // one untimed cold pass warms JIT/parquet footers, then the median of 3
+        def probe(): Seq[(String, Double)] = probes.flatMap(q =>
+          Harness.passes(spark, "benchwide", q.name, 3)(count(q)).map(t => q.name -> Harness.median(t.tail.map(ms))))
+        // shard membership is pinned by sorted-name order + contiguous
+        // slicing: same registry + same numShards → same membership, so a
+        // query's cold time is always measured in the same warm-up context
+        val sorted = Queries.all.sortBy(_.name)
+        val slice = sorted.slice((sorted.size.toLong * shard / nShards).toInt,
+          (sorted.size.toLong * (shard + 1) / nShards).toInt)
+        val before = probe()
+        val runs = slice.map(q => q.name -> Harness.passes(spark, "benchwide", q.name, 0)(count(q)).map(t => ms(t.head)))
+        val after = probe()
+        val ok = runs.collect { case (n, Some(s)) => n -> s }
+        Some(Report(Some(args.headOption.getOrElse("BENCHWIDE.json")), Obj(
+          "metric" -> "wide_cold_total_sec", "value" -> ms(ok.map(_._2).sum),
+          "unit" -> "sec", "sf" -> sf, "n_queries" -> ok.size, "shard" -> shard, "n_shards" -> nShards,
+          "failed" -> runs.collect { case (n, None) => n },
+          "probe_before" -> Obj(before: _*), "probe_after" -> Obj(after: _*), "queries" -> Obj(ok: _*))))
+
+      case "etl" =>
+        val dir = java.nio.file.Files.createTempDirectory("graft_etl_bench").toString
+        etlInputs(spark, dir)
+        val (secs, report) = once(spark, "etl", "pipeline")(
+          Pipeline.run(spark, new ParquetSource(s"$dir/in"), s"$dir/out"))
+        Some(Report(None, Obj("metric" -> "etl_e2e", "value" -> math.rint(secs * 1e3) / 1e3,
+          "unit" -> "sec", "rows" -> report.counts.values.map(_._2).sum, "baseline_sec" -> 136.1,
+          "speedup" -> math.rint(1361.0 / secs) / 10)))
+
+      case "jobs" =>
+        require(args.nonEmpty, "usage: Bench jobs <name1,name2,...> [passes]")
+        val passes = args.lift(1).fold(3)(_.toInt)
+        require(passes >= 1, s"jobs needs at least one pass, got $passes")
+        val probe = new JobProbe
+        spark.sparkContext.addSparkListener(probe)
+        try queries(args.head.split(",")).foreach { q =>
+          var n = 0L
+          Harness.passes(spark, "probejobs", q.name, passes - 1, (p, sec) => {
+            // the listener bus is async — drain before reading the records
+            BlockBridge.drainListenerBus(spark.sparkContext)
+            println(f"== pass $p: ${q.name} total ${sec.getOrElse(Double.NaN)}%.3f s (rows=$n) ==")
+            probe.printAndClear()
+          }) { n = count(q) }
+        } finally spark.sparkContext.removeSparkListener(probe)
+        None
+
+      case "show" =>
+        queries(args.flatMap(_.split(","))).foreach { q =>
+          println(s"===== ${q.name} @ $sf =====")
+          Harness.passes(spark, "show", q.name, 0)(q.run(spark, sf).show(200, truncate = false))
+            .foreach(t => println(f"  [${t.head}%.2f s]"))
+        }
+        None
+
+      case "stream" =>
+        val enabled = args.lift(1).fold(StreamBench.pipelines)(s =>
+          Harness.select("pipeline", StreamBench.pipelines)(_.name)(s.split(",")))
+        val docsDir = conf.docsDir.getOrElse(sf)
+        val slices = 16
+        val staged = StreamBench.stage(spark, sf,
+          if (enabled.exists(_.feed == "docs")) Some(docsDir) else None, slices)
+        // Throughput uses the STAGED row count, not progress numInputRows —
+        // a foreachBatch body that executes its batch more than once (e.g.
+        // an uncached merge) would otherwise inflate the input-row metric.
+        // `max_state_rows` is the peak of the engine's own
+        // stateOperators.numRowsTotal across batches — the evidence that
+        // watermark eviction keeps state at the in-horizon working set.
+        val rows = enabled.map { p =>
+          val q: StreamingQuery = once(spark, "stream", p.name)(p.runToEnd(staged))._2
+          val prog = q.recentProgress.toSeq.filter(_.numInputRows > 0)
+          val lat = prog.map(_.durationMs.get("triggerExecution").toDouble)
+          val wallSec = lat.sum / 1000.0
+          val n = staged.rows(p.feed)
+          p.name -> Obj("rows" -> n, "rows_per_sec" -> math.round(if (wallSec > 0) n / wallSec else 0.0),
+            "median_batch_ms" -> Harness.median(lat), "batches" -> prog.size,
+            "max_state_rows" -> prog.map(_.stateOperators.map(_.numRowsTotal).sum).maxOption.getOrElse(0L))
+        }
+        Some(Report(Some(args.headOption.getOrElse("STREAMBENCH.json")), Obj(
+          "metric" -> "stream_total", "unit" -> "rows_per_sec", "queries" -> Obj(rows: _*),
+          "slices" -> slices, "sf" -> sf, "docs" -> docsDir)))
+
+      case other =>
+        throw new IllegalArgumentException(s"unknown mode '$other' (modes: ${Modes.toSeq.sorted.mkString(", ")})")
+    }
+  }
+
+  /** One timed pass that must succeed: its seconds and `action`'s result. */
+  private def once[R](spark: SparkSession, tag: String, name: String)(action: => R): (Double, R) = {
+    var r: Option[R] = None
+    val t = Harness.passes(spark, tag, name, 0) { r = Some(action) }
+    (t.getOrElse(throw new IllegalStateException(s"[$tag] $name failed")).head, r.get)
+  }
+
+  private final case class St(name: String, ms: Long, tasks: Int, input: Long, sr: Long, sw: Long, cpuMs: Long)
+  private final case class Jb(start: Long, var end: Long = 0, stageIds: Seq[Int] = Nil)
+
+  /** The `jobs` mode's per-job and per-stage records of the current pass. */
+  private final class JobProbe extends SparkListener {
+    private val stages = mutable.LinkedHashMap[Int, St]()
+    private val jobs = mutable.LinkedHashMap[Int, Jb]()
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      jobs.synchronized { jobs(e.jobId) = Jb(e.time, stageIds = e.stageIds) }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      jobs.synchronized { jobs.get(e.jobId).foreach(_.end = e.time) }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = stages.synchronized {
+      val si = e.stageInfo
+      val m = si.taskMetrics
+      stages(si.stageId) = St(si.name,
+        si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L), si.numTasks,
+        m.inputMetrics.bytesRead, m.shuffleReadMetrics.totalBytesRead,
+        m.shuffleWriteMetrics.bytesWritten, m.executorCpuTime / 1000000L)
+    }
+
+    def printAndClear(): Unit = {
+      jobs.synchronized {
+        jobs.toSeq.sortBy(_._1).foreach { case (id, j) =>
+          val dur = (j.end - j.start) / 1000.0
+          println(f"  job $id%3d  $dur%7.3f s  stages=${j.stageIds.mkString(",")}")
+        }
+        jobs.clear()
+      }
+      stages.synchronized {
+        stages.toSeq.sortBy(_._1).foreach { case (id, s) =>
+          println(f"  stage $id%4d ${s.ms / 1000.0}%7.3f s tasks=${s.tasks}%3d " +
+            f"cpu=${s.cpuMs / 1000.0}%7.3f s in=${s.input}%10d sr=${s.sr}%9d sw=${s.sw}%9d  ${s.name.take(90)}")
+        }
+        stages.clear()
+      }
+    }
+  }
+
+  /** Writes the `etl` mode's synthetic inputs under `dir/in`: the
+    * reference run's row counts (listings 26,401, reviews 50,000) in the
+    * columns its transforms consume. */
+  private def etlInputs(spark: SparkSession, dir: String): Unit = {
+    val listings = spark.range(26401).select(
+      col("id"),
+      (lit(19.0) + col("id") % 100 / 200.0).as("latitude"),
+      (lit(-99.0) - col("id") % 100 / 200.0).as("longitude"),
+      concat(lit("$"), format_number(col("id") % 9000 * 1.37 + 200, 2)).as("price"),
+      date_format(date_add(lit("2015-01-01").cast("date"), (col("id") % 3000).cast("int")), "yyyy-MM-dd").as("host_since"),
+      lit("2025-10-15").as("calendar_last_scraped"),
+      lit("2025-10-15").as("last_scraped"),
+      concat(lit("""["Wifi", "Kitchen", "Cable TV", "Free parking on premises", "Heating #"""),
+        col("id") % 50, lit("\"]")).as("amenities"),
+      element_at(lit(Array("Entire home/apt", "Private room", "Shared room", "Hotel room")),
+        (col("id") % 4).cast("int") + 1).as("room_type"),
+      element_at(lit(Array("Apartment", "House", "Loft", "Entire rental unit")),
+        (col("id") % 4).cast("int") + 1).as("property_type"),
+      element_at(lit(Array("t", "f", "true", "si")), (col("id") % 4).cast("int") + 1).as("host_is_superhost"),
+      element_at(lit(Array("t", "f")), (col("id") % 2).cast("int") + 1).as("host_identity_verified"),
+      lit("t").as("has_availability"),
+      (col("id") % 8 + 1).as("accommodates"),
+      (col("id") % 4).cast("double").as("bedrooms"),
+      (col("id") % 5).cast("double").as("beds"),
+      (col("id") % 30 + 1).as("minimum_nights"),
+      lit(365L).as("maximum_nights"),
+      (col("id") % 30).as("availability_30"),
+      (col("id") % 60).as("availability_60"),
+      (col("id") % 90).as("availability_90"),
+      (col("id") % 365).as("availability_365"),
+      element_at(lit(Array("Cuauhtémoc", "Miguel Hidalgo", "Benito Juárez", "Coyoacán")),
+        (col("id") % 4).cast("int") + 1).as("neighbourhood_cleansed"),
+      concat(lit("Listing number "), col("id")).as("name"),
+      concat(lit("A lovely place to stay, description "), col("id")).as("description"))
+
+    val reviews = spark.range(50000).select(
+      col("id"),
+      (col("id") % 26401).as("listing_id"),
+      date_format(date_add(lit("2016-01-01").cast("date"), (col("id") % 3500).cast("int")), "yyyy-MM-dd").as("date"),
+      (col("id") % 40000).as("reviewer_id"),
+      concat(lit("reviewer o'name "), col("id") % 1000).as("reviewer_name"),
+      element_at(lit(Array(
+        "The flat is very nice newly renovated, excellent host and good location",
+        "terrible experience, dirty and bad",
+        "Fue algo express pero bueno, perfecto para una noche",
+        "ok stay nothing special about it",
+        "wonderful amazing perfect great good")), (col("id") % 5).cast("int") + 1).as("comments"))
+
+    listings.write.mode("overwrite").parquet(s"$dir/in/listings.parquet")
+    reviews.write.mode("overwrite").parquet(s"$dir/in/reviews.parquet")
   }
 }

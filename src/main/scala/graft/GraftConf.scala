@@ -18,23 +18,8 @@ final case class GraftConf(
     ckptDir: Option[String],
     lshKeyBits: Option[Int],
     lshMaxBucket: Int,
-    streamOnly: Set[String],
-    streambenchOut: Option[String],
     docsDir: Option[String],
-    master: Option[String]) {
-
-  /** The [[benchOnly]] subset resolved against the query registry. A typo'd
-    * name fails loudly: a silently-empty bench run would write a
-    * green-looking BENCH.json that masks the regression it was meant to
-    * measure. Resolved on demand, not at parse time, because the registry
-    * itself reads this config while it initializes. */
-  def benchOnlyQueries: Option[Seq[Q]] = benchOnly.map { names =>
-    val unknown = names -- Queries.all.map(_.name)
-    require(unknown.isEmpty,
-      s"SPARK_GRAFT_BENCH_ONLY has unknown query name(s): ${unknown.mkString(",")}")
-    Queries.all.filter(q => names(q.name))
-  }
-}
+    master: Option[String])
 
 object GraftConf {
   /** Default root of the generated datasets (`sf0.001` … `sf0.1`). */
@@ -71,8 +56,6 @@ object GraftConf {
         require(w >= 4 && w <= 15, s"SPARK_GRAFT_LSH_KEY_BITS must be in [4, 15], got $w"); w
       },
       lshMaxBucket = int("LSH_MAX_BUCKET").getOrElse(DefaultLshMaxBucket),
-      streamOnly = names("STREAM_ONLY").getOrElse(Set.empty),
-      streambenchOut = get("STREAMBENCH_OUT"),
       docsDir = get("DOCS_DIR"),
       master = env.get("SPARK_MASTER"))
   }

@@ -7,7 +7,8 @@ import graft.operators.Ckpt
 import org.apache.spark.sql.SparkSession
 
 /** What the measuring mains share: one timed pass with the between-pass
-  * hygiene, the summary statistics, and the JSON report writer. */
+  * hygiene, the pass loop, the name resolver, the summary statistics, and
+  * the JSON report writer. */
 object Harness {
   /** Times `action` and returns its wall seconds, or None when it throws
     * (logged as `[tag] name failed: ...`; a failure is never a time, or a
@@ -28,6 +29,30 @@ object Harness {
     }
     System.gc()
     r
+  }
+
+  /** One item's cold pass then `warm` warm passes, each through [[timed]]:
+    * the pass times, cold first, or None when a pass failed (no pass runs
+    * after a failed one). `after(pass, seconds)` sees each pass's outcome,
+    * outside its timing. */
+  def passes(spark: SparkSession, tag: String, name: String, warm: Int,
+             after: (Int, Option[Double]) => Unit = (_: Int, _: Option[Double]) => ())(
+      action: => Any): Option[Seq[Double]] = {
+    val ts = Iterator.range(1, warm + 2).map { p =>
+      val t = timed(spark, tag, name)(action); after(p, t); t
+    }.takeWhile(_.isDefined).flatten.toList
+    Some(ts).filter(_.size == warm + 1)
+  }
+
+  /** The `known` items that `names` pick, in the order named. An unknown
+    * name fails loudly with every known name: a typo'd selection must not
+    * run a silently smaller set and report it green. */
+  def select[A](what: String, known: Seq[A])(key: A => String)(names: Iterable[String]): Seq[A] = {
+    val byKey = known.map(a => key(a) -> a).toMap
+    val unknown = names.filterNot(byKey.contains)
+    require(unknown.isEmpty, s"unknown $what name(s): ${unknown.mkString(",")} " +
+      s"(known: ${known.map(key).sorted.mkString(",")})")
+    names.toSeq.distinct.map(byKey)
   }
 
   /** Median; 0.0 for no samples. */

@@ -6,11 +6,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 import graft.streaming.Streams
 
-/** Streaming micro-benchmark: drives the three load-bearing Structured
-  * Streaming operators over a FILE stream of the sf events table split
-  * into 16 time-ordered parquet slices (`maxFilesPerTrigger = 1` → one
-  * micro-batch per slice) and reports per-operator throughput and batch
-  * latency from the engine's own StreamingQueryProgress:
+/** The streaming micro-benchmark's pipelines, run by `graft.Bench stream`:
+  * the load-bearing Structured Streaming operators over a FILE stream of
+  * the sf events table split into 16 time-ordered parquet slices
+  * (`maxFilesPerTrigger = 1` → one micro-batch per slice):
   *
   *   - sessionize — session_window state agg (append mode, watermarked)
   *   - dedup     — dropDuplicatesWithinWatermark ingest compaction
@@ -20,21 +19,13 @@ import graft.streaming.Streams
   *   - attribution — stream-stream interval join (purchases × prior
   *     views, both sides file streams over the same slices)
   *   - heavy_hitters — sharded space-saving top-k (fixed-size state)
+  *   - dd_quantiles — per-key DDSketch quantile monitor
   *   - lsh_tag — incremental MinHash-band near-dup tagging over a
   *     documents feed (flatMapGroupsWithState bucket index; rows/s is
   *     per DOCUMENT, though each doc costs `bands` state lookups)
   *
-  * Prints ONE JSON line {"metric":"stream_total","queries":{name:
-  * {rows_per_sec, median_batch_ms, batches, rows}}} and mirrors it to
-  * the path in arg0 / SPARK_GRAFT_STREAMBENCH_OUT (default
-  * STREAMBENCH.json). Batch latency is `triggerExecution` from query
-  * progress — the engine-reported wall time of each micro-batch.
-  *
-  * Knobs: SPARK_GRAFT_STREAM_ONLY (comma-separated pipeline names —
-  * unknown names fail loudly, same contract as SPARK_GRAFT_BENCH_ONLY)
-  * and SPARK_GRAFT_DOCS_DIR (alternate documents source for lsh_tag,
-  * e.g. a Zipf-vocabulary corpus — the events pipelines are
-  * unaffected).
+  * `SPARK_GRAFT_DOCS_DIR` is an alternate documents source for lsh_tag
+  * (e.g. a Zipf-vocabulary corpus — the events pipelines are unaffected).
   *
   * [[stage]] and [[pipelines]] are shared with StreamCensusSpec, which
   * runs the same 8 pipelines and checks their plans. */
@@ -170,51 +161,4 @@ object StreamBench {
       Streams.lshBandHits(in)
         .writeStream.outputMode("append").format("noop")
         .option("checkpointLocation", s"${s.dir}/ckpt_lsh").start()))
-
-  def main(args: Array[String]): Unit = {
-    val conf = GraftConf.current
-    val sfDir = conf.sfDir
-    val only = conf.streamOnly
-    val known = pipelines.map(_.name)
-    val unknown = only.diff(known.toSet)
-    require(unknown.isEmpty,
-      s"SPARK_GRAFT_STREAM_ONLY names unknown pipelines: ${unknown.mkString(", ")} " +
-        s"(known: ${known.sorted.mkString(", ")})")
-    val enabled = pipelines.filter(p => only.isEmpty || only(p.name))
-
-    val spark = GraftSession.local(app = "graft-streambench")
-    val docsDir = conf.docsDir.getOrElse(sfDir)
-    val slices = 16
-    val staged = stage(spark, sfDir,
-      if (enabled.exists(_.feed == "docs")) Some(docsDir) else None, slices)
-
-    /** Runs each enabled pipeline to completion over the staged slices
-      * and folds its progress into (rows, rows/s, medianBatchMs, batches,
-      * maxStateRows). Throughput uses the STAGED row count, not progress
-      * numInputRows — a foreachBatch body that executes its batch more
-      * than once (e.g. an uncached merge) would otherwise inflate the
-      * input-row metric. `maxStateRows` is the peak of the engine's own
-      * stateOperators.numRowsTotal across batches — the direct evidence
-      * that watermark eviction keeps state at the in-horizon working
-      * set, not full history. */
-    val all = enabled.map { p =>
-      val q = p.runToEnd(staged)
-      val prog = q.recentProgress.toSeq.filter(_.numInputRows > 0)
-      val lat = prog.map(_.durationMs.get("triggerExecution").toDouble)
-      val wallSec = lat.sum / 1000.0
-      val maxState = prog.map(_.stateOperators.map(_.numRowsTotal).sum)
-        .maxOption.getOrElse(0L)
-      val rows = staged.rows(p.feed)
-      (p.name, rows, if (wallSec > 0) rows / wallSec else 0.0,
-        Harness.median(lat), prog.size, maxState)
-    }
-    import Harness.Obj
-    Harness.emit(args.headOption.orElse(conf.streambenchOut).getOrElse("STREAMBENCH.json"), Obj(
-      "metric" -> "stream_total", "unit" -> "rows_per_sec",
-      "queries" -> Obj(all.map { case (n, rows, rps, med, b, st) =>
-        n -> Obj("rows" -> rows, "rows_per_sec" -> math.round(rps), "median_batch_ms" -> med,
-          "batches" -> b, "max_state_rows" -> st) }: _*),
-      "slices" -> slices, "sf" -> sfDir, "docs" -> docsDir))
-    spark.stop()
-  }
 }

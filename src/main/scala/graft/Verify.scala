@@ -7,18 +7,15 @@ object Verify {
     val sfDir = args(0); val outDir = args(1)
     // optional 3rd arg: comma-separated query names — dev-only fast path
     // for checking a few queries; the driver always passes two args.
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    // a typo'd name must fail loudly, not produce an empty (green-looking) run
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(",")}")
-    }
+    val only: Option[Set[String]] = args.lift(2).map(s => Bench.queries(s.split(",")).map(_.name).toSet)
     val spark = GraftSession.local(app = "graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
+      // an engine log line belongs to the last start line above it
+      // (asynchronous scheduler events may still trail the previous query)
+      System.err.println(s"[verify] start $name")
       // each query owns its checkpoint blocks, freed before the next one —
       // 50+ queries in one session would otherwise accumulate storage
       try graft.operators.Ckpt.scope(spark) {

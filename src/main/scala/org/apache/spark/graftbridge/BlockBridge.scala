@@ -48,7 +48,7 @@ object BlockBridge {
   def pageSizeBytes(sc: SparkContext): Long = sc.env.memoryManager.pageSizeBytes
 
   /** Drain the async listener bus — lets a measurement listener
-    * ([[graft.ProbeJobs]]) read complete job/stage records right after an
+    * (`graft.Bench jobs`) read complete job/stage records right after an
     * action returns, instead of racing event delivery. Dev-probe only. */
   def drainListenerBus(sc: SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()

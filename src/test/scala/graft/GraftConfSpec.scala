@@ -22,9 +22,9 @@ class GraftConfSpec extends AnyFunSuite {
     assert(c.lshMaxBucket == GraftConf.DefaultLshMaxBucket && c.lshMaxBucket == 100000)
     assert(c.lshKeyBits.isEmpty)
     assert(c.ckptDir.isEmpty && c.docsDir.isEmpty)
-    assert(c.benchOut.isEmpty && c.streambenchOut.isEmpty && c.master.isEmpty)
-    assert(c.benchOnly.isEmpty && c.benchOnlyQueries.isEmpty)
-    assert(c.streamOnly.isEmpty)
+    assert(c.benchOut.isEmpty && c.master.isEmpty)
+    assert(c.benchOnly.isEmpty && Bench.headline(c).map(_.name) ==
+      Queries.all.filter(q => q.headline || Bench.Promoted(q.name)).map(_.name))
   }
 
   test("set knobs parse into their typed fields") {
@@ -32,24 +32,22 @@ class GraftConfSpec extends AnyFunSuite {
       "SPARK_GRAFT_CPUS" -> "8", "SPARK_GRAFT_SHUFFLE_PARTITIONS" -> "128",
       "SPARK_GRAFT_SF_DIR" -> "/data/sf1", "SPARK_GRAFT_WARM_RUNS" -> "1",
       "SPARK_GRAFT_LSH_KEY_BITS" -> " 15 ", "SPARK_GRAFT_LSH_MAX_BUCKET" -> "3",
-      "SPARK_GRAFT_CKPT_DIR" -> "/ckpt",
-      "SPARK_GRAFT_STREAM_ONLY" -> "dedup, lsh_tag,", "SPARK_MASTER" -> "spark://m:7077"))
+      "SPARK_GRAFT_CKPT_DIR" -> "/ckpt", "SPARK_MASTER" -> "spark://m:7077"))
     assert(c.cpus == 8 && c.shufflePartitions.contains(128) && c.sfDir == "/data/sf1")
     assert(c.warmRuns == 1 && c.lshKeyBits.contains(15) && c.lshMaxBucket == 3)
     assert(c.ckptDir.contains("/ckpt"))
-    assert(c.streamOnly == Set("dedup", "lsh_tag"))
     assert(c.master.contains("spark://m:7077"))
   }
 
   test("BENCH_ONLY resolves against the registry, in registry order") {
     val c = conf("BENCH_ONLY" -> "q22_minhash_lsh,q01_groupby_agg")
-    assert(c.benchOnlyQueries.get.map(_.name) ==
+    assert(Bench.headline(c).map(_.name) ==
       Queries.all.map(_.name).filter(Set("q01_groupby_agg", "q22_minhash_lsh")))
   }
 
   test("an unknown BENCH_ONLY name is rejected") {
     val e = intercept[IllegalArgumentException](
-      conf("BENCH_ONLY" -> "q01_groupby_agg,q01_groupby_agq").benchOnlyQueries)
+      Bench.headline(conf("BENCH_ONLY" -> "q01_groupby_agg,q01_groupby_agq")))
     assert(e.getMessage.contains("q01_groupby_agq"), e.getMessage)
     rejects("BENCH_ONLY" -> " , ")("SPARK_GRAFT_BENCH_ONLY names nothing")
   }

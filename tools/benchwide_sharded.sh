@@ -10,22 +10,23 @@
 # tool can qualify flags per shard instead of giving up globally.
 #
 # Shard membership is pinned: sorted query names, contiguous slices
-# (BenchWide args: shardIdx numShards). Same registry + same N -> same
+# (`graft.Bench wide` args: out shardIdx numShards). Same registry + same N -> same
 # membership, so per-query times are comparable round-over-round.
 #
 # Usage: tools/benchwide_sharded.sh [out.json] [numShards] [xmx]
-#   defaults: BENCHWIDE.json 4 48g   (env knobs pass through, e.g.
-#   SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS)
+#   defaults: BENCHWIDE.json 4 auto   (`auto` is graft_java.sh's Tier-1
+#   heap rule; env knobs pass through, e.g. SPARK_GRAFT_SF_DIR,
+#   SPARK_GRAFT_CPUS)
 set -euo pipefail
 cd "$(git rev-parse --show-toplevel)"
 OUT="${1:-BENCHWIDE.json}"
 N="${2:-4}"
-XMX="${3:-48g}"
+XMX="${3:-auto}"
 TMP="$(mktemp -d /tmp/benchwide_shards.XXXXXX)"
 
 for ((i = 0; i < N; i++)); do
   echo "benchwide_sharded: shard $i/$N (fresh JVM)..." >&2
-  tools/graft_java.sh "$XMX" graft.BenchWide "$TMP/shard$i.json" "$i" "$N" \
+  tools/graft_java.sh "$XMX" graft.Bench wide "$TMP/shard$i.json" "$i" "$N" \
     > "$TMP/shard$i.log" 2>&1 || {
       echo "benchwide_sharded: shard $i FAILED — see $TMP/shard$i.log" >&2
       exit 1

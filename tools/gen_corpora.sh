@@ -29,7 +29,8 @@ set -euo pipefail
 cd "$(git rev-parse --show-toplevel)"
 SF="${1:?usage: gen_corpora.sh <sf> [outRoot]}"
 ROOT="${2:-/tmp}"
-XMX="${GEN_XMX:-48g}"
+# heap: GEN_XMX, else graft_java.sh's `auto` (Tier-1 rule: half the box, 2-8 GiB)
+XMX="${GEN_XMX:-auto}"
 
 run() { tools/graft_java.sh "$XMX" graft.GenData "$@"; }
 

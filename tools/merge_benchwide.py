@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Merge per-shard graft.BenchWide outputs into one BENCHWIDE.json.
+"""Merge per-shard `graft.Bench wide` outputs into one BENCHWIDE.json.
 
 Part of the sharded wide-sweep protocol (round 14, VERDICT r13 #4; see
 tools/benchwide_sharded.sh). The merged snapshot keeps the single-file
